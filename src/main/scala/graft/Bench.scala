@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * query after a warm-up pass, INTERLEAVED round-robin across queries,
   * report the MEDIAN per query (plus the min for the optimistic
   * floor). Failures never poison the total — a query that throws is
-  * excluded and counted in "failed".
+  * excluded and counted in "failed", and every failure's cause is
+  * reported under "errors".
   */
 object Bench {
 
@@ -147,6 +148,27 @@ object Bench {
   private def fmt(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
+  /** A JSON string literal: quotes, backslashes and control characters
+    * escaped.
+    */
+  private def jstr(v: String): String = {
+    val b = new StringBuilder("\"")
+    v.foreach {
+      case '"'  => b.append("\\\"")
+      case '\\' => b.append("\\\\")
+      case c if c < ' ' => b.append("\\u%04x".format(c.toInt))
+      case c => b.append(c)
+    }
+    b.append('"').toString
+  }
+
+  /** "<exception class>: <first message line>", the form a failure is
+    * reported in.
+    */
+  private def describe(e: Throwable): String =
+    e.getClass.getName + ": " +
+      Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -160,10 +182,19 @@ object Bench {
     SparkEntry.entry(spark).count()
 
     val bench = Headline.flatMap(n => SparkEntry.queries.get(n).map(n -> _))
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // every failed execution, per query: its count and the first cause
+    val failures = scala.collection.mutable.LinkedHashMap.empty[String, (Int, String)]
+    def once(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       val t = try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-              catch { case _: Throwable => -1.0 }
+              catch { case e: Throwable =>
+                val why = describe(e)
+                System.err.println(s"[bench] $name failed: $why")
+                val (n, first) = failures.getOrElse(name, (0, why))
+                failures(name) = (n + 1, first)
+                -1.0
+              }
       // Queries that .cache() intermediates (dedup/sim families) leave
       // them resident forever; 24 queries x 6 runs fills the storage
       // pool and late queries pay eviction + GC (BENCH_r05:
@@ -178,8 +209,8 @@ object Bench {
     }
     // Warm-up pass: pays codegen/JIT and page cache per query, and
     // discovers failures (a query that throws is excluded up front —
-    // no point timing it 5x).
-    val warm = bench.map { case (name, fn) => name -> once(fn) }
+    // no point timing it 5x — and reported with its cause).
+    val warm = bench.map { case (name, fn) => name -> once(name, fn) }
     val failed0 = warm.collect { case (n, t) if t < 0 => n }.toSet
     val live = bench.filterNot { case (n, _) => failed0(n) }
     // Timed passes are INTERLEAVED round-robin: run every query once,
@@ -191,7 +222,7 @@ object Bench {
     val acc = scala.collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
     for (_ <- 1 to Runs; (name, fn) <- live) {
-      val t = once(fn)
+      val t = once(name, fn)
       if (t >= 0) acc(name) = acc(name) :+ t
     }
     // Residual guard: a query still med/min-noisy after interleaving
@@ -203,7 +234,7 @@ object Bench {
       System.err.println("[bench] noisy after interleave, extra passes: " +
         noisy.map(_._1).mkString(","))
       for (_ <- 1 to 2; (name, fn) <- noisy) {
-        val t = once(fn)
+        val t = once(name, fn)
         if (t >= 0) acc(name) = acc(name) :+ t
       }
     }
@@ -222,7 +253,7 @@ object Bench {
     if (runNoise > NoiseGate) {
       System.err.println(f"[bench] run noise $runNoise%.2f > $NoiseGate: one more interleaved pass")
       for ((name, fn) <- live) {
-        val t = once(fn)
+        val t = once(name, fn)
         if (t >= 0) acc(name) = acc(name) :+ t
       }
     }
@@ -245,14 +276,27 @@ object Bench {
     // creep is attributable per query. A deliberate ladder extension
     // must bump the floor entry in the same commit.
     val floorPath = sys.env.getOrElse("SPARK_GRAFT_FLOOR", "BENCH_FLOOR.json")
-    val floor: Map[String, Double] = try {
+    // a missing, unreadable or empty floor file would silently turn
+    // floor_regressed off: it is flagged in both output lines instead
+    val (floor, floorError) = try {
       val body = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(floorPath)),
         java.nio.charset.StandardCharsets.UTF_8)
       // flat {"name": seconds} pairs inside the "queries" object
       val m = """"([A-Za-z0-9_]+)"\s*:\s*([0-9.]+)""".r
-      m.findAllMatchIn(body).map(x => x.group(1) -> x.group(2).toDouble).toMap
-    } catch { case _: Throwable => Map.empty }
+      val f = m.findAllMatchIn(body).map(x => x.group(1) -> x.group(2).toDouble).toMap
+      (f, if (f.isEmpty) Some(s"$floorPath holds no floor entries") else None)
+    } catch { case e: Throwable => (Map.empty[String, Double], Some(describe(e))) }
+    floorError.foreach(why => System.err.println(
+      s"[bench] NO FLOOR: $why - floor_regressed is not checked"))
+    val floorFields = s""""floor_file":${jstr(floorPath)},""" +
+      s""""floor_missing":${floorError.nonEmpty},""" +
+      floorError.fold("")(why => s""""floor_error":${jstr(why)},""")
+    // one entry per query that failed at least once: how many of its
+    // executions failed, and the first cause
+    val errorsJson = failures.map { case (n, (k, why)) =>
+      s"""{"query":${jstr(n)},"failed_runs":$k,"error":${jstr(why.take(200))}}"""
+    }.mkString("[", ",", "]")
     val floorRatios = ok.flatMap { case (k, rs) =>
       floor.get(k).filter(_ > 0).map(f => k -> median(rs) / f) }
     val floorJson = floorRatios
@@ -263,8 +307,10 @@ object Bench {
       s""""queries":${jmap(median)},"queries_min":${jmap(_.min)},""" +
       s""""failed":${failed.size},"failed_queries":$failedJson,""" +
       s""""noise":${fmt(noise)},"noisy":${noise > NoiseGate},""" +
+      s""""errors":$errorsJson,""" +
       s""""floor_ratio":$floorJson,"floor_regressed":$regressedJson,""" +
-      s""""sf":"$sfDir","runs_per_query":$Runs,"agg":"median",""" +
+      floorFields +
+      s""""sf":${jstr(sfDir)},"runs_per_query":$Runs,"agg":"median",""" +
       s""""headline_only":true,"n_queries":${bench.size}}"""
     println(fullLine)
     // The full line above (per-query seconds + per-query floor ratios,
@@ -286,10 +332,12 @@ object Bench {
     }
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
       s""""failed":${failed.size},"failed_queries":$failedJson,""" +
+      s""""errors":$errorsJson,""" +
       s""""noise":${fmt(noise)},"noisy":${noise > NoiseGate},""" +
-      s""""floor_regressed":$regressedJson,"sf":"$sfDir",""" +
+      s""""floor_regressed":$regressedJson,""" + floorFields +
+      s""""sf":${jstr(sfDir)},""" +
       s""""runs_per_query":$Runs,"agg":"median","headline_only":true,""" +
-      s""""n_queries":${bench.size},"detail":"$detailPath"}""")
+      s""""n_queries":${bench.size},"detail":${jstr(detailPath)}}""")
     spark.stop()
   }
 }

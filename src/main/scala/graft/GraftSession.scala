@@ -44,6 +44,17 @@ object GraftSession {
     .config("spark.sql.parquet.compression.codec",
       sys.env.getOrElse("SPARK_GRAFT_PARQUET_CODEC", "snappy"))
     .config("spark.ui.enabled", "false")
+    // Janino-compiled classes are cached by generated source, and graft
+    // re-runs the same scan/join/aggregate/sort shapes: one pass of
+    // graft.Bench's headline keys at sf0.01 generates ~1275 distinct
+    // classes, perfbench's analytics_read ~220. Spark's default of 100
+    // entries evicts each class before its next use, so every warm pass
+    // recompiled nearly all of them (~37% of executor-task time in
+    // analytics_read). 2000 holds the largest measured working set with
+    // headroom. Static and JVM-wide: CodeGenerator reads it once, when
+    // its cache is first built, so it applies only when this builder
+    // creates the JVM's first session; an earlier session keeps 100.
+    .config("spark.sql.codegen.cache.maxEntries", "2000")
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = tune(

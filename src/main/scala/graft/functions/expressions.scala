@@ -539,6 +539,8 @@ case class DotProductExpr(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
+  // NULL on a length mismatch or a null element even for non-null inputs
+  override def nullable: Boolean = true
   override def prettyName: String = "dot_product"
 
   def compute(a: ArrayData, b: ArrayData): java.lang.Double = {
@@ -688,13 +690,18 @@ case class NearestCentroidExpr(child: Expression,
   *             0.0, +)
   * (per corpus×query row in the PQ compressed scan). Same 1-based
   * element_at addressing, same left-to-right accumulation; mirrors the
-  * HOF's null semantics (length mismatch, null entry or an
-  * out-of-range code yields NULL).
+  * HOF's null semantics for a length mismatch, a null entry or a code
+  * past the end of its table (all yield NULL). A negative code also
+  * yields NULL here, where the HOF differs: code -1 addresses index 0,
+  * which throws, and a lower code indexes from the end of the table.
   */
 case class AdcScoreExpr(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
+  // NULL on a length mismatch, a null entry or an out-of-range code
+  // even for non-null inputs
+  override def nullable: Boolean = true
   override def prettyName: String = "adc_score"
 
   def compute(tables: ArrayData, codes: ArrayData): java.lang.Double = {

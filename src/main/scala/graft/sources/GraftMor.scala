@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, max, regexp_replace}
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** A42/A43: MERGE-ON-READ mutation via DELETION VECTORS — the other
   * half of the mutation cost spectrum from the copy-on-write merges
@@ -598,32 +600,15 @@ object GraftMor {
     // mask the other's appends at its own number
     val epoch = allocateEpoch(s, tablePath, eqPath)
     val seq = epoch.toLong + 1L
-    // the new versions STAGE in a batch-private dir and move in by
-    // name (the A52 staging rule): the batch's file set is known
-    // EXACTLY — a before/after listing diff could capture (and
-    // mis-sequence) a concurrent writer's simultaneous appends. They
-    // LAND AND SEQUENCE BEFORE the tombstone epoch writes, so a crash
-    // mid-commit serves transient duplicates (old + new versions),
-    // never a pure delete with the new versions stranded.
-    val stage = new org.apache.hadoop.fs.Path(
-      s"$tablePath/_staging/eqbatch_$epoch")
+    // the new versions stage and move in by name (the A52 staging
+    // rule, see `moveIn`). They LAND AND SEQUENCE BEFORE the tombstone
+    // epoch writes, so a crash mid-commit serves transient duplicates
+    // (old + new versions), never a pure delete with the new versions
+    // stranded.
+    val stage = stageDir(tablePath, s"eqbatch_$epoch")
     updates.select(targetCols.map(col): _*)
       .write.mode(SaveMode.Overwrite).parquet(stage.toString)
-    val f = fs(s, tablePath)
-    val landed = f.listStatus(stage).toSeq.map(_.getPath)
-      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
-      .map { src =>
-        val dst = new org.apache.hadoop.fs.Path(tablePath, src.getName)
-        if (!f.rename(src, dst))
-          throw new IllegalStateException(
-            s"[GRAFT] morUpsertEq move-in failed: rename($src -> $dst) " +
-              "returned false")
-        normPathStr(dst.toUri.getPath)
-      }
-    f.delete(stage, true)
-    val shell = stage.getParent
-    if (f.exists(shell) && f.listStatus(shell).isEmpty)
-      f.delete(shell, false)
+    val landed = moveIn(fs(s, tablePath), tablePath, stage, "morUpsertEq")
     if (landed.nonEmpty) {
       import s.implicits._
       landed.toDF("file_norm")
@@ -644,7 +629,9 @@ object GraftMor {
     * never see — and kill — the rows it is inserting. As in SQL
     * MERGE, `updates` carries at most one row per key. Repeated
     * upserts of the same key chain naturally: the next batch's
-    * semi-join tombstones the previously-appended version too.
+    * semi-join tombstones the previously-appended version too. With a
+    * live equality sidecar the appended files are sequenced (A45), so
+    * an older `morUpsertEq` tombstone of the key cannot mask them.
     */
   def morUpsert(s: SparkSession, tablePath: String, updates: DataFrame,
       keyCols: Seq[String]): Unit = {
@@ -658,8 +645,55 @@ object GraftMor {
     val targetCols = evolveForBatch(s, tablePath, sc, updates, "morUpsert")
     writeEpoch(s, tablePath, currentMatches(s, tablePath, sc,
       _.join(broadcast(keys), keyCols, "left_semi")))
-    updates.select(targetCols.map(col): _*)
-      .write.mode(SaveMode.Append).parquet(tablePath)
+    val rows = updates.select(targetCols.map(col): _*)
+    if (sc.eq.isEmpty) rows.write.mode(SaveMode.Append).parquet(tablePath)
+    else {
+      // a live equality sidecar masks by file sequence, and a plain
+      // append reads as base sequence 0 — an older morUpsertEq of the
+      // same key would mask the new version. Stage the batch so its
+      // exact file set is known, then sequence it above every existing
+      // finite tombstone (erases still outrank it).
+      val stage = stageDir(tablePath, s"upsert_${java.util.UUID.randomUUID()}")
+      rows.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+      sequenceAppendedFiles(s, tablePath,
+        moveIn(fs(s, tablePath), tablePath, stage, "morUpsert"))
+    }
+  }
+
+  /** A batch-private staging dir `<table>/_staging/<batch>` — the
+    * `_` prefix hides it from every read path and data-file listing.
+    */
+  private def stageDir(tablePath: String, batch: String) =
+    new org.apache.hadoop.fs.Path(s"$tablePath/_staging/$batch")
+
+  /** The A52 staging rule's move-in: rename every visible file written
+    * under `stage` into the table, keeping its path below the stage
+    * (hive partition dirs), then drop the stage and its `_staging`
+    * shell when empty. The batch's file set is known EXACTLY — a
+    * before/after listing diff could capture (and mis-sequence) a
+    * concurrent writer's simultaneous appends. Files `keep` rejects
+    * are discarded with the stage. Returns the landed files'
+    * scheme-less paths.
+    */
+  private def moveIn(f: org.apache.hadoop.fs.FileSystem, tablePath: String,
+      stage: org.apache.hadoop.fs.Path, op: String,
+      keep: org.apache.hadoop.fs.Path => Boolean = _ => true): Seq[String] = {
+    val root = stage.toUri.getPath
+    val landed = GraftIO.walkVisibleFiles(f, stage).map(_.getPath).filter(keep)
+      .map { src =>
+        val rel = src.toUri.getPath.stripPrefix(root).stripPrefix("/")
+        val dst = new org.apache.hadoop.fs.Path(tablePath, rel)
+        if (rel.contains('/')) f.mkdirs(dst.getParent)
+        if (!f.rename(src, dst))
+          throw new IllegalStateException(
+            s"[GRAFT] $op move-in failed: rename($src -> $dst) returned false")
+        normPathStr(dst.toUri.getPath)
+      }
+    f.delete(stage, true)
+    val shell = stage.getParent
+    if (f.exists(shell) && f.listStatus(shell).isEmpty)
+      f.delete(shell, false)
+    landed
   }
 
   /** The merge-on-read SCAN: data files anti-joined against the
@@ -781,20 +815,27 @@ object GraftMor {
     * the only one behind the A24 lease gate. Pass `partitionCols`
     * for a hive-partitioned table so survivors re-land in their
     * directories. Idempotent: no vector → no-op.
+    *
+    * Survivors are written to a batch-private `_staging/` dir BEFORE
+    * anything live is touched (the A52 staging rule), so a failed
+    * write leaves the table, its data files and its sidecars as they
+    * were; only then are the affected files deleted, the sidecars
+    * cleared and the staged files moved in by rename. A crash in that
+    * tail leaves the survivors under `_staging/compact_*`, never only
+    * in memory.
     */
   def morCompact(s: SparkSession, tablePath: String,
       partitionCols: Seq[String] = Nil): Unit = {
     GraftLease.failIfLeased(s, tablePath, "morCompact")
     val sc = sidecars(s, tablePath)
-    val dvOpt = dvFrame(s, sc).map(_.localCheckpoint(true))
+    val dvOpt = dvFrame(s, sc)
     // fold the eq sidecar to one max-sequence row per key up front —
     // that is the whole mask (sequences accumulate monotonically)
     val eqOpt = eqFrame(s, sc).map { eq =>
       val keyColsEq = eq.columns.filterNot(_ == "seq").toSeq
       eq.groupBy(keyColsEq.map(col): _*).agg(max("seq").as("__max_seq"))
-        .localCheckpoint(true)
     }
-    val seqOpt = seqFrame(s, sc).map(_.localCheckpoint(true))
+    val seqOpt = seqFrame(s, sc)
     if (dvOpt.isEmpty && eqOpt.isEmpty) return
     // monotone epoch counters survive the clear: a consumer that
     // stored "applied = N" can never later see a fresh epoch < N
@@ -815,72 +856,72 @@ object GraftMor {
       keyColsEq.map(k => seqd(k) === tomb(k)).reduce(_ && _) &&
         seqd("__file_seq") < tomb("__max_seq")
     }
-    try {
-      // affected files = the position vector's files plus every file
-      // holding an equality-MASKED row (sequence rule applied). The eq
-      // half is the DEFERRED discovery scan A44 skipped at write time —
-      // key columns only, paid exactly once, here.
-      val dvFiles = dvOpt.toSeq.flatMap(
-        _.select("dv_file").distinct().collect().map(_.getString(0)))
-      val eqFiles = eqOpt.toSeq.flatMap { tomb =>
-        val seqd = withFileSeq(readTable(s, tablePath, sc)
-          .withColumn("dv_file", normPath(col("_metadata.file_path")))
-          .withColumn("__fn", normPath(col("_metadata.file_path"))))
-        seqd.join(gate(tomb, sc.eqBytes, MaxBroadcastSidecarBytes),
-            maskCond(seqd, tomb), "left_semi")
-          .select("dv_file").distinct().collect().map(_.getString(0))
-      }
-      val affected = (dvFiles ++ eqFiles).distinct
-      val f = fs(s, tablePath)
-      if (affected.nonEmpty) {
-        // basePath keeps hive partition columns attached when the
-        // affected FILES are addressed directly
-        val scanned = readFilesWithBase(s, tablePath, affected, sc.schemaDdl)
-          .withColumn("dv_file", normPath(col("_metadata.file_path")))
-          .withColumn("dv_pos", col("_metadata.row_index"))
-          .withColumn("__fn", normPath(col("_metadata.file_path")))
-        val afterDv = dvOpt match {
-          case None     => scanned
-          case Some(dv) => scanned.join(
-            gate(dv, sc.dvBytes, MaxBroadcastSidecarBytes),
-            Seq("dv_file", "dv_pos"), "left_anti")
-        }
-        val masked = eqOpt match {
-          case None       => afterDv
-          case Some(tomb) =>
-            val seqd = withFileSeq(afterDv)
-            seqd.join(gate(tomb, sc.eqBytes, MaxBroadcastSidecarBytes),
-              maskCond(seqd, tomb), "left_anti")
-        }
-        // re-landed files keep the table's own column order (the dv
-        // using-join hoisted its keys to the front)
-        val dataCols = scanned.columns
-          .filterNot(Set("dv_file", "dv_pos", "__fn", "file_norm", "file_seq",
-            "__file_seq"))
-        val survivors = masked.select(dataCols.map(col): _*)
-          .localCheckpoint(true)
-        try {
-          affected.foreach { file =>
-            if (!f.delete(new org.apache.hadoop.fs.Path(file), false))
-              throw new IllegalStateException(
-                s"[GRAFT] morCompact failed to remove $file")
-          }
-          clearSidecars(f, tablePath, dvOpt.nonEmpty, eqOpt.nonEmpty,
-            seqOpt.nonEmpty, nextDv, nextEq)
-          if (!survivors.isEmpty) {
-            val w = survivors.write.mode(SaveMode.Append)
-            if (partitionCols.nonEmpty)
-              w.partitionBy(partitionCols: _*).parquet(tablePath)
-            else w.parquet(tablePath)
-          }
-        } finally graft.GraftSession.releaseCheckpoint(survivors)
-      } else clearSidecars(f, tablePath, dvOpt.nonEmpty, eqOpt.nonEmpty,
-        seqOpt.nonEmpty, nextDv, nextEq)
-    } finally {
-      dvOpt.foreach(graft.GraftSession.releaseCheckpoint)
-      eqOpt.foreach(graft.GraftSession.releaseCheckpoint)
-      seqOpt.foreach(graft.GraftSession.releaseCheckpoint)
+    // affected files = the position vector's files plus every file
+    // holding an equality-MASKED row (sequence rule applied). The eq
+    // half is the DEFERRED discovery scan A44 skipped at write time —
+    // key columns only, paid exactly once, here.
+    val dvFiles = dvOpt.toSeq.flatMap(
+      _.select("dv_file").distinct().collect().map(_.getString(0)))
+    val eqFiles = eqOpt.toSeq.flatMap { tomb =>
+      val seqd = withFileSeq(readTable(s, tablePath, sc)
+        .withColumn("dv_file", normPath(col("_metadata.file_path")))
+        .withColumn("__fn", normPath(col("_metadata.file_path"))))
+      seqd.join(gate(tomb, sc.eqBytes, MaxBroadcastSidecarBytes),
+          maskCond(seqd, tomb), "left_semi")
+        .select("dv_file").distinct().collect().map(_.getString(0))
     }
+    val affected = (dvFiles ++ eqFiles).distinct
+    val f = fs(s, tablePath)
+    def clear(): Unit = clearSidecars(f, tablePath, dvOpt.nonEmpty,
+      eqOpt.nonEmpty, seqOpt.nonEmpty, nextDv, nextEq)
+    if (affected.isEmpty) { clear(); return }
+    // basePath keeps hive partition columns attached when the affected
+    // FILES are addressed directly
+    val scanned = readFilesWithBase(s, tablePath, affected, sc.schemaDdl)
+      .withColumn("dv_file", normPath(col("_metadata.file_path")))
+      .withColumn("dv_pos", col("_metadata.row_index"))
+      .withColumn("__fn", normPath(col("_metadata.file_path")))
+    val afterDv = dvOpt match {
+      case None     => scanned
+      case Some(dv) => scanned.join(
+        gate(dv, sc.dvBytes, MaxBroadcastSidecarBytes),
+        Seq("dv_file", "dv_pos"), "left_anti")
+    }
+    val masked = eqOpt match {
+      case None       => afterDv
+      case Some(tomb) =>
+        val seqd = withFileSeq(afterDv)
+        seqd.join(gate(tomb, sc.eqBytes, MaxBroadcastSidecarBytes),
+          maskCond(seqd, tomb), "left_anti")
+    }
+    // re-landed files keep the table's own column order (the dv
+    // using-join hoisted its keys to the front)
+    val dataCols = scanned.columns
+      .filterNot(Set("dv_file", "dv_pos", "__fn", "file_norm", "file_seq",
+        "__file_seq"))
+    val stage = stageDir(tablePath, s"compact_${java.util.UUID.randomUUID()}")
+    try {
+      val w = masked.select(dataCols.map(col): _*).write.mode(SaveMode.Overwrite)
+      if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*).parquet(stage.toString)
+      else w.parquet(stage.toString)
+    } catch { case NonFatal(e) =>
+      // nothing live was touched: drop the partial stage and rethrow
+      try f.delete(stage, true) catch { case NonFatal(_) => }
+      throw e
+    }
+    affected.foreach { file =>
+      if (!f.delete(new org.apache.hadoop.fs.Path(file), false))
+        throw new IllegalStateException(
+          s"[GRAFT] morCompact failed to remove $file")
+    }
+    clear()
+    // Spark's first write task keeps a row-less file for the schema
+    // even when it has no rows; its footer says so, and it is dropped
+    // instead of landing
+    val conf = s.sessionState.newHadoopConf()
+    moveIn(f, tablePath, stage, "morCompact", p =>
+      graft.sources.v2.GraftV2.withReader(p.toString, conf)(
+        _.getFooter.getBlocks.asScala.exists(_.getRowCount > 0)))
   }
 
   private[sources] def toMicros(t: java.time.LocalDateTime): Long =

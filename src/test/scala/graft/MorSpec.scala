@@ -786,6 +786,58 @@ class MorSpec extends SparkSpecBase {
     assert(sig(spark.sql("SELECT k, p, v FROM graftmorpart.db.t_part")) === expect)
   }
 
+  test("A43xA45: a position upsert after an equality upsert of the same key serves the new version on every read surface") {
+    import spark.implicits._
+    val wh = graft.sources.GraftSink.scratchDir + "/mor_spec_mix_wh"
+    val path = s"$wh/db/t_mix.parquet"
+    hfs(wh).delete(new org.apache.hadoop.fs.Path(wh), true)
+    Seq((1L, 10.0), (2L, 20.0)).toDF("k", "v").coalesce(1).write.parquet(path)
+    GraftMor.morUpsertEq(spark, path, Seq((1L, 11.0)).toDF("k", "v"), Seq("k"))
+    GraftMor.morUpsert(spark, path, Seq((1L, 12.0)).toDF("k", "v"), Seq("k"))
+    def sig(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "v").orderBy("k").collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val expect = Seq((1L, 12.0), (2L, 20.0))
+    assert(sig(GraftMor.morRead(spark, path)) === expect, "morRead leg")
+    assert(sig(new graft.sources.GraftCatalog(spark, s"$wh/db").table("t_mix")) === expect,
+      "catalog leg")
+    graft.sources.v2.GraftTableCatalog.register(spark, wh, "graftmormix")
+    spark.sql("REFRESH TABLE graftmormix.db.t_mix")
+    assert(sig(spark.sql("SELECT k, v FROM graftmormix.db.t_mix")) === expect, "SQL leg")
+    assert(!hfs(path).exists(new org.apache.hadoop.fs.Path(s"$path/_staging")),
+      "the staged batch must move in completely")
+    // compaction folds the mix to the same content
+    GraftMor.morCompact(spark, path)
+    assert(sig(spark.read.parquet(path)) === expect)
+  }
+
+  test("A42: a compaction whose staged survivor write fails throws and changes nothing") {
+    import spark.implicits._
+    val path = freshTable("stagefail")
+    GraftMor.morDelete(spark, path, col("o_orderkey") % 10 === 3)
+    val victim = spark.read.parquet(path).select("o_custkey").head().getLong(0)
+    GraftMor.morErase(spark, path, Seq(victim).toDF("o_custkey"), Seq("o_custkey"))
+    def content() = GraftMor.morRead(spark, path).orderBy("o_orderkey")
+      .collect().map(_.toSeq).toSeq
+    val files = dataSig(path)
+    val side = GraftMor.sidecars(spark, path)
+    val served = content()
+    // a plain file where the staging dir goes makes the survivor write fail
+    val blocker = new org.apache.hadoop.fs.Path(s"$path/_staging")
+    hfs(path).create(blocker, false).close()
+    intercept[Exception](GraftMor.morCompact(spark, path))
+    assert(dataSig(path) === files, "no data file may change")
+    assert(GraftMor.sidecars(spark, path) === side, "no sidecar may change")
+    assert(content() === served)
+    // with the blocker gone the same compaction folds
+    hfs(path).delete(blocker, false)
+    GraftMor.morCompact(spark, path)
+    assert(!GraftMor.sidecars(spark, path).any)
+    assert(!hfs(path).exists(blocker), "the staging shell must be cleaned up")
+    assert(spark.read.parquet(path).orderBy("o_orderkey").collect().map(_.toSeq).toSeq
+      === served)
+  }
+
   test("A49/A50: the consumer folds only the COMMITTED tip; epoch counters stay monotone across a zero-rewrite compaction") {
     import spark.implicits._
     val root = graft.sources.GraftSink.scratchDir + "/mor_spec_feedfix"

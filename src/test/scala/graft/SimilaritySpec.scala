@@ -316,6 +316,37 @@ class SimilaritySpec extends SparkSpecBase {
     assert(adcN === adcH)
   }
 
+  test("dot_product and adc_score return NULL for non-null mismatched inputs in generated code") {
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.graft.Bridge
+    // no interpreted fallback: a NULL the generated code cannot express
+    // fails the query instead of silently switching paths
+    val confs = Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      def adc(t: org.apache.spark.sql.Column, c: org.apache.spark.sql.Column) =
+        Bridge.column(graft.functions.AdcScoreExpr(Bridge.expression(t), Bridge.expression(c)))
+      val in = spark.range(3).select(
+        array(col("id").cast("double"), lit(1.0)).as("a"),
+        array(col("id").cast("double")).as("b"),
+        array(array(lit(0.5), lit(1.5))).as("t"),
+        array(col("id").cast("int"), lit(0)).as("c_len"),
+        array((col("id") + 2).cast("int")).as("c_out"))
+      assert(in.schema.forall(!_.nullable), "the inputs must be non-null")
+      val out = in.select(VectorFns.dot(col("a"), col("b")).as("dot"),
+        adc(col("t"), col("c_len")).as("adc_len"),
+        adc(col("t"), col("c_out")).as("adc_range"))
+      assert(out.schema.forall(_.nullable))
+      val rows = out.collect()
+      assert(allPlanNodes(out.queryExecution.executedPlan)
+        .exists(_.isInstanceOf[WholeStageCodegenExec]))
+      assert(rows.length === 3)
+      rows.foreach(r => assert((0 until 3).forall(r.isNullAt), s"expected NULLs, got $r"))
+    } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   test("label centroids are exact integers and invariant to partition layout") {
     val base = Similarity.labelCentroids(spark, sfDir).collect()
     assert(base.length === 10) // labels 0-9
