@@ -151,7 +151,7 @@ object Bench {
   /** A JSON string literal: quotes, backslashes and control characters
     * escaped.
     */
-  private def jstr(v: String): String = {
+  private[graft] def jstr(v: String): String = {
     val b = new StringBuilder("\"")
     v.foreach {
       case '"'  => b.append("\\\"")
@@ -165,7 +165,7 @@ object Bench {
   /** "<exception class>: <first message line>", the form a failure is
     * reported in.
     */
-  private def describe(e: Throwable): String =
+  private[graft] def describe(e: Throwable): String =
     e.getClass.getName + ": " +
       Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
 

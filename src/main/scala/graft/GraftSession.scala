@@ -73,21 +73,6 @@ object GraftSession {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     graft.sources.GraftIO.readParquet(spark, s"$sfDir/$name.parquet")
 
-  /** Frees the storage blocks behind a localCheckpoint'd Dataset.
-    * `Dataset.unpersist` only clears CacheManager entries and is a
-    * NO-OP for checkpoints (verified on this Spark build): the blocks
-    * belong to the materialized RDD inside the plan's LogicalRDD
-    * leaf, so that RDD must be unpersisted directly. Call ONLY on a
-    * checkpoint no live plan will read again — its lineage is
-    * truncated, so dropped blocks cannot be recomputed.
-    *
-    * Accepts ONLY the checkpoint Dataset itself (analyzed plan = one
-    * bare LogicalRDD leaf). A derived plan is rejected: it may join or
-    * union OTHER still-live LogicalRDD leaves, and unpersisting every
-    * leaf found would free those checkpoints' blocks too — later reads
-    * then fail with missing blocks rather than recomputing, because
-    * checkpoint lineage is truncated.
-    */
   /** Operator-grain cache lifecycle (r12 discipline). Operators cache
     * intermediate GRAINS (a tokenize pass, a signature table) that
     * their RETURNED plan references — the cache must outlive the
@@ -126,6 +111,41 @@ object GraftSession {
     }
     snapshot.forEach(_.unpersist(false))
     snapshot.size
+  }
+
+  /** Fills `grain`'s cache (one `count()`) on a second driver thread
+    * while `body` runs on this one, and returns `body`'s result once
+    * both are done. The fill thread is started here, so it inherits a
+    * copy of this thread's SparkContext local properties (job group,
+    * description, scheduler pool): `cancelJobGroup` on the caller's
+    * group reaches the fill. A failed fill rethrows here; if `body`
+    * throws (or the wait is interrupted), the fill is cancelled before
+    * the exception propagates.
+    */
+  private[graft] def fillAlongside[A](grain: org.apache.spark.sql.Dataset[_])(body: => A): A = {
+    val sc = grain.sparkSession.sparkContext
+    val tag = s"graft-fill-${java.util.UUID.randomUUID()}"
+    @volatile var failure: Throwable = null
+    val fill = new Thread(() => {
+      sc.addJobTag(tag)
+      try grain.count() catch { case e: Throwable => failure = e }
+    }, "graft-grain-fill")
+    fill.setDaemon(true)
+    fill.start()
+    try {
+      val out = body
+      fill.join()
+      if (failure != null) throw failure
+      out
+    } catch { case e: Throwable =>
+      // re-cancel until the thread ends: a job the fill submits after
+      // one cancel is caught by the next
+      while (fill.isAlive) {
+        sc.cancelJobsWithTag(tag)
+        fill.join(100)
+      }
+      throw e
+    }
   }
 
   /** `.grainCache()` — cache + register as an operator grain. */
@@ -198,6 +218,21 @@ object GraftSession {
     }
   }
 
+  /** Frees the storage blocks behind a localCheckpoint'd Dataset.
+    * `Dataset.unpersist` only clears CacheManager entries and is a
+    * NO-OP for checkpoints (verified on this Spark build): the blocks
+    * belong to the materialized RDD inside the plan's LogicalRDD
+    * leaf, so that RDD must be unpersisted directly. Call ONLY on a
+    * checkpoint no live plan will read again — its lineage is
+    * truncated, so dropped blocks cannot be recomputed.
+    *
+    * Accepts ONLY the checkpoint Dataset itself (analyzed plan = one
+    * bare LogicalRDD leaf). A derived plan is rejected: it may join or
+    * union OTHER still-live LogicalRDD leaves, and unpersisting every
+    * leaf found would free those checkpoints' blocks too — later reads
+    * then fail with missing blocks rather than recomputing, because
+    * checkpoint lineage is truncated.
+    */
   def releaseCheckpoint(df: org.apache.spark.sql.Dataset[_]): Unit = {
     val plan = df.queryExecution.analyzed
     require(plan.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],

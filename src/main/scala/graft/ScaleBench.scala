@@ -24,6 +24,10 @@ import org.apache.spark.sql.functions._
   * Known sub-linear queries (cost driven by a grain that does NOT
   * grow 10×) are annotated in `expectSubLinear` so a ratio ~1 there
   * reads as designed, not as noise.
+  *
+  * A query or write experiment that throws is left out of the ratios
+  * and reported under "errors" (query, sf dir, failed-run count,
+  * exception class and first message line), and on stderr.
   */
 object ScaleBench {
 
@@ -531,10 +535,19 @@ object ScaleBench {
     SparkEntry.entry(spark).count() // JIT warm-up
 
     val bench = ReadQueries.flatMap(n => SparkEntry.queries.get(n).map(n -> _))
-    def once(fn: (SparkSession, String) => DataFrame, dir: String): Double = {
+    // every failed execution, per (query, sf dir): its count and the
+    // first cause
+    val failures = scala.collection.mutable.LinkedHashMap.empty[(String, String), (Int, String)]
+    def failed(name: String, dir: String, e: Throwable): Unit = {
+      val why = Bench.describe(e)
+      System.err.println(s"[scalebench] $name failed at $dir: $why")
+      val (n, first) = failures.getOrElse((name, dir), (0, why))
+      failures((name, dir)) = (n + 1, first)
+    }
+    def once(name: String, fn: (SparkSession, String) => DataFrame, dir: String): Double = {
       val t0 = System.nanoTime()
       val t = try { fn(spark, dir).count(); (System.nanoTime() - t0) / 1e9 }
-              catch { case _: Throwable => -1.0 }
+              catch { case e: Throwable => failed(name, dir, e); -1.0 }
       GraftSession.releaseGrains()
       spark.sharedState.cacheManager.clearCache()
       t
@@ -543,11 +556,11 @@ object ScaleBench {
     // queries; the MIN is the recorded floor (ratio of floors is less
     // noise-sensitive than ratio of medians on a co-tenant box)
     def run(dir: String): Map[String, Double] = {
-      bench.foreach { case (_, fn) => once(fn, dir) } // warm-up pass
+      bench.foreach { case (name, fn) => once(name, fn, dir) } // warm-up pass
       val acc = scala.collection.mutable.Map.empty[String, Vector[Double]]
         .withDefaultValue(Vector.empty)
       for (_ <- 1 to 2; (name, fn) <- bench) {
-        val t = once(fn, dir)
+        val t = once(name, fn, dir)
         if (t >= 0) acc(name) = acc(name) :+ t
       }
       acc.view.mapValues(_.min).toMap
@@ -585,10 +598,7 @@ object ScaleBench {
             t
           }
           Some(w.name -> ts.min)
-        } catch { case e: Throwable =>
-          System.err.println(s"[scalebench] ${w.name} failed at $tag: $e")
-          None
-        }
+        } catch { case e: Throwable => failed(w.name, dir, e); None }
       }.toMap
     val wSmall = runWrites(smallDir, "sf01")
     val wBig = runWrites(bigDir, "sf1")
@@ -602,9 +612,13 @@ object ScaleBench {
         ex + "\"}"
     }.mkString("{", ",", "}")
 
+    val errorsJson = failures.map { case ((n, dir), (k, why)) =>
+      s"""{"query":${Bench.jstr(n)},"sf":${Bench.jstr(dir)},"failed_runs":$k,""" +
+        s""""error":${Bench.jstr(why.take(200))}}"""
+    }.mkString("[", ",", "]")
     val line = s"""{"metric":"scaling_ratio","reps":$Reps,""" +
       s""""n_queries":${rows.size},"queries":$qjson,"worst":$worst,""" +
-      s""""n_writes":${wRows.size},"writes":$wjson,""" +
+      s""""n_writes":${wRows.size},"writes":$wjson,"errors":$errorsJson,""" +
       s""""sum_sf01":${fmt(rows.map(_._2).sum)},"sum_sf1":${fmt(rows.map(_._3).sum)}}"""
     println(line)
     val w = new java.io.PrintWriter(

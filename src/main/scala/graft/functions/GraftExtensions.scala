@@ -48,6 +48,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // materialized rollup — pre-CBO, so the operator batch has settled
     // the Aggregate/Filter/relation shape the matcher expects
     e.injectPreCBORule(s => graft.plans.MvRewriteRule(s))
+    // a global sort over a small materialized input runs as one task
+    // instead of a range-partitioner sample job plus a range shuffle
+    e.injectRuntimeOptimizerRule(_ => graft.plans.SingleTaskSort)
   }
 }
 

@@ -778,17 +778,13 @@ object Dedup {
     // driver-side phases (same §2.6 overlap as curationFunnel).
     val clean = decontaminate(s, dir)
       .where(col("contaminated") === 0).select("doc_id").grainCache()
-    val cleanFill = scala.concurrent.Future(clean.count())(
-      scala.concurrent.ExecutionContext.global)
     val quality = docs(s, dir)
       .withColumn("n_toks", size(toks))
       .withColumn("n_distinct", size(array_distinct(toks)))
       .where(col("n_toks") >= 10 &&
              col("n_distinct") * 10 >= col("n_toks") * 3)
       .join(clean, Seq("doc_id"), "left_semi")
-    val clusters = nearDupClustersExact(s, dir)
-    scala.concurrent.Await.result(cleanFill,
-      scala.concurrent.duration.Duration.Inf)
+    val clusters = graft.GraftSession.fillAlongside(clean)(nearDupClustersExact(s, dir))
     val wCluster = Window.partitionBy("cluster")
     quality.join(clusters, Seq("doc_id"))
       .withColumn("rep", min("doc_id").over(wCluster))
@@ -849,11 +845,7 @@ object Dedup {
     // Unlike an eager in-line count() (the measured-regressive shape
     // grainCacheAuto gates), this fill back-fills cores the cluster
     // pipeline's driver phases leave idle.
-    val cleanFill = scala.concurrent.Future(clean.count())(
-      scala.concurrent.ExecutionContext.global)
-    val clusters = nearDupClustersExact(s, dir)
-    scala.concurrent.Await.result(cleanFill,
-      scala.concurrent.duration.Duration.Inf)
+    val clusters = graft.GraftSession.fillAlongside(clean)(nearDupClustersExact(s, dir))
     val wCluster = org.apache.spark.sql.expressions.Window.partitionBy("cluster")
     val s3 = s2.join(clusters, Seq("doc_id"))
       .withColumn("rep", min("doc_id").over(wCluster))

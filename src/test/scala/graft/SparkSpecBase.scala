@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,5 +27,33 @@ trait SparkSpecBase extends AnyFunSuite {
       case o => o.children
     }
     p +: kids.flatMap(allPlanNodes)
+  }
+
+  /** The local properties of every Spark job `run` starts, as a
+    * SparkListener sees them. Listener delivery is asynchronous but in
+    * order, so a marker job started after `run` is the last event to
+    * wait for.
+    */
+  def jobStarts(run: => Unit): Seq[java.util.Properties] = {
+    val sc = spark.sparkContext
+    val marker = s"marker-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val props = Option(j.properties).getOrElse(new java.util.Properties)
+        if (props.getProperty("spark.job.description") == marker) done.countDown()
+        else seen.add(props)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      run
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener bus did not deliver the marker job")
+    } finally sc.removeSparkListener(listener)
+    seen.toArray(Array.empty[java.util.Properties]).toSeq
   }
 }
