@@ -33,6 +33,8 @@ object GraftSession {
     // sidecar doubling (see GraftLocalFileSystem); inert on cluster
     // filesystems, which keep their own impls
     .config("spark.hadoop.fs.file.impl", "graft.sources.GraftLocalFileSystem")
+    // the same for FileContext users (streaming checkpoints)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "graft.sources.GraftLocalFs")
     // shuffle/spill + parquet codecs, env-parameterised so scale A/Bs
     // (guide §2.3/§6) run without harness edits; defaults = Spark's
     // own (lz4 shuffle, snappy parquet) — see the r17 sf1 A/B in

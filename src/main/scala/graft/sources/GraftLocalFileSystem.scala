@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{DelegateToFileSystem, FileStatus, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** `file://` FileSystem tuned for engine use (r16 optimization round).
@@ -26,8 +27,9 @@ import org.apache.hadoop.fs.permission.FsPermission
   *     local `file://` to the same contract by disabling checksum
   *     write/verify.
   *
-  * Wired via `spark.hadoop.fs.file.impl` in GraftSession.tune; inert
-  * on cluster filesystems (hdfs/s3a keep their own impls).
+  * Wired via `spark.hadoop.fs.file.impl` in GraftSession.tune (and
+  * [[GraftLocalFs]] for the FileContext API); inert on cluster
+  * filesystems (hdfs/s3a keep their own impls).
   *
   * CONTRACT CAVEATS (deliberate, local-mode only):
   *  - Statuses carry FABRICATED metadata: default permissions, EMPTY
@@ -101,4 +103,27 @@ class GraftRawLocalFileSystem extends RawLocalFileSystem {
     val xs = super.listStatus(f)
     if (xs == null) null else xs.map(fast)
   }
+
+  /** A path that is not a symlink (every file this engine writes) is
+    * its own link status; the stock impl forks `readlink` to find that
+    * out. Symlinks keep the stock answer.
+    */
+  override def getFileLinkStatus(f: Path): FileStatus =
+    if (java.nio.file.Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
+    else getFileStatus(f)
+}
+
+/** The FileContext binding for `file://` (`fs.AbstractFileSystem.file
+  * .impl`). FileContext ignores `fs.file.impl`, and Hadoop's default
+  * there, the checksummed `LocalFs`, made every streaming checkpoint
+  * file (Spark's checkpoint manager writes through FileContext) cost a
+  * `.crc` sidecar plus a forked `chmod` per create and `readlink` per
+  * rename. This delegates to [[GraftRawLocalFileSystem]] without
+  * checksums, the contract [[GraftLocalFileSystem]] gives the
+  * FileSystem API.
+  */
+class GraftLocalFs(uri: java.net.URI, conf: Configuration)
+    extends DelegateToFileSystem(uri, new GraftRawLocalFileSystem, conf, "file", false) {
+  // local names are validated by the OS, as in Hadoop's RawLocalFs
+  override def isValidName(src: String): Boolean = true
 }

@@ -24,7 +24,6 @@ import org.apache.spark.sql.sources.{AlwaysTrue, EqualTo, Filter, GreaterThan, G
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 import scala.jdk.CollectionConverters._
 
 /** DataSource V2 connector — the Spark-native re-expression of the
@@ -377,7 +376,7 @@ object GraftAggSpec {
 }
 
 case class GraftScan(path: String, required: StructType, filters: Array[Filter],
-    conf: SerializableConfiguration = GraftV2.sessionConf(),
+    conf: GraftV2.SessionConf = GraftV2.sessionConf(),
     pinnedFiles: Seq[String] = Seq.empty,
     partSchema: StructType = new StructType(),
     agg: Option[GraftAggSpec] = None,
@@ -1002,7 +1001,7 @@ case class GraftAggPartition(path: String,
     partValues: Map[String, Any] = Map.empty) extends InputPartition
 
 case class GraftAggReaderFactory(spec: GraftAggSpec,
-    conf: SerializableConfiguration) extends PartitionReaderFactory {
+    conf: GraftV2.SessionConf) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftAggPartition]
     new GraftAggReader(p.path, spec, conf.value, p.partValues)
@@ -1114,7 +1113,7 @@ case class GraftBucketPartition(bucketIds: Array[Int],
   * its rows (Iceberg-v2 rule).
   */
 case class GraftReaderFactory(required: StructType,
-    conf: SerializableConfiguration,
+    conf: GraftV2.SessionConf,
     eqKeyCols: Seq[String] = Seq.empty,
     eqMap: Map[Seq[Any], Long] = Map.empty,
     eqSingle: Map[Any, Long] = Map.empty,
@@ -1379,6 +1378,7 @@ class GraftPartitionReader(path: String, rowGroup: Int, required: StructType,
 }
 
 object GraftV2 {
+  import org.apache.spark.util.SerializableConfiguration
 
   def pathOf(options: CaseInsensitiveStringMap): String = {
     val p = Option(options.get("path")).getOrElse(
@@ -1386,16 +1386,56 @@ object GraftV2 {
     p
   }
 
-  /** The session's Hadoop conf wrapped for executor shipping — so a
-    * store needing configured credentials (spark.hadoop.fs.s3a.* etc.)
-    * works through this connector exactly as it does through
-    * GraftCatalog. Falls back to a bare Configuration when no session
-    * is active (driver-less unit use).
+  /** The session's Hadoop conf as tasks read it: a handle over one
+    * broadcast, so a task binary carries a broadcast id instead of the
+    * conf. A serialized conf is ~114 KB (~1,100 properties, each with
+    * a gzipped source list), and every task that carried one had to
+    * deserialize it; under `local[N]` the broadcast's value stays
+    * deserialized in the block manager. `value` is shared by every
+    * task of the JVM: read it, never mutate it (copy it first, as
+    * GraftColumnarReader does).
     */
-  def sessionConf(): SerializableConfiguration =
-    new SerializableConfiguration(
-      SparkSession.getActiveSession.map(_.sessionState.newHadoopConf())
-        .getOrElse(new Configuration()))
+  final class SessionConf private[GraftV2] (
+      bc: org.apache.spark.broadcast.Broadcast[SerializableConfiguration],
+      inline: SerializableConfiguration) extends Serializable {
+    def value: Configuration = if (bc != null) bc.value.value else inline.value
+    /** The broadcast's id; None for the inline, driver-less form. */
+    def broadcastId: Option[Long] = Option(bc).map(_.id)
+  }
+
+  /** The broadcast that carries `content` on `sc`. */
+  private final case class Shipped(sc: org.apache.spark.SparkContext,
+      content: Map[String, String], handle: SessionConf)
+  private val shipLock = new Object
+  private var shipped: Shipped = _
+
+  /** The session's Hadoop conf for executor-side use, so a store
+    * needing configured credentials (spark.hadoop.fs.s3a.* etc.) works
+    * through this connector exactly as it does through GraftCatalog.
+    * One broadcast per SparkContext is reused while the session's
+    * `newHadoopConf()` content is unchanged and replaced when it
+    * changes (a `spark.conf.set`, a streaming query's cloned session).
+    * A replaced broadcast is cleaned once no plan holds its handle.
+    * Falls back to an inline conf when no live session is active
+    * (driver-less unit use, executor threads).
+    */
+  def sessionConf(): SessionConf =
+    SparkSession.getActiveSession.filterNot(_.sparkContext.isStopped) match {
+      case None => new SessionConf(null, new SerializableConfiguration(new Configuration()))
+      case Some(s) =>
+        val conf = s.sessionState.newHadoopConf()
+        val content = conf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+        val sc = s.sparkContext
+        shipLock.synchronized {
+          val cur = shipped
+          if (cur != null && (cur.sc eq sc) && cur.content == content) cur.handle
+          else {
+            val h = new SessionConf(sc.broadcast(new SerializableConfiguration(conf)), null)
+            shipped = Shipped(sc, content, h)
+            h
+          }
+        }
+    }
 
   /** Data files of a table path: the path itself when it is a single
     * parquet file, else every non-bookkeeping file under the directory

@@ -8,7 +8,6 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 import scala.jdk.CollectionConverters._
 
 /** G29: STREAMING CDC — a DSv2 micro-batch source over the A49
@@ -130,7 +129,7 @@ class GraftFeedStream(root: String, schema: StructType,
     rowsPerBatch: Long, checkpointLocation: String)
     extends MicroBatchStream with SupportsAdmissionControl {
 
-  private val conf: SerializableConfiguration = GraftV2.sessionConf()
+  private val conf: GraftV2.SessionConf = GraftV2.sessionConf()
   private def ckFs =
     new Path(checkpointLocation).getFileSystem(conf.value)
 

@@ -8,7 +8,6 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 import scala.jdk.CollectionConverters._
 
 /** G28: a KAFKA-SHAPED DSv2 micro-batch source — true (partition,
@@ -250,7 +249,7 @@ class GraftLogStream(path: String, schema: StructType,
     checkpointLocation: String)
     extends MicroBatchStream with SupportsAdmissionControl {
 
-  private val conf: SerializableConfiguration = GraftV2.sessionConf()
+  private val conf: GraftV2.SessionConf = GraftV2.sessionConf()
   private def fs = new Path(path).getFileSystem(conf.value)
   // manifests live under the CHECKPOINT, whose filesystem may differ
   // from the log's (r13 ADVICE fix)

@@ -8,7 +8,6 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 import scala.jdk.CollectionConverters._
 
 /** G27: a NON-FILE-SOURCE DSv2 micro-batch STREAM with real offsets —
@@ -104,7 +103,7 @@ class GraftReplayStream(path: String, schema: StructType,
     partSchema: StructType, rowsPerBatch: Long)
     extends MicroBatchStream with SupportsAdmissionControl {
 
-  private val conf: SerializableConfiguration = GraftV2.sessionConf()
+  private val conf: GraftV2.SessionConf = GraftV2.sessionConf()
 
   /** One slice per (file, row group): table-global start row,
     * file-local start row, row count — the pinned, deterministic
@@ -191,7 +190,7 @@ case class GraftReplayPartition(path: String, rowGroup: Int,
     takeFrom: Long, takeUntil: Long) extends InputPartition
 
 case class GraftReplayReaderFactory(required: StructType,
-    conf: SerializableConfiguration) extends PartitionReaderFactory {
+    conf: GraftV2.SessionConf) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftReplayPartition]
     new GraftPartitionReader(p.path, p.rowGroup, required, conf.value,

@@ -20,7 +20,6 @@ import org.apache.spark.sql.functions.{col, lit, not}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 
 /** A55: SQL row-level DML — `DELETE FROM` / `UPDATE` / `MERGE INTO`
   * on graft tables, served MERGE-ON-READ exactly like the Scala
@@ -301,7 +300,7 @@ case class GraftDeltaWrite(path: String, writeSchema: StructType,
 
 case class GraftDeltaWriterFactory(stagingDir: String,
     writeSchema: StructType, partCols: Seq[String],
-    conf: SerializableConfiguration) extends DeltaWriterFactory {
+    conf: GraftV2.SessionConf) extends DeltaWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DeltaWriter[InternalRow] =
     new GraftDeltaWriter(stagingDir, writeSchema, partCols, conf,
@@ -319,7 +318,7 @@ case class GraftDeltaWriterFactory(stagingDir: String,
   * the COW merge's semantics at O(churn) cost.
   */
 class GraftDeltaWriter(stagingDir: String, writeSchema: StructType,
-    partCols: Seq[String], conf: SerializableConfiguration,
+    partCols: Seq[String], conf: GraftV2.SessionConf,
     partitionId: Int, taskId: Long)
     extends DeltaWriter[InternalRow] {
 

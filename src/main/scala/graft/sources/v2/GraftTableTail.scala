@@ -4,7 +4,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.SerializableConfiguration
 import scala.jdk.CollectionConverters._
 
 /** Streaming TABLE TAIL — `spark.readStream.table("graft.db.t")` (or
@@ -35,7 +34,7 @@ import scala.jdk.CollectionConverters._
   */
 class GraftTableTailStream(path: String, required: StructType,
     partSchema: StructType, tableSchema: StructType,
-    conf: SerializableConfiguration) extends MicroBatchStream
+    conf: GraftV2.SessionConf) extends MicroBatchStream
     with SupportsTriggerAvailableNow {
 
   private def snapDir: Path = GraftPlanStats.snapshotsDirFor(path)

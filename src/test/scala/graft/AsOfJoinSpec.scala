@@ -97,6 +97,35 @@ class AsOfJoinSpec extends SparkSpecBase {
     assert(plan.contains("AsOfJoin"), plan.take(600))
   }
 
+  test("as-of statistics: bounded by the left input, within a small factor of the measured output") {
+    val q = Analytic.qAsofEventOrder(spark, sfDir)
+    val node = q.queryExecution.optimizedPlan.collectFirst {
+      case a: graft.plans.AsOfJoinPlan => a
+    }.get
+    val est = node.stats.sizeInBytes
+    // measured: the join's own output, cached in memory
+    val out = org.apache.spark.sql.graft.Bridge.ofRows(spark, node).cache()
+    try {
+      assert(out.count() > 0)
+      val measured = spark.sharedState.cacheManager
+        .lookupCachedData(out.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+        .get.cachedRepresentation.stats.sizeInBytes
+      assert(est <= measured * 8 && measured <= est * 8,
+        s"estimate $est bytes against $measured measured")
+    } finally out.unpersist(true)
+  }
+
+  test("as-of query sorts its small output in one task, without a range exchange") {
+    val q = Analytic.qAsofEventOrder(spark, sfDir)
+    q.collect()
+    val ranges = allPlanNodes(q.queryExecution.executedPlan).collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[
+            org.apache.spark.sql.catalyst.plans.physical.RangePartitioning] => e
+    }
+    assert(ranges.isEmpty, q.queryExecution.executedPlan.toString)
+  }
+
   test("unknown column names fail fast") {
     import spark.implicits._
     val df = Seq((1L, ts("2024-01-01 00:00:00"))).toDF("k", "t")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 class StreamingSpec extends SparkSpecBase {
 
@@ -1729,5 +1730,36 @@ class StreamingSpec extends SparkSpecBase {
     cat.invalidate("t2"); cat.publishSnapshot("t2")
     val e2 = intercept[Exception](runTwo())
     assert(chain(e2).contains("re-seed"), chain(e2))
+  }
+
+  test("tail checkpoints write through graft's local FileContext: no .crc sidecars") {
+    import org.apache.spark.sql.streaming.Trigger
+    val conf = spark.sessionState.newHadoopConf()
+    assert(org.apache.hadoop.fs.AbstractFileSystem.get(new java.net.URI("file:///"), conf)
+      .isInstanceOf[graft.sources.GraftLocalFs])
+    val wh = graft.sources.GraftSink.scratchDir + "/tail_crc_wh"
+    val root = new org.apache.hadoop.fs.Path(wh)
+    root.getFileSystem(conf).delete(root, true)
+    import spark.implicits._
+    (0L until 30L).map(i => (i, i)).toDF("k", "v").coalesce(1)
+      .write.parquet(s"$wh/db/t.parquet")
+    new graft.sources.GraftCatalog(spark, s"$wh/db").publishSnapshot("t")
+    val ckpt = s"$wh/_ckpt"
+    var rows = 0L
+    val q = spark.readStream.format("graft").load(s"$wh/db/t.parquet").writeStream
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) => rows += df.count(); () }
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    assert(rows === 30L)
+    // listed with java.nio: a checksummed FileSystem hides .crc files
+    val files = {
+      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
+      try w.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(_.getFileName.toString).toList
+      finally w.close()
+    }
+    assert(files.exists(_ == "0"), s"the run committed no offset: $files")
+    assert(!files.exists(_.endsWith(".crc")), files.mkString(", "))
   }
 }

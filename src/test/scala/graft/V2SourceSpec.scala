@@ -2674,8 +2674,7 @@ class V2SourceSpec extends SparkSpecBase {
     // the torn epoch is not offset-addressable by the tail
     val stream = new graft.sources.v2.GraftTableTailStream(dir,
       spark.read.parquet(dir).schema, new org.apache.spark.sql.types.StructType(),
-      spark.read.parquet(dir).schema,
-      new org.apache.spark.util.SerializableConfiguration(conf))
+      spark.read.parquet(dir).schema, graft.sources.v2.GraftV2.sessionConf())
     assert(stream.latestOffset().asInstanceOf[graft.sources.v2.GraftEpochOffset]
       .epoch === v2, "the tail must stop at the newest COMPLETE epoch")
     // cleanup: drop the torn manifest so later reads of this scratch
