@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: one JSON line with per-query wall times at the
   * SPARK_GRAFT_SF_DIR scale factor.
@@ -169,6 +169,27 @@ object Bench {
     e.getClass.getName + ": " +
       Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
 
+  /** Seconds for one execution (`count()`) of a query over `dir`, or
+    * -1 after passing its exception to `onFailure`. Then every operator
+    * grain and cached frame is dropped: queries that cache
+    * intermediates (dedup/sim families) would otherwise leave them
+    * resident, and 24 queries x 6 runs fill the storage pool so late
+    * queries pay eviction + GC (BENCH_r05: text_fingerprint median 4.0s
+    * vs min 1.0s, 21st of 24 in run order). Dropping the pool after
+    * every execution isolates each measurement from its predecessors;
+    * releaseGrains also empties the grain registry so its strong refs
+    * stay bounded.
+    */
+  private[graft] def timeOnce(spark: SparkSession, dir: String,
+      fn: (SparkSession, String) => DataFrame)(onFailure: Throwable => Unit): Double = {
+    val t0 = System.nanoTime()
+    val t = try { fn(spark, dir).count(); (System.nanoTime() - t0) / 1e9 }
+            catch { case e: Throwable => onFailure(e); -1.0 }
+    GraftSession.releaseGrains()
+    spark.sharedState.cacheManager.clearCache()
+    t
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -184,29 +205,13 @@ object Bench {
     val bench = Headline.flatMap(n => SparkEntry.queries.get(n).map(n -> _))
     // every failed execution, per query: its count and the first cause
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, (Int, String)]
-    def once(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val t = try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-              catch { case e: Throwable =>
-                val why = describe(e)
-                System.err.println(s"[bench] $name failed: $why")
-                val (n, first) = failures.getOrElse(name, (0, why))
-                failures(name) = (n + 1, first)
-                -1.0
-              }
-      // Queries that .cache() intermediates (dedup/sim families) leave
-      // them resident forever; 24 queries x 6 runs fills the storage
-      // pool and late queries pay eviction + GC (BENCH_r05:
-      // text_fingerprint median 4.0s vs min 1.0s, 21st of 24 in run
-      // order). Dropping the pool after every execution isolates each
-      // measurement from its predecessors. releaseGrains additionally
-      // empties the r12 grain registry so its strong refs stay bounded
-      // across the 6x77 executions.
-      GraftSession.releaseGrains()
-      spark.sharedState.cacheManager.clearCache()
-      t
-    }
+    def once(name: String, fn: (SparkSession, String) => DataFrame): Double =
+      timeOnce(spark, sfDir, fn) { e =>
+        val why = describe(e)
+        System.err.println(s"[bench] $name failed: $why")
+        val (n, first) = failures.getOrElse(name, (0, why))
+        failures(name) = (n + 1, first)
+      }
     // Warm-up pass: pays codegen/JIT and page cache per query, and
     // discovers failures (a query that throws is excluded up front —
     // no point timing it 5x — and reported with its cause).

@@ -35,16 +35,6 @@ object GraftSession {
     .config("spark.hadoop.fs.file.impl", "graft.sources.GraftLocalFileSystem")
     // the same for FileContext users (streaming checkpoints)
     .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "graft.sources.GraftLocalFs")
-    // shuffle/spill + parquet codecs, env-parameterised so scale A/Bs
-    // (guide §2.3/§6) run without harness edits; defaults = Spark's
-    // own (lz4 shuffle, snappy parquet) — see the r17 sf1 A/B in
-    // OPTIMIZATION_r17.md for the measured local verdict and the
-    // cluster recommendation (zstd's ratio pays where shuffle bytes
-    // cross NICs; locally there is no network to save).
-    .config("spark.io.compression.codec",
-      sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-    .config("spark.sql.parquet.compression.codec",
-      sys.env.getOrElse("SPARK_GRAFT_PARQUET_CODEC", "snappy"))
     .config("spark.ui.enabled", "false")
     // Janino-compiled classes are cached by generated source, and graft
     // re-runs the same scan/join/aggregate/sort shapes: one pass of
@@ -150,72 +140,25 @@ object GraftSession {
     }
   }
 
-  /** `.grainCache()` — cache + register as an operator grain. */
   implicit class GrainOps[T](private val ds: org.apache.spark.sql.Dataset[T]) {
+    /** `.grainCache()` — cache + register as an operator grain. The
+      * cache fills lazily, inside the caller's first action. A grain
+      * consumed by several of the final plan's LEAF exchanges races
+      * there: AQE materializes those stages in PARALLEL, and
+      * concurrent scans of a not-yet-filled cache each recompute the
+      * full grain (measured: the exact-shingle grain computed 3× and
+      * the funnel's token grain 5× per execution). An eager count()
+      * fill would pay the grain once, but it adds a SERIAL stage to
+      * the action chain, and the r17 A/B measured the lazy fill
+      * wall-optimal at every corner of this box — 32c/sf0.1
+      * (text_decontaminate 0.28→0.76 s eager), 32c/sf1 (funnel 15.7 s
+      * lazy vs 19.2 s eager) and 8c/sf0.1 (funnel 5.2-6.2 s lazy vs
+      * 7.0 s eager, two interleaved pairs) — because the duplicated
+      * leaf compute back-fills scheduling slack. So the fill stays lazy.
+      */
     def grainCache(): org.apache.spark.sql.Dataset[T] = {
       ds.cache()
       trackGrain(ds)
-      ds
-    }
-
-    /** `.grainCacheEager()` — grainCache + fill the cache NOW with one
-      * count() pass. For grains consumed by several of the final
-      * plan's LEAF exchanges: AQE materializes those stages in
-      * PARALLEL, and concurrent scans of a not-yet-filled cache each
-      * recompute the full grain (measured: the exact-shingle grain
-      * computed 3× and the funnel's token grain 5× per execution).
-      * Paying the grain once up front serializes ~one stage but
-      * removes the duplicated work — use where >1 leaf consumer is
-      * the plan shape, keep plain grainCache() for grains consumed
-      * sequentially.
-      */
-    def grainCacheEager(): org.apache.spark.sql.Dataset[T] = {
-      ds.cache()
-      trackGrain(ds)
-      ds.count()
-      ds
-    }
-
-    /** `.grainCacheAuto(consumers)` — grainCache, count()-filled
-      * eagerly ONLY when the executor pool is saturated enough that
-      * the AQE cache race's duplicated grain compute costs wall time.
-      * The race: AQE materializes a plan's leaf exchanges in PARALLEL,
-      * and `consumers` concurrent scans of a not-yet-filled cache each
-      * recompute the full grain. Whether that duplication matters is a
-      * saturation question, measured both ways in r16/r17:
-      *  - wide pool (local[32], sf0.1): the duplicated work hides in
-      *    idle cores while an eager count() SERIALIZES one stage —
-      *    eager fill was a wall REGRESSION (text_decontaminate
-      *    0.28→0.76 s), so the r16 call sites were reverted to lazy;
-      *  - narrow pool (8 cores or a busy cluster): every duplicated
-      *    grain pass steals occupied cores, so paying the grain once
-      *    up front wins (−2.5 s executor work on the funnel alone).
-      * Gate: eager iff defaultParallelism ≤ consumers ×
-      * `spark.graft.grain.eagerCoreFactor`. DEFAULT 0 = never eager:
-      * the r17 A/B measured the LAZY path wall-optimal at every
-      * corner of this box — 32c/sf0.1 (r16: 0.28→0.76 s regression),
-      * 32c/sf1 (funnel 15.7 lazy vs 19.2 eager; cluster_split
-      * wall-neutral at half the executor work), AND 8c/sf0.1 (funnel
-      * 5.2-6.2 lazy vs 7.0 eager ×2 interleaved pairs) — because the
-      * eager count() adds a SERIAL stage to an action chain while the
-      * duplicated leaf compute back-fills scheduling slack. The knob
-      * exists for genuinely contended multi-tenant executors where
-      * duplicated CPU is billed even when wall time hides it; set the
-      * conf (or SPARK_GRAFT_GRAIN_EAGER_FACTOR) to ~6 there and
-      * re-measure.
-      */
-    def grainCacheAuto(consumers: Int): org.apache.spark.sql.Dataset[T] = {
-      ds.cache()
-      trackGrain(ds)
-      // conf wins; the env fallback exists so a bench A/B can flip the
-      // gate without editing the session builder (0 = never eager)
-      val dflt = sys.env.getOrElse("SPARK_GRAFT_GRAIN_EAGER_FACTOR", "0")
-      val factor = try ds.sparkSession.conf
-        .get("spark.graft.grain.eagerCoreFactor", dflt).toInt
-      catch { case _: NumberFormatException => 0 }
-      if (factor > 0 &&
-          ds.sparkSession.sparkContext.defaultParallelism <= consumers.toLong * factor)
-        ds.count()
       ds
     }
   }

@@ -544,14 +544,8 @@ object ScaleBench {
       val (n, first) = failures.getOrElse((name, dir), (0, why))
       failures((name, dir)) = (n + 1, first)
     }
-    def once(name: String, fn: (SparkSession, String) => DataFrame, dir: String): Double = {
-      val t0 = System.nanoTime()
-      val t = try { fn(spark, dir).count(); (System.nanoTime() - t0) / 1e9 }
-              catch { case e: Throwable => failed(name, dir, e); -1.0 }
-      GraftSession.releaseGrains()
-      spark.sharedState.cacheManager.clearCache()
-      t
-    }
+    def once(name: String, fn: (SparkSession, String) => DataFrame, dir: String): Double =
+      Bench.timeOnce(spark, dir, fn)(failed(name, dir, _))
     // protocol per scale: one warm-up + 2 timed, interleaved across
     // queries; the MIN is the recorded floor (ratio of floors is less
     // noise-sensitive than ratio of medians on a co-tenant box)

@@ -17,17 +17,10 @@ object VectorFns {
   def toDoubleArray(v: Column): Column = v.cast("array<double>")
 
   /** Native single-loop dot product (see DotProductExpr) —
-    * bit-identical to [[dotHof]], spec-asserted.
+    * bit-identical to aggregate(zip_with(a, b, *)), spec-asserted.
     */
   def dot(a: Column, b: Column): Column =
     Bridge.column(DotProductExpr(Bridge.expression(a), Bridge.expression(b)))
-
-  /** The higher-order-function twin of [[dot]] — kept ONLY as the
-    * bit-identity reference for the spec (interpreted: two boxed
-    * lambda calls per element).
-    */
-  private[graft] def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 

@@ -1,10 +1,10 @@
 package graft.operators
 
 import graft.GraftSession.GrainOps
-import graft.sources.GraftCatalog
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import TpchExprs.{cat, dsum, dsumr, revenueExpr, ts}
 import org.apache.spark.sql.types.DecimalType
 import scala.jdk.CollectionConverters._
 
@@ -13,16 +13,6 @@ import scala.jdk.CollectionConverters._
   * the SQL-text surface. Same Spark-first rules as Relational.
   */
 object Analytic {
-
-  private def cat(s: SparkSession, dir: String) = new GraftCatalog(s, dir)
-
-  private def ts(v: String) = to_timestamp(lit(v))
-
-  private def revenueExpr = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(28, 6))).cast("double")
-
-  private def dsumr(c: Column, scale: Int = 2): Column = round(dsum(c), scale)
 
   /** B19 (TPC-H Q7): volume shipping between two nations, by year and
     * direction. Nation dims broadcast twice under different aliases.
@@ -228,24 +218,6 @@ object Analytic {
       .withColumn("f_prev_value", lag("value", 1).over(w))
       .select(col("event_id"), col("user_id"),
         col("f_last_order_price"), col("f_prior_events"), col("f_prev_value"))
-      .orderBy("event_id")
-  }
-
-  /** B26 (composed form kept for cross-checking the native operator in
-    * specs): join + window materializes all (event, earlier-order)
-    * pairs, then ranks.
-    */
-  def qAsofEventOrderComposed(s: SparkSession, dir: String): DataFrame = {
-    val c = cat(s, dir)
-    val ev = graft.streaming.Events.eventsTable(s, dir)
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val w = Window.partitionBy("event_id").orderBy(col("o_orderdate").desc, col("o_orderkey").desc)
-    ev.join(c.table("orders"),
-        col("o_custkey") === col("user_id") && col("o_orderdate") <= col("ts"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") === 1)
-      .select(col("event_id"), col("user_id"), col("o_orderkey"),
-        date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_date"))
       .orderBy("event_id")
   }
 

@@ -456,14 +456,12 @@ object Dedup {
       // at sf1 (computed up to 3× per execution by the AQE race below)
       .select(col("doc_id"),
         array_distinct(TextFns.wordShingleStrings(col("t"), 3)).as("sh"))
-      // KNOWN RACE, deliberately adaptive: the blocking-key exchange
-      // and both verify sides are leaf exchanges AQE materializes in
-      // parallel — lazily filled, the shingle pass recomputes 3×
-      // (profiled at sf0.1). The duplication hides in idle cores at
-      // local[32] (an unconditional eager fill measured as a wall
-      // regression — see grainCacheAuto), so the fill stays LAZY by
-      // default and is conf-gated for contended clusters.
-      .grainCacheAuto(consumers = 3)
+      // KNOWN RACE, kept: the blocking-key exchange and both verify
+      // sides are leaf exchanges AQE materializes in parallel — lazily
+      // filled, the shingle pass recomputes 3× (profiled at sf0.1). The
+      // duplication hides in idle cores (an eager fill measured as a
+      // wall regression — see grainCache), so the fill stays LAZY.
+      .grainCache()
     val keys = sh.select(col("doc_id"),
       explode(slice(array_sort(col("sh")), 1, 4)).as("k"))
     // Degenerate-block guard, PORTABLY (the oracle mirrors it):
@@ -525,29 +523,6 @@ object Dedup {
       .withColumn("ghs", TextFns.wordSpanHashes(col("words"), SpanWords))
       .select(col("doc_id"), posexplode(col("ghs")).as(Seq("p0", "gh")))
       .select(col("doc_id"), (col("p0") + 1).as("p"), col("gh"))
-
-  /** The interpreted HOF twin of `WordSpanHashesExpr`, kept ONLY as
-    * the bit-identity reference for the spec (it IS the SQL the
-    * oracle runs, expressed in Spark HOFs).
-    */
-  private[graft] def wordGramHashesHof(documents: DataFrame): DataFrame = {
-    val P = graft.functions.SpanHash.P; val B = graft.functions.SpanHash.B
-    documents
-      .withColumn("words", expr(
-        "filter(split(trim(lower(text)), '\\\\s+'), w -> length(w) > 0)"))
-      .withColumn("wh", expr(
-        s"transform(words, w -> aggregate(split(w, ''), cast(0 as bigint), " +
-          s"(acc, c) -> (acc * 257 + ascii(c)) % $P))"))
-      .withColumn("ghs",
-        when(size(col("wh")) < SpanWords, expr("cast(array() as array<bigint>)"))
-          .otherwise(expr(
-            s"""transform(sequence(1, size(wh) - ${SpanWords - 1}), p ->
-                  ((((((element_at(wh, p) * $B + element_at(wh, p + 1)) % $P)
-                      * $B + element_at(wh, p + 2)) % $P)
-                      * $B + element_at(wh, p + 3)) % $P))""")))
-      .select(col("doc_id"), posexplode(col("ghs")).as(Seq("p0", "gh")))
-      .select(col("doc_id"), (col("p0") + 1).as("p"), col("gh"))
-  }
 
   /** C8: substring-level exact dedup — the cross-document repeated-SPAN
     * pass of the public dedup literature (Lee et al. 2022, "Deduplicating
@@ -640,13 +615,12 @@ object Dedup {
     * spans appear in the eval set.
     */
   def decontaminate(s: SparkSession, dir: String): DataFrame = {
-    // KNOWN RACE, deliberately adaptive: the span-stats scan and the
-    // eval-hash broadcast build are parallel leaf consumers — lazily
-    // filled, each recomputes the span-hash pass. The duplication
-    // hides in idle cores at local[32] (eager fill measured 0.28→0.76 s
-    // on text_decontaminate), so the fill is saturation-gated
-    // (see grainCacheAuto).
-    val g = wordGramHashes(s, dir).grainCacheAuto(consumers = 2)
+    // KNOWN RACE, kept: the span-stats scan and the eval-hash
+    // broadcast build are parallel leaf consumers — lazily filled, each
+    // recomputes the span-hash pass. The duplication hides in idle
+    // cores (eager fill measured 0.28→0.76 s on text_decontaminate), so
+    // the fill stays lazy (see grainCache).
+    val g = wordGramHashes(s, dir).grainCache()
     decontaminateSpans(g.where(!isBenchDoc), g.where(isBenchDoc).select("gh"),
       docs(s, dir).where(!isBenchDoc))
   }
@@ -673,11 +647,10 @@ object Dedup {
     // sources × distinct spans, far below corpus size.
     val perSource = wordGramHashes(s, dir)
       .join(srcs, Seq("doc_id"))
-      // KNOWN RACE, deliberately adaptive: counts + both self-join
-      // sides consume this as parallel leaves; duplication hides in
-      // idle cores at local[32], so the fill is saturation-gated
-      // (see grainCacheAuto).
-      .select("source", "gh").distinct().grainCacheAuto(consumers = 3)
+      // KNOWN RACE, kept: counts + both self-join sides consume this
+      // as parallel leaves; the duplication hides in idle cores, so the
+      // fill stays lazy (see grainCache).
+      .select("source", "gh").distinct().grainCache()
     val counts = perSource.groupBy("source").agg(count(lit(1)).as("n"))
     val shared = perSource.toDF("source_a", "gh")
       .join(perSource.toDF("source_b", "gh"), Seq("gh"))
@@ -820,13 +793,12 @@ object Dedup {
     val base = docs(s, dir).select(col("doc_id"),
         size(toks).cast("long").as("n_toks"),
         size(array_distinct(toks)).cast("long").as("n_distinct"))
-      // KNOWN RACE, deliberately adaptive: all five stage aggregates
-      // probe this grain as parallel leaf exchanges — lazily filled it
-      // recomputes the tokenize pass 5× (profiled at sf0.1;
-      // wall-neutral at 32 cores, −2.5 s total executor work per
-      // execution, so a saturated pool pays it). Fill is saturation-
-      // gated (see grainCacheAuto).
-      .grainCacheAuto(consumers = 5)
+      // KNOWN RACE, kept: all five stage aggregates probe this grain
+      // as parallel leaf exchanges — lazily filled it recomputes the
+      // tokenize pass 5× (profiled at sf0.1; an eager fill was
+      // wall-neutral at 32 cores and saved 2.5 s of executor work per
+      // execution). The fill stays lazy (see grainCache).
+      .grainCache()
     val quality = base.where(col("n_toks") >= 10 &&
       col("n_distinct") * 10 >= col("n_toks") * 3)
     // cached: consumed by the s2 semi-join AND the final accounting
@@ -843,7 +815,7 @@ object Dedup {
     // first tercile collect (funnel construction measured ~5.2 s of
     // the 5.4 s total at sf0.1, the two sub-pipelines back to back).
     // Unlike an eager in-line count() (the measured-regressive shape
-    // grainCacheAuto gates), this fill back-fills cores the cluster
+    // grainCache avoids), this fill back-fills cores the cluster
     // pipeline's driver phases leave idle.
     val clusters = graft.GraftSession.fillAlongside(clean)(nearDupClustersExact(s, dir))
     val wCluster = org.apache.spark.sql.expressions.Window.partitionBy("cluster")
@@ -863,10 +835,10 @@ object Dedup {
       .join(s3.select("doc_id"), Seq("doc_id"), "left_semi")
       .select(col("doc_id"), explode(words).as("word"))
       .groupBy("doc_id", "word").agg(count(lit(1)).as("n"))
-      // KNOWN RACE, deliberately adaptive: the total scalar, the
-      // word-count side and the per-doc side all scan this grain as
-      // parallel leaves; fill is saturation-gated (see grainCacheAuto).
-      .grainCacheAuto(consumers = 3)
+      // KNOWN RACE, kept: the total scalar, the word-count side and
+      // the per-doc side all scan this grain as parallel leaves; the
+      // fill stays lazy (see grainCache).
+      .grainCache()
     // total-token scalar rides along as a broadcast single-row frame
     // (the TextAnalysis idiom) instead of a driver head() that would
     // force an extra job over the cached grain mid-pipeline.

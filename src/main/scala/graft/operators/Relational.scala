@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import TpchExprs.{cat, dsum, dsumr, revenueExpr, ts}
 
 /** §2.A source/connector queries + §2.B MapReduce-replacement
   * relational core, expressed as declarative DataFrame programs so
@@ -22,25 +23,6 @@ import org.apache.spark.sql.functions._
   *    AQE splits skewed partitions at runtime.
   */
 object Relational {
-
-  private def cat(s: SparkSession, dir: String) = new GraftCatalog(s, dir)
-
-  private def ts(v: String) = to_timestamp(lit(v))
-
-  /** Discounted revenue expression used across TPC-H-style queries. */
-  private def revenueExpr = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-
-  /** Exact-decimal sum of a "money" double column, returned as double.
-    *
-    * The raw inputs carry ≤2 decimals and products of them ≤6, so
-    * casting each term to DECIMAL(28,6) recovers the exact decimal
-    * value; the decimal sum is then order-independent and identical in
-    * any engine — a plain double sum is order-dependent in its last
-    * bits and flips round(x,2) at half-cent boundaries.
-    */
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(28, 6))).cast("double")
-
-  private def dsumr(c: Column, scale: Int = 2): Column = round(dsum(c), scale)
 
   private def davg(c: Column, scale: Int = 6): Column = round(dsum(c) / count(c), scale)
 

@@ -85,7 +85,7 @@ object SemDedup {
   /** Lloyd-ROUND flavor: the centroid table rides as a one-row
     * broadcast LocalRelation instead of a per-round plan literal, so
     * the round plan's text — and its codegen — is round-invariant
-    * (the Similarity.assignCentroidsRound story). Integer-exact
+    * (codegen cache hits from round 2 on). Integer-exact
     * arithmetic makes the result provably identical; the baked
     * Sf001Centroids spec guards it anyway.
     */

@@ -116,60 +116,11 @@ object Similarity {
     // former literal-array HOF form — array_max over transform(cents,
     // struct(score, -id)) — interpreted one boxed struct per centroid
     // per row; bit-identity with it (scores, NaN/-0.0 ordering, ties
-    // to smallest id) is spec-asserted on the real corpus. Kept as
-    // [[assignCentroidsHof]] for that spec and for the Lloyd-round
-    // column-carrier path.
+    // to smallest id) is spec-asserted on the real corpus against a
+    // test-scope copy of that form.
     e.withColumn("centroid_id", Bridge.column(NearestCentroidExpr(
       Bridge.expression(col("emb")),
       centroids.map(_._1), centroids.map(_._2.toArray), useCosine)))
-
-  /** The HOF twin of [[assignCentroids]] — the spec's bit-identity
-    * reference, and the shape the broadcast-carrier Lloyd rounds use
-    * (there the centroid table is a COLUMN, which a driver-side-table
-    * native expression cannot consume).
-    */
-  private[graft] def assignCentroidsHof(
-      e: DataFrame, centroids: Array[(Int, Seq[Double])],
-      score: (Column, Column) => Column = VectorFns.cosine(_, _)): DataFrame =
-    e.withColumn("centroid_id",
-      argmaxCentroid(typedlit(centroids.toSeq), score))
-
-  /** The per-row argmax over a centroid-array COLUMN (either a literal
-    * or a broadcast-joined attribute — the expression, and therefore
-    * the per-row float arithmetic, is identical either way). */
-  private def argmaxCentroid(cArr: Column,
-      score: (Column, Column) => Column): Column = {
-    val best = array_max(transform(cArr, c =>
-      struct(score(col("emb"), c.getField("_2")).as("cos"),
-        (-c.getField("_1")).as("nid"))))
-    (-best.getField("nid")).cast("int")
-  }
-
-  /** Lloyd-ROUND flavor of the map-side argmax: the per-round centroid
-    * table rides as a ONE-ROW broadcast LocalRelation (data in the
-    * broadcast, not a literal in the plan) crossJoined onto the input.
-    * A `typedlit` embeds k×dim doubles in the expression tree, so
-    * every round analyzed, optimized and CODEGEN-COMPILED a fresh plan
-    * (~0.15 s/round measured on sim_pq_topk — the whole training cost
-    * at sf0.1); as data, the plan text is round-invariant and the
-    * codegen cache hits from round 2 on. Per-row arithmetic is the
-    * SAME expression over the same values in the same partition order
-    * (BroadcastNestedLoopJoin with one row preserves left partitions
-    * and order), so results are bit-identical — spec-asserted against
-    * the literal path. The FINAL full-corpus assignment keeps the
-    * literal form: it runs once, and zero-join map-side assignment is
-    * the at-scale story documented on assignCentroids.
-    */
-  private[graft] def assignCentroidsRound(
-      e: DataFrame, centroids: Array[(Int, Seq[Double])],
-      score: (Column, Column) => Column = VectorFns.cosine(_, _)): DataFrame = {
-    val s = e.sparkSession
-    import s.implicits._
-    val cents = Seq(Tuple1(centroids.toSeq)).toDF("__cents")
-    e.crossJoin(broadcast(cents))
-      .withColumn("centroid_id", argmaxCentroid(col("__cents"), score))
-      .drop("__cents")
-  }
 
   /** L2 flavor of the map-side argmax (PQ subspace codebooks): same
     * zero-shuffle shape, maximizing the NEGATED squared distance.
@@ -189,21 +140,17 @@ object Similarity {
     * instead of vanishing from the groupBy result.
     */
   private[graft] def kmeansCentroids(
-      e: DataFrame, k: Int, iters: Int,
-      // rounds default to the NATIVE assignment (NearestCentroidExpr):
-      // the centroid table rides the codegen references array, so the
-      // per-round generated code is round-invariant (codegen cache
-      // hits) AND the per-row argmax is one primitive loop. Injectable
-      // so the spec can assert bit-identity vs the HOF literal AND the
-      // HOF broadcast-carrier forms.
-      assign: (DataFrame, Array[(Int, Seq[Double])]) => DataFrame =
-        assignCentroids(_, _)): Array[(Int, Seq[Double])] = {
+      e: DataFrame, k: Int, iters: Int): Array[(Int, Seq[Double])] = {
     import e.sparkSession.implicits._
     var centroids = e.orderBy("vec_id").limit(k)
       .select(col("emb")).as[Seq[Double]].collect()
       .zipWithIndex.map { case (v, i) => (i, v) }
     for (_ <- 0 until iters) {
-      val updated = assign(e, centroids)
+      // NATIVE assignment (NearestCentroidExpr): the centroid table
+      // rides the codegen references array, so the per-round generated
+      // code is round-invariant (codegen cache hits) and the per-row
+      // argmax is one primitive loop
+      val updated = assignCentroids(e, centroids)
         // mean per dimension: posexplode + groupBy(centroid, dim)
         .select(col("centroid_id"), posexplode(col("emb")).as(Seq("dim", "v")))
         .groupBy("centroid_id", "dim").agg(avg("v").as("m"))
@@ -712,7 +659,6 @@ object Similarity {
     */
   private[graft] def serveIvf(s: SparkSession, dir: String, idx: String,
       nProbe: Int): DataFrame = {
-    import s.implicits._
     val centroids = broadcast(graft.sources.GraftIO.readParquet(s, s"$idx/centroids"))
     val q = emb(s, dir).where(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"), col("emb").as("q_emb"))
@@ -946,25 +892,17 @@ object Similarity {
     */
   /** Trains the M per-subspace PQ codebooks JOINTLY: the training
     * sample explodes once to (vec_id, sub, subvector) and each Lloyd
-    * round assigns every row against its own subspace's codebook — a
-    * literal array-of-codebooks indexed by `sub`, still the map-side
-    * argmin shape — then re-means per (sub, centroid, dim) in one
-    * shuffle. One job per round for ALL subspaces. Deterministic
+    * round assigns every row against its own subspace's codebook
+    * ([[subspaceCode]], still the map-side argmin shape) — then
+    * re-means per (sub, centroid, dim) in one shuffle. One job per
+    * round for ALL subspaces. Deterministic
     * init (k lowest sample vec_ids seed every subspace, same rule as
     * kmeansCentroids); an empty cluster keeps its previous centroid.
     */
   private[graft] def trainSubspaceCodebooks(e: DataFrame, m: Int, subDim: Int,
-      ksub: Int, iters: Int,
-      // rounds default to the broadcast-LocalRelation codebook carrier
-      // (codegen-cacheable plan text — the assignCentroidsRound story);
-      // the literal path stays injectable for the bit-identity spec
-      literalRounds: Boolean = false): Array[Array[(Int, Seq[Double])]] = {
+      ksub: Int, iters: Int): Array[Array[(Int, Seq[Double])]] = {
     import e.sparkSession.implicits._
-    val sub = trainingSample(e).select(col("vec_id"),
-      explode(array((0 until m).map(mi =>
-        struct(lit(mi).as("sub"),
-          slice(col("nemb"), mi * subDim + 1, subDim).as("emb"))): _*)).as("s"))
-      .select(col("vec_id"), col("s.sub").as("sub"), col("s.emb").as("emb"))
+    val sub = subspaceRows(e, m, subDim)
       .localCheckpoint() // sample-sized; keeps the normalize lineage out of every round
     try {
       // every vec_id contributes exactly m rows, so the first ksub×m
@@ -977,24 +915,8 @@ object Similarity {
           .map { case ((_, _, v), i) => (i, v) }
       }
       for (_ <- 0 until iters) {
-        // default: NATIVE per-subspace argmin (SubspaceNearestExpr) —
-        // the codebooks ride the codegen references array, so the
-        // round plan's generated code is round-invariant (codegen
-        // cache hits) and the argmin is one primitive loop. The
-        // literal HOF form stays reachable as the spec's bit-identity
-        // reference: same negL2 arithmetic, same (score, -id) order.
-        val code: Column =
-          if (literalRounds) {
-            val bookArr = typedlit(books.map(_.toSeq).toSeq)
-            val best = array_max(transform(element_at(bookArr, col("sub") + 1), c =>
-              struct((-VectorFns.l2sq(col("emb"), c.getField("_2"))).as("nd"),
-                (-c.getField("_1")).as("nid"))))
-            (-best.getField("nid")).cast("int")
-          } else Bridge.column(graft.functions.SubspaceNearestExpr(
-            Bridge.expression(col("emb")), Bridge.expression(col("sub")),
-            books.map(_.map(_._1)), books.map(_.map(_._2.toArray))))
         val updated = sub
-          .withColumn("code", code)
+          .withColumn("code", subspaceCode(books))
           .select(col("sub"), col("code"), posexplode(col("emb")).as(Seq("dim", "v")))
           .groupBy("sub", "code", "dim").agg(avg("v").as("mn"))
           .groupBy("sub", "code")
@@ -1010,6 +932,28 @@ object Similarity {
       books
     } finally graft.GraftSession.releaseCheckpoint(sub)
   }
+
+  /** The training sample exploded to one (vec_id, sub, emb) row per
+    * subspace: the rows each codebook round assigns.
+    */
+  private[graft] def subspaceRows(e: DataFrame, m: Int, subDim: Int): DataFrame =
+    trainingSample(e).select(col("vec_id"),
+      explode(array((0 until m).map(mi =>
+        struct(lit(mi).as("sub"),
+          slice(col("nemb"), mi * subDim + 1, subDim).as("emb"))): _*)).as("s"))
+      .select(col("vec_id"), col("s.sub").as("sub"), col("s.emb").as("emb"))
+
+  /** Each row's nearest code in its own subspace's codebook: the
+    * NATIVE per-subspace argmin (SubspaceNearestExpr). The codebooks
+    * ride the codegen references array, so a round's generated code is
+    * round-invariant (codegen cache hits) and the argmin is one
+    * primitive loop; ties go to the smallest code, as in the literal
+    * HOF form it is spec-asserted bit-identical to.
+    */
+  private[graft] def subspaceCode(books: Array[Array[(Int, Seq[Double])]]): Column =
+    Bridge.column(graft.functions.SubspaceNearestExpr(
+      Bridge.expression(col("emb")), Bridge.expression(col("sub")),
+      books.map(_.map(_._1)), books.map(_.map(_._2.toArray))))
 
   /** nemb = emb / ‖emb‖ with the norm HOISTED to its own column: a
     * `transform` lambda re-evaluates any subexpression per ELEMENT

@@ -1,10 +1,9 @@
 package graft.operators
 
-import graft.sources.GraftCatalog
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import TpchExprs.{cat, dsum, revenueExpr, ts}
 
 /** §2.B completion: the six TPC-H join/subquery topologies not yet in
   * Relational/Analytic — Q2 (correlated min), Q11 (HAVING vs global
@@ -27,16 +26,6 @@ import org.apache.spark.sql.types.DecimalType
   * aliases and ORDER BY on both sides.
   */
 object TpchPatterns {
-
-  private def cat(s: SparkSession, dir: String) = new GraftCatalog(s, dir)
-
-  private def ts(v: String) = to_timestamp(lit(v))
-
-  private def revenueExpr = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(28, 6))).cast("double")
-
-  private def dsumr(c: Column, scale: Int = 2): Column = round(dsum(c), scale)
 
   /** Derived supply relation: per (partkey, suppkey), the observed
     * unit cost in integer micros — floor(sum(price)*1e6 / sum(qty)).

@@ -331,15 +331,10 @@ final class GraftCatalog(spark: SparkSession, root: String) {
     // (parquet immutability — publish cost is O(new files), never
     // O(table)); uncovered files take the bounded parallel footer
     // pool. Computed once outside the id-collision retry loop.
-    // `spark.graft.publish.rgStats=false` skips recording (readers
-    // then fall back to the parallel footer pool).
-    val statsLines =
-      if (!spark.conf.get("spark.graft.publish.rgStats", "true").toBoolean)
-        Seq.empty[String]
-      else graft.sources.v2.GraftPlanStats.statsLines(pin.files,
-        spark.sessionState.newHadoopConf(),
-        prior = graft.sources.v2.GraftPlanStats.rawForTable(
-          s"$root/$name.parquet", spark.sessionState.newHadoopConf()))
+    val statsLines = graft.sources.v2.GraftPlanStats.statsLines(pin.files,
+      spark.sessionState.newHadoopConf(),
+      prior = graft.sources.v2.GraftPlanStats.rawForTable(
+        s"$root/$name.parquet", spark.sessionState.newHadoopConf()))
     // the PUBLISH INSTANT lives INSIDE the manifest body (second line,
     // so TIMESTAMP-AS-OF resolution needs only a bounded head read):
     // file mtime is fs-level state an fs copy / restore / distcp

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, max, regexp_replace}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, max}
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
@@ -270,9 +270,6 @@ object GraftMor {
     else Some(s.read.schema("dv_file STRING, dv_pos BIGINT")
       .parquet(sc.dv.map(_._1): _*).select("dv_file", "dv_pos"))
 
-  private def dvFrame(s: SparkSession, tablePath: String): Option[DataFrame] =
-    dvFrame(s, sidecars(s, tablePath))
-
   /** Next epoch number for a sidecar flavor: one past the max of the
     * LISTED epochs and the compaction HIGH-WATER MARK — epoch numbers
     * are globally monotone per (table, flavor), so a consumer that
@@ -400,9 +397,6 @@ object GraftMor {
       val df = s.read.schema(schema).parquet(sc.eq.map(_._1): _*)
       Some(if (df.columns.contains("epoch")) df.drop("epoch") else df)
     }
-
-  private def eqFrame(s: SparkSession, tablePath: String): Option[DataFrame] =
-    eqFrame(s, sidecars(s, tablePath))
 
   /** The file→sequence manifest (A45), or None when no eq-upsert has
     * ever appended. Files absent from the manifest are base files:

@@ -1403,21 +1403,30 @@ object GraftV2 {
     def broadcastId: Option[Long] = Option(bc).map(_.id)
   }
 
-  /** The broadcast that carries `content` on `sc`. */
-  private final case class Shipped(sc: org.apache.spark.SparkContext,
-      content: Map[String, String], handle: SessionConf)
-  private val shipLock = new Object
-  private var shipped: Shipped = _
+  /** Conf broadcasts kept for the current SparkContext, keyed by conf
+    * content, least recently used first: room for a session and the
+    * cloned sessions its streaming queries plan under, whose confs
+    * differ in a few SQL keys.
+    */
+  private val MaxShipped = 4
+  private val shipped =
+    new java.util.LinkedHashMap[Map[String, String], SessionConf](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[Map[String, String], SessionConf]): Boolean =
+        size() > MaxShipped
+    }
+  private var shippedSc: org.apache.spark.SparkContext = _
 
   /** The session's Hadoop conf for executor-side use, so a store
     * needing configured credentials (spark.hadoop.fs.s3a.* etc.) works
     * through this connector exactly as it does through GraftCatalog.
-    * One broadcast per SparkContext is reused while the session's
-    * `newHadoopConf()` content is unchanged and replaced when it
-    * changes (a `spark.conf.set`, a streaming query's cloned session).
-    * A replaced broadcast is cleaned once no plan holds its handle.
-    * Falls back to an inline conf when no live session is active
-    * (driver-less unit use, executor threads).
+    * Each distinct `newHadoopConf()` content gets one broadcast per
+    * SparkContext, reused whenever a session with that content asks
+    * again (a `spark.conf.set` and back, or a streaming query's cloned
+    * session alternating with the main one). An evicted broadcast is
+    * cleaned once no plan holds its handle. Falls back to an inline
+    * conf when no live session is active (driver-less unit use,
+    * executor threads).
     */
   def sessionConf(): SessionConf =
     SparkSession.getActiveSession.filterNot(_.sparkContext.isStopped) match {
@@ -1426,13 +1435,14 @@ object GraftV2 {
         val conf = s.sessionState.newHadoopConf()
         val content = conf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
         val sc = s.sparkContext
-        shipLock.synchronized {
-          val cur = shipped
-          if (cur != null && (cur.sc eq sc) && cur.content == content) cur.handle
-          else {
-            val h = new SessionConf(sc.broadcast(new SerializableConfiguration(conf)), null)
-            shipped = Shipped(sc, content, h)
-            h
+        shipped.synchronized {
+          if (shippedSc ne sc) { shipped.clear(); shippedSc = sc }
+          shipped.get(content) match {
+            case null =>
+              val h = new SessionConf(sc.broadcast(new SerializableConfiguration(conf)), null)
+              shipped.put(content, h)
+              h
+            case h => h
           }
         }
     }

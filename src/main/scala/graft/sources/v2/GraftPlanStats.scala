@@ -4,7 +4,6 @@ import java.util.Base64
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.metadata.BlockMetaData
-import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
@@ -178,9 +177,8 @@ object GraftPlanStats {
     * manifest already covers re-emit their recorded lines verbatim
     * (parquet immutability — publish cost is O(new files), not
     * O(table)); only uncovered files take the bounded parallel footer
-    * pool (`spark.graft.plan.footerThreads`, default 16). Line order
-    * is deterministic (caller's file order, each file's groups
-    * contiguous).
+    * pool (16 threads). Line order is deterministic (caller's file
+    * order, each file's groups contiguous).
     */
   def statsLines(files: Seq[(String, Long)], conf: Configuration,
       prior: Map[String, FileStats] = Map.empty): Seq[String] = {
@@ -200,7 +198,7 @@ object GraftPlanStats {
     */
   def mapParallel[A, B](items: Seq[A])(f: A => B): Seq[B] = {
     if (items.sizeIs <= 1) return items.map(f)
-    val threads = math.min(items.size, footerThreads)
+    val threads = math.min(items.size, FooterThreads)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     try {
       val futs = items.map(a => pool.submit(
@@ -213,10 +211,8 @@ object GraftPlanStats {
     } finally pool.shutdownNow()
   }
 
-  private def footerThreads: Int =
-    try org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.plan.footerThreads", "16").toInt
-    catch { case _: Exception => 16 }
+  /** Footer reads in flight at once: each is one small remote GET. */
+  private val FooterThreads = 16
 
   /** One file's stats lines from its footer blocks. */
   def encodeFile(path: String, len: Long,

@@ -66,7 +66,7 @@ class AsOfJoinSpec extends SparkSpecBase {
 
   test("native as-of equals the composed join+window form on real data") {
     val native = Analytic.qAsofEventOrder(spark, sfDir).collect().map(_.toString)
-    val composed = Analytic.qAsofEventOrderComposed(spark, sfDir).collect().map(_.toString)
+    val composed = KernelReference.qAsofEventOrderComposed(spark, sfDir).collect().map(_.toString)
     assert(native.length === composed.length)
     assert(native.toSeq === composed.toSeq)
   }

@@ -60,6 +60,13 @@ class ConfShippingSpec extends SparkSpecBase {
     }
   }
 
+  test("confs that alternate reuse one broadcast each") {
+    val ids = for (_ <- 1 to 3; v <- Seq("a", "b"))
+      yield withProbe(v)(GraftV2.sessionConf().broadcastId)
+    assert(ids.forall(_.isDefined))
+    assert(ids.distinct.size === 2, s"broadcast ids: $ids")
+  }
+
   test("a replaced handle survives GC while a plan still holds it") {
     val df = spark.read.format("graft").load(s"$sfDir/orders.parquet")
     val held = df.queryExecution.optimizedPlan.collectFirst {

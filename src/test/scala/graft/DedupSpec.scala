@@ -286,7 +286,7 @@ class DedupSpec extends SparkSpecBase {
     val documents = new graft.sources.GraftCatalog(spark, sfDir).table("documents")
     val native = Dedup.wordGramHashesOf(documents)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val hof = Dedup.wordGramHashesHof(documents)
+    val hof = KernelReference.wordGramHashesHof(documents)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     assert(native.nonEmpty && native === hof,
       s"native=${native.size} hof=${hof.size}; diff=${(native -- hof).take(3)}")

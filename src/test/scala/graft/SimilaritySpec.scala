@@ -226,40 +226,30 @@ class SimilaritySpec extends SparkSpecBase {
     assert(got === 1)
   }
 
-  test("Lloyd rounds with the broadcast codebook carrier are bit-identical to the literal plan") {
+  test("Lloyd rounds assign natively exactly as the literal HOF plan, round by round") {
     import graft.sources.GraftCatalog
-    // single partition: the claim under test is EXPRESSION identity
-    // (broadcast-carried centroid arrays evaluate the same arithmetic
-    // as plan literals). One input partition pins the only other
-    // degree of freedom — float merge order of avg() partials across
-    // shuffle fetch arrival — so any bit difference here is the
-    // carrier's fault, not the shuffle's.
+    // The mean step is shared code, so equal assignments in every round
+    // mean equal centroids: comparing the native assignment with the
+    // literal HOF plan's on the centroids and codebooks after 0, 1 and
+    // 2 rounds covers every round of a 2-round training.
     val e = new GraftCatalog(spark, sfDir).table("embeddings")
       .select(col("vec_id"), VectorFns.toDoubleArray(col("embedding")).as("emb"))
-      .coalesce(1)
-    def bits(cs: Array[(Int, Seq[Double])]) =
-      cs.toVector.map { case (i, v) =>
-        (i, v.toVector.map(java.lang.Double.doubleToRawLongBits)) }
     val sample = Similarity.trainingSample(e)
-    // three round-assignment carriers must train identical centroids:
-    // the HOF literal plan (reference), the HOF one-row broadcast
-    // carrier, and the default native expression
-    val viaLiteral = Similarity.kmeansCentroids(sample, k = 6, iters = 2,
-      assign = Similarity.assignCentroidsHof(_, _))
-    val viaBroadcast = Similarity.kmeansCentroids(sample, k = 6, iters = 2,
-      assign = Similarity.assignCentroidsRound(_, _))
-    val viaNative = Similarity.kmeansCentroids(sample, k = 6, iters = 2)
-    assert(bits(viaLiteral) === bits(viaBroadcast))
-    assert(bits(viaLiteral) === bits(viaNative))
-    // PQ subspace codebooks, same invariant via the literalRounds flag
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("vec_id", "centroid_id").collect()
+        .map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1).toVector
     val e2 = e.withColumn("nemb", col("emb"))
-    val viaLitBooks = Similarity.trainSubspaceCodebooks(
-      e2, m = 4, subDim = 16, ksub = 8, iters = 2, literalRounds = true)
-    val viaBcBooks = Similarity.trainSubspaceCodebooks(
-      e2, m = 4, subDim = 16, ksub = 8, iters = 2)
-    assert(viaLitBooks.length === viaBcBooks.length)
-    viaLitBooks.zip(viaBcBooks).foreach { case (a, b) =>
-      assert(bits(a) === bits(b))
+    val rows = Similarity.subspaceRows(e2, m = 4, subDim = 16)
+    def codes(code: org.apache.spark.sql.Column) =
+      rows.select(col("vec_id"), col("sub"), code).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).sortBy(r => (r._1, r._2)).toVector
+    for (iters <- 0 to 2) {
+      val cents = Similarity.kmeansCentroids(sample, k = 6, iters = iters)
+      assert(ids(Similarity.assignCentroids(sample, cents)) ===
+        ids(KernelReference.assignCentroidsHof(sample, cents)), s"centroids after $iters rounds")
+      val books = Similarity.trainSubspaceCodebooks(e2, m = 4, subDim = 16, ksub = 8, iters = iters)
+      assert(codes(Similarity.subspaceCode(books)) ===
+        codes(KernelReference.subspaceCodeHof(books)), s"codebooks after $iters rounds")
     }
   }
 
@@ -273,7 +263,7 @@ class SimilaritySpec extends SparkSpecBase {
         java.lang.Double.doubleToRawLongBits(r.getDouble(1)))).sortBy(_._1).toVector
     // dot: native vs aggregate(zip_with) — same accumulation order
     val dotN = lbits(e.select(col("vec_id"), VectorFns.dot(col("emb"), col("emb"))))
-    val dotH = lbits(e.select(col("vec_id"), VectorFns.dotHof(col("emb"), col("emb"))))
+    val dotH = lbits(e.select(col("vec_id"), KernelReference.dotHof(col("emb"), col("emb"))))
     assert(dotN === dotH)
     // normalize: native one-loop vs the hoisted-norm HOF chain
     def abits(df: org.apache.spark.sql.DataFrame) =
@@ -298,9 +288,9 @@ class SimilaritySpec extends SparkSpecBase {
       df.select("vec_id", "centroid_id").collect()
         .map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1).toVector
     assert(ibits(Similarity.assignCentroids(e, cents)) ===
-      ibits(Similarity.assignCentroidsHof(e, cents)))
+      ibits(KernelReference.assignCentroidsHof(e, cents)))
     assert(ibits(Similarity.assignCentroids(e, cents, useCosine = false)) ===
-      ibits(Similarity.assignCentroidsHof(e, cents,
+      ibits(KernelReference.assignCentroidsHof(e, cents,
         (a, b) => -VectorFns.l2sq(a, b))))
     // ADC lookup-sum: native vs aggregate(zip_with(element_at))
     val tabs = Seq(Seq(0.25, -1.5, 3.0), Seq(2.0, 0.125, -7.0))
