@@ -509,12 +509,12 @@ object Hnsw {
       : org.apache.spark.sql.streaming.StreamingQuery =
     vecs.writeStream
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          id: Long) => applyHnswBatch(b, id, indexPath) }
+          _: Long) => applyHnswBatch(b, indexPath) }
       .start()
 
   private[graft] def applyHnswBatch(
       batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-      batchId: Long, indexPath: String): Unit = {
+      indexPath: String): Unit = {
     val s = batch.sparkSession
     val fs = new org.apache.hadoop.fs.Path(indexPath)
       .getFileSystem(s.sessionState.newHadoopConf())

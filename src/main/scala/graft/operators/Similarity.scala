@@ -316,7 +316,7 @@ object Similarity {
       : org.apache.spark.sql.streaming.StreamingQuery =
     vecs.writeStream
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          id: Long) => applyVectorBatch(b, id, indexPath) }
+          _: Long) => applyVectorBatch(b, indexPath) }
       .start()
 
   /** In-batch dedup + persisted anti-join — the exactly-once core
@@ -355,7 +355,7 @@ object Similarity {
 
   private[graft] def applyVectorBatch(
       batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-      batchId: Long, indexPath: String): Unit = {
+      indexPath: String): Unit = {
     val s = batch.sparkSession
     val fresh = freshVectors(batch.toDF(), indexPath, "vectorIndexSink")
     try if (!fresh.isEmpty) ivfAppend(s, indexPath, fresh)

@@ -48,6 +48,10 @@ final class GraftCatalog(spark: SparkSession, root: String) {
   private val pinnedMor =
     scala.collection.concurrent.TrieMap.empty[String, GraftMor.Sidecars]
 
+  private def rootFs: org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+
   private def morPin(name: String): GraftMor.Sidecars =
     pinnedMor.getOrElseUpdate(name,
       GraftMor.sidecars(spark, s"$root/$name.parquet"))
@@ -246,17 +250,18 @@ final class GraftCatalog(spark: SparkSession, root: String) {
     // diff (a morDelete changes no file); the mutation-aware route is
     // the A49 feed — refuse BY NAME rather than emit a silently
     // incomplete feed
-    Seq(fromId, toId).foreach { id =>
-      val sc = readManifestSidecars(name, id)
-      if (sc.any) throw new IllegalStateException(
+    val m1 = manifest(name, fromId)
+    val m2 = manifest(name, toId)
+    Seq(fromId -> m1, toId -> m2).foreach { case (id, m) =>
+      if (m.sidecars.any) throw new IllegalStateException(
         s"[GRAFT] changesBetween cannot diff [$name] v$id: the epoch " +
           "records live mutation-sidecar state, whose row deltas a " +
           "file-set diff cannot see - use GraftMor.publishMorFeed (the " +
           "mutation-aware change feed), or fold with morCompact and " +
           "republish")
     }
-    val (rootIsDir1, f1) = readManifest(name, fromId)
-    val (rootIsDir2, f2) = readManifest(name, toId)
+    val (rootIsDir1, f1) = (m1.rootIsDir, m1.paths)
+    val (rootIsDir2, f2) = (m2.rootIsDir, m2.paths)
     val removed = (f1.toSet -- f2.toSet).toSeq.sorted
     val added = (f2.toSet -- f1.toSet).toSeq.sorted
     def readSide(files: Seq[String], rootIsDir: Boolean): DataFrame = {
@@ -306,7 +311,7 @@ final class GraftCatalog(spark: SparkSession, root: String) {
     */
   def publishSnapshot(name: String): Long = {
     val pin = pinned(name)
-    val dir = new org.apache.hadoop.fs.Path(s"$root/$SnapshotDir/$name")
+    val dir = SnapshotManifest.dir(root, name)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     fs.mkdirs(dir)
     // the epoch pins the table STATE, not just the file set: live
@@ -314,16 +319,11 @@ final class GraftCatalog(spark: SparkSession, root: String) {
     // schema publish WITH the data files, so `tableAsOf` of an epoch
     // published after a morDelete/morUpsert serves the post-mutation
     // state — the reference's snapshot transaction is of the table
-    // state (ArgodbMapreduceInputFormat.java:257-279). `#`-prefixed
-    // extension lines; sidecar parquet is immutable like data files.
+    // state (ArgodbMapreduceInputFormat.java:257-279); sidecar parquet
+    // is immutable like data files.
     val sc = morPin(name)
-    val sidecarLines =
-      sc.dv.map { case (p, l) => s"#sidecar\tdv\t$l\t$p" } ++
-      sc.eq.map { case (p, l) => s"#sidecar\teq\t$l\t$p" } ++
-      sc.seqm.map { case (p, l) => s"#sidecar\tseqm\t$l\t$p" } ++
-      sc.schemaDdl.map(d => s"#schema\t$d").toSeq
-    // per-file, per-row-group planning stats (`#rgf`/`#rg` extension
-    // lines — row counts, byte ranges, prunable-column min/max): one
+    // per-file, per-row-group planning stats (the manifest's stats
+    // section — row counts, byte ranges, prunable-column min/max): one
     // footer pass per NEW file at publish buys ZERO-footer scan
     // planning for every later read (the reference's one-metadata-read
     // split planning, ArgodbMapreduceInputFormat.java:104-199). Files
@@ -335,61 +335,27 @@ final class GraftCatalog(spark: SparkSession, root: String) {
       spark.sessionState.newHadoopConf(),
       prior = graft.sources.v2.GraftPlanStats.rawForTable(
         s"$root/$name.parquet", spark.sessionState.newHadoopConf()))
-    // the PUBLISH INSTANT lives INSIDE the manifest body (second line,
-    // so TIMESTAMP-AS-OF resolution needs only a bounded head read):
-    // file mtime is fs-level state an fs copy / restore / distcp
-    // rewrites, which would silently re-address every epoch
-    // create(overwrite=false) makes concurrent publishers atomic: the
-    // loser RE-DERIVES the next id and retries (the A59 allocator
+    // the PUBLISH INSTANT lives INSIDE the manifest body: file mtime
+    // is fs-level state an fs copy / restore / distcp rewrites, which
+    // would silently re-address every epoch.
+    // create-if-absent makes concurrent publishers atomic: the loser
+    // RE-DERIVES the next id and retries (the A59 allocator
     // discipline) instead of throwing, so publishers interleave
     var attempt = 0
     var committed = -1L
     while (committed < 0) {
       val id = snapshotIds(name).lastOption.getOrElse(0L) + 1L
-      // stats lines go LAST-but-one so the `#publishedAt` head read
-      // (bounded 512-byte probe) keeps finding the instant near the
-      // top; the `#complete` TERMINATOR is the final line — the body
-      // streams AFTER the create() that makes the file lister-visible,
-      // so consumers that plan live work from a manifest (scan stats,
-      // the table-tail stream) require the terminator and treat its
-      // absence as in-flight/torn, never a silently-partial read
-      val body = (Seq(s"rootIsDir=${pin.rootIsDir}",
-        s"#publishedAt\t${System.currentTimeMillis()}") ++
-        (pin.files.map { case (p, l) => s"$l\t$p" } ++ sidecarLines) ++
-        statsLines :+ graft.sources.v2.GraftPlanStats.Complete)
-        .mkString("\n")
-      // only the CREATE participates in the race; a failure of the
-      // body write itself (disk full) must propagate, not retry.
-      // Retry ONLY on the actual collision signal — the manifest
-      // exists (FileAlreadyExists, or any IOException while the path
-      // is observably present); a persistent fault (permissions,
-      // quota) propagates immediately instead of spinning 100 blind
-      // rounds into a misleading 'publisher storm'.
-      val manifest = new org.apache.hadoop.fs.Path(dir, s"v$id")
-      val created =
-        try Some(fs.create(manifest, false))
-        catch {
-          case e: java.io.IOException =>
-            // the existence probe lives in the BODY, not a pattern
-            // guard: a guard-thrown IOException would escape the match
-            // and mask the informative create failure
-            val collided =
-              e.isInstanceOf[org.apache.hadoop.fs.FileAlreadyExistsException] ||
-                e.isInstanceOf[java.nio.file.FileAlreadyExistsException] ||
-                (try fs.exists(manifest)
-                 catch { case _: java.io.IOException => false })
-            if (!collided) throw e
-            attempt += 1 // lost the race: re-derive one higher
-            if (attempt >= 100) throw new IllegalStateException(
-              s"[GRAFT] publishSnapshot($name) contended $attempt times - " +
-                "publisher storm or a filesystem that cannot " +
-                "create-if-absent; serialize publishers externally", e)
-            None
-        }
-      created.foreach { out =>
-        try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        committed = id
+      val m = SnapshotManifest.Manifest(pin.rootIsDir,
+        Some(System.currentTimeMillis()), pin.files, sc, statsLines,
+        complete = true)
+      SnapshotManifest.create(fs, dir, id, m) match {
+        case Right(()) => committed = id
+        case Left(collision) =>
+          attempt += 1 // lost the race: re-derive one higher
+          if (attempt >= 100) throw new IllegalStateException(
+            s"[GRAFT] publishSnapshot($name) contended $attempt times - " +
+              "publisher storm or a filesystem that cannot " +
+              "create-if-absent; serialize publishers externally", collision)
       }
     }
     committed
@@ -414,32 +380,15 @@ final class GraftCatalog(spark: SparkSession, root: String) {
     require(tag.nonEmpty && !tag.contains("/"),
       s"[GRAFT] bad tag name: '$tag'")
     val epochs = tables.map(t => t -> publishSnapshot(t))
-    val dir = new org.apache.hadoop.fs.Path(s"$root/$SnapshotDir/_tags")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.mkdirs(dir)
-    val out = fs.create(new org.apache.hadoop.fs.Path(dir, tag), false)
-    try out.write(epochs.map { case (t, id) => s"$t\t$id" }.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    SnapshotManifest.writeTag(rootFs, root, tag, epochs)
     epochs.toMap
   }
 
   /** The (table, epoch) pairs a tag pinned. */
-  def readTag(tag: String): Map[String, Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/$SnapshotDir/_tags/$tag")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(p), s"[GRAFT] no published tag '$tag' under $root")
-    val in = fs.open(p)
-    val body = try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 65536, false)
-      bytes.toString(java.nio.charset.StandardCharsets.UTF_8.name())
-    } finally in.close()
-    body.split("\n").filter(_.nonEmpty).map { line =>
-      val Array(t, id) = line.split("\t", 2)
-      t -> id.toLong
-    }.toMap
-  }
+  def readTag(tag: String): Map[String, Long] =
+    SnapshotManifest.readTag(rootFs, root, tag).getOrElse(
+      throw new IllegalArgumentException(
+        s"[GRAFT] no published tag '$tag' under $root"))
 
   /** Read `name` AS OF the epoch a tag pinned for it. */
   def tableAtTag(tag: String, name: String): DataFrame = {
@@ -451,13 +400,8 @@ final class GraftCatalog(spark: SparkSession, root: String) {
   }
 
   /** Published epoch ids for `name`, ascending. */
-  def snapshotIds(name: String): Seq[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$root/$SnapshotDir/$name")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith("v") => n.drop(1).toLong }.sorted
-  }
+  def snapshotIds(name: String): Seq[Long] =
+    SnapshotManifest.ids(rootFs, SnapshotManifest.dir(root, name))
 
   /** Read `name` AS OF published epoch `id`: exactly the files that
     * epoch's manifest names — WITH the mutation masks the manifest
@@ -473,20 +417,10 @@ final class GraftCatalog(spark: SparkSession, root: String) {
     * COW rewrite causes on data files).
     */
   def tableAsOf(name: String, id: Long): DataFrame = {
-    val (rootIsDir, files) = readManifest(name, id)
+    val m = manifest(name, id)
+    val (rootIsDir, files, sc) = (m.rootIsDir, m.paths, m.sidecars)
     require(files.nonEmpty, s"[GRAFT] Snapshot v$id of [$name] lists no files")
-    val sc = readManifestSidecars(name, id)
-    if (sc.any || sc.seqm.nonEmpty) {
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      val gone = (sc.dv ++ sc.eq ++ sc.seqm).map(_._1)
-        .filterNot(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-      require(gone.isEmpty,
-        s"[GRAFT] Snapshot v$id of [$name] records mutation-sidecar state " +
-          s"that a compaction has since folded (e.g. ${gone.headOption.getOrElse("")}) - " +
-          "the masked historical state is no longer reconstructible; " +
-          "republish after morCompact for addressable history")
-    }
+    m.requireSidecarsLive(rootFs, s"Snapshot v$id of [$name]")
     val reader = spark.read
     sc.schemaDdl match {
       case Some(d) =>
@@ -506,65 +440,31 @@ final class GraftCatalog(spark: SparkSession, root: String) {
       unlessSame = sc.eq)
   }
 
-  private def manifestLines(name: String, id: Long): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/$SnapshotDir/$name/v$id")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(p),
-      s"[GRAFT] Table [$name] has no published snapshot v$id under $root")
-    val in = fs.open(p)
-    val body = try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 65536, false)
-      bytes.toString(java.nio.charset.StandardCharsets.UTF_8.name())
-    } finally in.close()
-    val lines = body.split("\n").toSeq
-    // torn-read guard: the body streams AFTER the create() that makes
-    // the manifest lister-visible; a body carrying recorded stats
-    // (`#rgf`) but no `#complete` terminator is an in-flight or
-    // crashed publish — refuse rather than serve a partial file list.
-    // (Terminator-less bodies WITHOUT stats lines are grandfathered:
-    // manifests written before the terminator existed.)
-    if (lines.exists(_.startsWith("#rgf\t")) &&
-        !lines.lastOption.exists(_.startsWith(
-          graft.sources.v2.GraftPlanStats.Complete)))
+  /** Published epoch `id` of `name`, read once: its files, the
+    * merge-on-read sidecar state it RECORDED (the masks an AS-OF read
+    * composes; empty for unmutated tables and for manifests written
+    * before sidecar recording) and its stats. A torn body — a line
+    * cut short, or stats lines but no completeness terminator: an
+    * in-flight or crashed publish — refuses rather than serve a
+    * partial file list.
+    */
+  private[sources] def manifest(name: String,
+      id: Long): SnapshotManifest.Manifest = {
+    val m = SnapshotManifest.read(rootFs, SnapshotManifest.dir(root, name), id)
+      .getOrElse(throw new IllegalArgumentException(
+        s"[GRAFT] Table [$name] has no published snapshot v$id under $root"))
+    if (m.torn)
       throw new IllegalStateException(
-        s"[GRAFT] Snapshot v$id of [$name] is in-flight or torn (stats " +
-          "lines present but no completeness terminator) - retry when " +
-          "the publish completes, or republish if the publisher crashed")
-    lines
+        s"[GRAFT] Snapshot v$id of [$name] is in-flight or torn (a line " +
+          "cut short, or stats lines but no completeness terminator) - " +
+          "retry when the publish completes, or republish if the " +
+          "publisher crashed")
+    m
   }
 
-  private def readManifest(name: String, id: Long): (Boolean, Seq[String]) = {
-    val lines = manifestLines(name, id)
-    (lines.head == "rootIsDir=true",
-      lines.tail.filter(l => l.nonEmpty && !l.startsWith("#"))
-        .map(_.split("\t", 2)(1)))
-  }
-
-  /** The merge-on-read sidecar state a published epoch RECORDED — the
-    * masks `tableAsOf` must compose to serve the table state as of the
-    * publish. Empty for epochs of unmutated tables (and for manifests
-    * written before sidecar recording — those tables carried no
-    * serving contract for AS-OF masks).
-    */
-  private[sources] def readManifestSidecars(name: String,
-      id: Long): GraftMor.Sidecars = {
-    val ext = manifestLines(name, id).filter(_.startsWith("#"))
-    def flavor(k: String): Seq[(String, Long)] = ext.collect {
-      case l if l.startsWith(s"#sidecar\t$k\t") =>
-        val Array(_, _, len, path) = l.split("\t", 4)
-        (path, len.toLong)
-    }
-    GraftMor.Sidecars(flavor("dv"), flavor("eq"), flavor("seqm"),
-      ext.collectFirst { case l if l.startsWith("#schema\t") =>
-        l.split("\t", 2)(1) })
-  }
-
-  /** The file paths a published epoch's manifest names — the SQL
-    * catalog's `VERSION AS OF` entry point.
-    */
+  /** The file paths a published epoch's manifest names. */
   def snapshotFilesAsOf(name: String, id: Long): Seq[String] =
-    readManifest(name, id)._2
+    manifest(name, id).paths
 
   /** A40: snapshot EXPORT — the cross-system data-sharing handoff
     * (the Delta-Sharing / Iceberg-metadata shape): a published epoch
@@ -586,8 +486,8 @@ final class GraftCatalog(spark: SparkSession, root: String) {
     // when a CURRENT erase sidecar exists (GDPR erasure is retroactive
     // — an export must not hand erased keys to a reader the mask can
     // never reach)
-    val sc = readManifestSidecars(name, id)
-    if (sc.any) throw new IllegalStateException(
+    val m = manifest(name, id)
+    if (m.sidecars.any) throw new IllegalStateException(
       s"[GRAFT] exportSnapshot of [$name] v$id refused: the epoch records " +
         "live mutation-sidecar state a foreign parquet reader cannot " +
         "apply - fold with morCompact and republish first")
@@ -597,7 +497,7 @@ final class GraftCatalog(spark: SparkSession, root: String) {
           "live equality/erase sidecar; an export cannot be masked after " +
           "the fact (GDPR erasure is retroactive) - fold with morCompact " +
           "first")
-    val (_, files) = readManifest(name, id)
+    val files = m.paths
     val schemaDdl = tableAsOf(name, id).schema.toDDL
     def esc(v: String) = v.replace("\\", "\\\\").replace("\"", "\\\"")
     val json =
@@ -606,9 +506,7 @@ final class GraftCatalog(spark: SparkSession, root: String) {
         files.map(f => "\"" + esc(f) + "\"").mkString("\"files\":[", ",", "]}")
     val p = new org.apache.hadoop.fs.Path(outFile)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    GraftIO.writeText(fs, p, json, overwrite = true)
     files
   }
 
@@ -644,48 +542,25 @@ final class GraftCatalog(spark: SparkSession, root: String) {
       s"""{"table":"${esc(name)}","epoch":$id,"materialized":true,""" +
         s""""schema":"${esc(df.schema.toDDL)}",""" +
         files.map(f => "\"" + esc(f) + "\"").mkString("\"files\":[", ",", "]}")
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$outDir/manifest.json"), true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    GraftIO.writeText(fs, new org.apache.hadoop.fs.Path(s"$outDir/manifest.json"),
+      json, overwrite = true)
     files
   }
 
-  /** The wall-clock instant a manifest RECORDED at publish (its
-    * `#publishedAt` extension line — second line by construction, so
-    * this is one bounded head read, never a full-manifest scan), or
-    * None for manifests published before instants were recorded.
-    */
-  private[sources] def publishInstant(name: String, id: Long): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/$SnapshotDir/$name/v$id")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    val head = try {
-      val buf = new Array[Byte](512)
-      var off = 0
-      var n = in.read(buf, off, buf.length - off)
-      while (n > 0 && off < buf.length) {
-        off += n; n = in.read(buf, off, buf.length - off)
-      }
-      new String(buf, 0, off, java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
-    head.split("\n").find(_.startsWith("#publishedAt\t"))
-      .flatMap(l => scala.util.Try(l.split("\t", 2)(1).toLong).toOption)
-  }
-
-  /** The newest published epoch whose RECORDED publish instant (the
-    * `#publishedAt` line inside the manifest body) is at or before
-    * `epochMs` — the `TIMESTAMP AS OF` resolution rule. The instant
+  /** The newest published epoch whose RECORDED publish instant (a
+    * line inside the manifest body) is at or before `epochMs` — the
+    * `TIMESTAMP AS OF` resolution rule. The instant
     * lives in the manifest, NOT in file mtime: an fs-level copy,
     * restore or distcp rewrites mtimes, which would silently
     * re-address every epoch. Manifests published before instants were
     * recorded fall back to mtime (their only signal).
     */
   def snapshotIdAt(name: String, epochMs: Long): Long = {
-    val dir = new org.apache.hadoop.fs.Path(s"$root/$SnapshotDir/$name")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val dir = SnapshotManifest.dir(root, name)
+    val fs = rootFs
     val at = snapshotIds(name).filter { id =>
-      publishInstant(name, id).getOrElse(
-        fs.getFileStatus(new org.apache.hadoop.fs.Path(dir, s"v$id"))
+      SnapshotManifest.publishedAt(fs, dir, id).getOrElse(
+        fs.getFileStatus(SnapshotManifest.file(dir, id))
           .getModificationTime) <= epochMs
     }
     require(at.nonEmpty,
@@ -712,16 +587,16 @@ final class GraftCatalog(spark: SparkSession, root: String) {
     // (same listings, typically both empty) — otherwise the restored
     // files would serve under masks the epoch never saw, or lose
     // masks it recorded. Refuse BY NAME; fold both states first.
-    val scThen = readManifestSidecars(name, id)
+    val m = manifest(name, id)
+    val scThen = m.sidecars
     val scNow = GraftMor.sidecars(spark, s"$root/$name.parquet")
     require(scThen.dv == scNow.dv && scThen.eq == scNow.eq &&
         scThen.seqm == scNow.seqm,
       s"[GRAFT] restoreSnapshot of [$name] to v$id refused: the " +
         "mutation-sidecar state differs from what the epoch recorded - " +
         "fold with morCompact (and republish) before restoring")
-    val (_, files) = readManifest(name, id)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val files = m.paths
+    val fs = rootFs
     val missing = files.filterNot(p =>
       fs.exists(new org.apache.hadoop.fs.Path(p)))
     require(missing.isEmpty,
@@ -737,9 +612,9 @@ final class GraftCatalog(spark: SparkSession, root: String) {
     // the new id allocates past them, so an expired id is never reused
     // (a reader holding "v2" must not silently resolve to new data)
     val newId = publishSnapshot(name)
-    val dir = new org.apache.hadoop.fs.Path(s"$root/$SnapshotDir/$name")
+    val dir = SnapshotManifest.dir(root, name)
     snapshotIds(name).filter(v => v > id && v < newId).foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(dir, s"v$v"), false))
+      fs.delete(SnapshotManifest.file(dir, v), false))
     newId
   }
 
@@ -774,7 +649,7 @@ final class GraftCatalog(spark: SparkSession, root: String) {
     require(rules.nonEmpty, "[GRAFT] publishAudited needs at least one audit rule")
     val current = listDataFiles(spark, s"$root/$name.parquet")
     val published: Set[String] = snapshotIds(name).lastOption
-      .map(readManifest(name, _)._2.toSet).getOrElse(Set.empty)
+      .map(manifest(name, _).paths.toSet).getOrElse(Set.empty)
     val staged = current.files.map(_._1).filterNot(published)
     if (staged.isEmpty) {
       // nothing new: the tip already covers the directory; keep the
@@ -800,21 +675,8 @@ final class GraftCatalog(spark: SparkSession, root: String) {
       // hive-path STRING inference (a small value types as INT), not
       // from any file footer — the marker DDL is their truth and every
       // read surface serves it
-      val declaredPartCols: Set[String] = {
-        val p = new org.apache.hadoop.fs.Path(
-          s"$root/$name.parquet/${GraftMor.SchemaDir}/partcols")
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        if (!fs.exists(p)) Set.empty
-        else {
-          val in = fs.open(p)
-          val body = try {
-            val bytes = new java.io.ByteArrayOutputStream()
-            org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 65536, false)
-            bytes.toString(java.nio.charset.StandardCharsets.UTF_8.name())
-          } finally in.close()
-          body.split(",").filter(_.nonEmpty).toSet
-        }
-      }
+      val declaredPartCols: Set[String] =
+        GraftMor.readPartCols(rootFs, s"$root/$name.parquet").toSet
       def changeName(c: GraftSchemaPolicy.Change): String = c match {
         case GraftSchemaPolicy.AddedColumn(n, _) => n
         case GraftSchemaPolicy.DroppedColumn(n) => n
@@ -854,11 +716,10 @@ final class GraftCatalog(spark: SparkSession, root: String) {
     */
   def expireSnapshots(name: String, keepLast: Int): Seq[Long] = {
     require(keepLast >= 1, "[GRAFT] keepLast must retain at least one snapshot")
-    val dir = new org.apache.hadoop.fs.Path(s"$root/$SnapshotDir/$name")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val dir = SnapshotManifest.dir(root, name)
     val doomed = snapshotIds(name).dropRight(keepLast)
-    doomed.foreach(id =>
-      fs.delete(new org.apache.hadoop.fs.Path(dir, s"v$id"), false))
+    val fs = rootFs
+    doomed.foreach(id => fs.delete(SnapshotManifest.file(dir, id), false))
     doomed
   }
 
@@ -878,10 +739,9 @@ final class GraftCatalog(spark: SparkSession, root: String) {
     val ids = snapshotIds(name)
     require(ids.nonEmpty,
       s"[GRAFT] vacuum needs at least one published snapshot of [$name]")
-    val live = ids.flatMap(readManifest(name, _)._2).toSet
+    val live = ids.flatMap(manifest(name, _).paths).toSet
     val current = listDataFiles(spark, s"$root/$name.parquet").files.map(_._1)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = rootFs
     val doomed = current.filterNot(live)
     doomed.foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), false))
     // the dead files may be gone from this catalog's own pin too
@@ -939,10 +799,10 @@ object GraftCatalog {
       GraftIO.walkVisibleFiles(fs, path).map(f => (f.getPath.toString, f.getLen)))
   }
 
-  /** Directory (under a catalog root) holding published snapshot
-    * manifests — underscore-prefixed so data-file listings skip it.
+  /** Name of the directory (under a catalog root) holding published
+    * snapshot manifests; [[SnapshotManifest]] owns what lies below it.
     */
-  val SnapshotDir = "_snapshots"
+  val SnapshotDir: String = SnapshotManifest.Dir
 
   /** Hive's sentinel for a null partition value. */
   val DefaultPartitionName = "__HIVE_DEFAULT_PARTITION__"

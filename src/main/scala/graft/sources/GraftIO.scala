@@ -64,6 +64,31 @@ object GraftIO {
     }
   }
 
+  /** A small text file's whole body (UTF-8), None when the file does
+    * not exist — the one read every marker, manifest and journal
+    * shares. One open, no existence probe.
+    */
+  def readText(fs: FileSystem, path: Path): Option[String] =
+    try {
+      val in = fs.open(path)
+      try {
+        val bytes = new java.io.ByteArrayOutputStream()
+        org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 65536, false)
+        Some(bytes.toString(java.nio.charset.StandardCharsets.UTF_8.name()))
+      } finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** Write `body` (UTF-8) as the whole content of `path`, closing the
+    * stream on every exit. `overwrite = false` fails on an existing
+    * file (create-if-absent).
+    */
+  def writeText(fs: FileSystem, path: Path, body: String,
+      overwrite: Boolean): Unit = {
+    val out = fs.create(path, overwrite)
+    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
   // (path, length, mtime) -> footer schema; parquet files are immutable
   // so the key can only collide with an identical schema. Bounded.
   private val schemaCache =

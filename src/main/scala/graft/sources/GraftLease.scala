@@ -53,10 +53,8 @@ object GraftLease {
     val dir = registryDir(s, tablePath)
     val fs = fsOf(s, dir)
     fs.mkdirs(dir)
-    val out = fs.create(new org.apache.hadoop.fs.Path(dir, id), true)
-    try out.write(s"${System.currentTimeMillis() + ttlMs}\n$tablePath"
-      .getBytes("UTF-8"))
-    finally out.close()
+    GraftIO.writeText(fs, new org.apache.hadoop.fs.Path(dir, id),
+      s"${System.currentTimeMillis() + ttlMs}\n$tablePath", overwrite = true)
     id
   }
 

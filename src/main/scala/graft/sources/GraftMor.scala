@@ -135,13 +135,10 @@ object GraftMor {
     val seq = math.max(nextEpoch(s, tablePath, eqPath),
       reservedFloor(fs(s, tablePath), eqPath(tablePath))).toLong
     import s.implicits._
-    files.map(f => normPathStr(f)).toDF("file_norm")
+    files.map(graft.sources.v2.GraftMorMask.norm).toDF("file_norm")
       .withColumn("file_seq", org.apache.spark.sql.functions.lit(seq))
       .coalesce(1).write.mode(SaveMode.Append).parquet(seqmPath(tablePath))
   }
-
-  private def normPathStr(p: String): String =
-    p.replaceFirst("^[a-zA-Z0-9.+-]+:/+", "/")
 
   /** Refuse a COW rewrite BY NAME while mutation sidecars are live: a
     * raw-read rewrite (merge/compact) would RESURRECT tombstoned rows
@@ -176,28 +173,31 @@ object GraftMor {
     new org.apache.hadoop.fs.Path(s"$tablePath/$SchemaDir/ddl")
 
   private[sources] def readSchemaDdl(s: SparkSession,
-      tablePath: String): Option[String] = {
-    val f = fs(s, tablePath)
+      tablePath: String): Option[String] =
+    GraftIO.readText(fs(s, tablePath), schemaMarker(tablePath))
+
+  /** Record the table's served schema in its `_schema/ddl` marker — the
+    * one writer of that marker. `overwrite = false` is CREATE TABLE's
+    * create-if-absent; evolution and ALTER replace it.
+    */
+  private[sources] def writeSchemaDdl(f: org.apache.hadoop.fs.FileSystem,
+      tablePath: String, ddl: String, overwrite: Boolean): Unit = {
     val p = schemaMarker(tablePath)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val body = try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 65536, false)
-        bytes.toString(java.nio.charset.StandardCharsets.UTF_8.name())
-      } finally in.close()
-      Some(body)
-    }
+    f.mkdirs(p.getParent)
+    GraftIO.writeText(f, p, ddl, overwrite)
   }
 
-  private def writeSchemaDdl(s: SparkSession, tablePath: String,
-      ddl: String): Unit = {
-    val f = fs(s, tablePath)
-    val out = f.create(schemaMarker(tablePath), true)
-    try out.write(ddl.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  /** The `_schema/partcols` marker: the partition columns CREATE TABLE
+    * declared.
+    */
+  private[sources] def partColsMarker(tablePath: String) =
+    new org.apache.hadoop.fs.Path(s"$tablePath/$SchemaDir/partcols")
+
+  /** The declared partition columns, empty when none were declared. */
+  private[sources] def readPartCols(f: org.apache.hadoop.fs.FileSystem,
+      tablePath: String): Seq[String] =
+    GraftIO.readText(f, partColsMarker(tablePath)).toSeq
+      .flatMap(_.split(",").filter(_.nonEmpty))
 
   /** The table's data files read with the recorded evolved schema when
     * one exists (pre-evolution files null-fill the added columns) and
@@ -474,7 +474,8 @@ object GraftMor {
       val widened = org.apache.spark.sql.types.StructType(
         tableSchema.fields ++ added.map(n =>
           updates.schema(n).copy(nullable = true)))
-      writeSchemaDdl(s, tablePath, widened.toDDL)
+      writeSchemaDdl(fs(s, tablePath), tablePath, widened.toDDL,
+        overwrite = true)
     }
     tableSchema.fieldNames.toSeq ++ added
   }
@@ -681,7 +682,7 @@ object GraftMor {
         if (!f.rename(src, dst))
           throw new IllegalStateException(
             s"[GRAFT] $op move-in failed: rename($src -> $dst) returned false")
-        normPathStr(dst.toUri.getPath)
+        graft.sources.v2.GraftMorMask.norm(dst.toUri.getPath)
       }
     f.delete(stage, true)
     val shell = stage.getParent

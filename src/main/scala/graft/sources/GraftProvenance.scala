@@ -71,9 +71,7 @@ object GraftProvenance {
          | "note": "${esc(rec.note)}"}""".stripMargin
     val p = new Path(path, FileName)
     val fs = p.getFileSystem(conf(s))
-    val out = fs.create(p, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    GraftIO.writeText(fs, p, json, overwrite = true)
     rec
   }
 
@@ -81,13 +79,8 @@ object GraftProvenance {
   def read(s: SparkSession, path: String): Record = {
     val p = new Path(path, FileName)
     val fs = p.getFileSystem(conf(s))
-    require(fs.exists(p), s"[GRAFT] no provenance manifest under $path")
-    val in = fs.open(p)
-    val body = try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 65536, false)
-      bytes.toString(java.nio.charset.StandardCharsets.UTF_8.name())
-    } finally in.close()
+    val body = GraftIO.readText(fs, p).getOrElse(throw new IllegalArgumentException(
+      s"[GRAFT] no provenance manifest under $path"))
     // hand-rolled parse of the hand-rolled writer above — the two are
     // a matched pair, not a general JSON reader
     def longField(name: String): Long =

@@ -44,22 +44,14 @@ object GraftCharVarchar {
     }
     if (declared.isEmpty) return
     fs.mkdirs(marker(tablePath).getParent)
-    val out = fs.create(marker(tablePath), false)
-    try out.write(declared.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    graft.sources.GraftIO.writeText(fs, marker(tablePath),
+      declared.mkString("\n"), overwrite = false)
   }
 
   /** Declared (column, isChar, n) triples, empty when none. */
   def read(fs: FileSystem, tablePath: String): Seq[(String, Boolean, Int)] = {
-    val p = marker(tablePath)
-    if (!fs.exists(p)) return Seq.empty
-    val in = fs.open(p)
-    val body = try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 65536, false)
-      bytes.toString(java.nio.charset.StandardCharsets.UTF_8.name())
-    } finally in.close()
+    val body = graft.sources.GraftIO.readText(fs, marker(tablePath))
+      .getOrElse(return Seq.empty)
     body.split("\n").toSeq.flatMap { l =>
       l.split("\t", 3) match {
         case Array(name, kind, n) =>

@@ -204,7 +204,7 @@ case class GraftTable(path: String, tableSchema: StructType,
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
-    GraftSqlWrite.builder(path, partSchema.fieldNames.toSeq, info)
+    GraftSqlWrite.builder(path, partSchema.fieldNames.toSeq)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     // A32: row-group sampling pushdown — `.option("sampleRowGroups",
     // "0.1")` reads a deterministic ~10% of (file, row group) splits,
@@ -1496,9 +1496,7 @@ object GraftV2 {
     val journal = new Path(stageDir, SwapJournal)
     val body = (old.map("retire\t" + _) ++ staged.map("movein\t" + _))
       .mkString("\n")
-    val out = fs.create(journal, true)
-    out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
+    graft.sources.GraftIO.writeText(fs, journal, body, overwrite = true)
     completeStagedSwap(fs, tableRoot, stageDir, op)
   }
 
@@ -1519,16 +1517,7 @@ object GraftV2 {
     // the journal vanishing means the owning swap finished (it deletes
     // the journal last) — a concurrent recoverer backs off quietly
     // instead of failing a healthy writer
-    val in = try fs.open(journal) catch {
-      case _: java.io.FileNotFoundException => return
-    }
-    val body = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
+    val body = graft.sources.GraftIO.readText(fs, journal).getOrElse(return)
     val entries = body.split('\n').filter(_.nonEmpty).map { line =>
       val i = line.indexOf('\t')
       (line.substring(0, i), line.substring(i + 1))
@@ -1750,8 +1739,7 @@ object GraftV2 {
       // 3-level LIST: field idx holds the LIST group; its single
       // repeated child repeats once per element; each repetition holds
       // an optional primitive (absent repetition count 0 = null elem).
-      val elemPrim = t.asGroupType().getType(0).asGroupType().getType(0).asPrimitiveType()
-      val readElem = elementConverter(elemPrim, et)
+      val readElem = elementConverter(et)
       g => {
         val lst = g.getGroup(idx, 0)
         val n = lst.getFieldRepetitionCount(0)
@@ -1770,7 +1758,7 @@ object GraftV2 {
   /** Reader for one LIST element group (the primitive sits at field 0,
     * repetition 0 of each entry).
     */
-  private def elementConverter(p: PrimitiveType, dt: DataType): Group => Any = dt match {
+  private def elementConverter(dt: DataType): Group => Any = dt match {
     case BooleanType => g => g.getBoolean(0, 0)
     case IntegerType | DateType => g => g.getInteger(0, 0)
     case LongType => g => g.getLong(0, 0)

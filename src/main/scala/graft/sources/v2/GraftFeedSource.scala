@@ -177,13 +177,7 @@ class GraftFeedStream(root: String, schema: StructType,
       throw new IllegalStateException(
         "[GRAFT] graft-feed manifest crash-recovery swap failed at " +
           manifestLive)
-    if (!f.exists(manifestLive)) return
-    val in = f.open(manifestLive)
-    val body = try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 65536, false)
-      bytes.toString(java.nio.charset.StandardCharsets.UTF_8.name())
-    } finally in.close()
+    val body = graft.sources.GraftIO.readText(f, manifestLive).getOrElse(return)
     val lines = body.split("\n").filter(_.nonEmpty).toVector
     lines.headOption.filter(_.startsWith("#base\t")).foreach { l =>
       val parts = l.split("\t")
@@ -208,17 +202,15 @@ class GraftFeedStream(root: String, schema: StructType,
     val f = ckFs
     val staging = new Path(manifestLive.toString + ".staging")
     f.mkdirs(manifestLive.getParent)
-    val out = f.create(staging, true)
     val baseLine =
       if (foldedUpTo < 0L) Seq.empty
       else Seq((s"#base\t$foldedUpTo" +:
         foldedSentinel.flatMap { case (f, l) => Seq(f, l.toString) })
         .mkString("\t"))
-    try out.write((baseLine ++ segs.map { s =>
+    graft.sources.GraftIO.writeText(f, staging, (baseLine ++ segs.map { s =>
         (s.seq.toString +: s.files.flatMap { case (n, l, rg) =>
           Seq(n, l.toString, rg.mkString(",")) }).mkString("\t")
-      }).mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+      }).mkString("\n"), overwrite = true)
     f.delete(manifestLive, false)
     if (!f.rename(staging, manifestLive))
       throw new IllegalStateException(

@@ -199,23 +199,15 @@ object GraftLayout {
       layout: Layout): Unit = {
     val p = markerPath(tablePath)
     fs.mkdirs(p.getParent)
-    val out = fs.create(p, true)
     val body = s"${layout.kind}\t${layout.cols.mkString(",")}" +
       (if (layout.kind == "bucket") s"\t${layout.buckets}" else "")
-    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    graft.sources.GraftIO.writeText(fs, p, body, overwrite = true)
   }
 
   def readMarker(fs: org.apache.hadoop.fs.FileSystem,
       tablePath: String): Option[Layout] = {
     val p = markerPath(tablePath)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val body = try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 65536, false)
-      bytes.toString(java.nio.charset.StandardCharsets.UTF_8.name())
-    } finally in.close()
+    val body = graft.sources.GraftIO.readText(fs, p).getOrElse(return None)
     body.split("\t") match {
       case Array(kind, cols) =>
         Some(Layout(kind, cols.split(",").filter(_.nonEmpty).toSeq))

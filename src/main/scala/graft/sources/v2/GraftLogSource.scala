@@ -154,13 +154,8 @@ private[graft] object GraftLogIndex {
     if (!f.exists(live) && f.exists(staging) && !f.rename(staging, live))
       throw new IllegalStateException(
         s"[GRAFT] graft-log manifest crash-recovery swap failed at $live")
-    if (!f.exists(live)) return (EmptyBase, Vector.empty)
-    val in = f.open(live)
-    val body = try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 65536, false)
-      bytes.toString(java.nio.charset.StandardCharsets.UTF_8.name())
-    } finally in.close()
+    val body = graft.sources.GraftIO.readText(f, live)
+      .getOrElse(return (EmptyBase, Vector.empty))
     val lines = body.split("\n").filter(_.nonEmpty).toSeq
     val base = lines.headOption.filter(_.startsWith("#base\t")).map { l =>
       val Array(_, c, r, fn, ln) = l.split("\t", 5)
@@ -182,11 +177,9 @@ private[graft] object GraftLogIndex {
       if (base.count == 0L) Seq.empty
       else Seq(s"#base\t${base.count}\t${base.rows}\t${base.firstName}\t" +
         base.lastName)
-    val out = f.create(staging, true)
-    try out.write((baseLine ++ segs.map(s =>
+    graft.sources.GraftIO.writeText(f, staging, (baseLine ++ segs.map(s =>
         s"${s.name}\t${s.length}\t${s.rgRows.mkString(",")}"))
-      .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+      .mkString("\n"), overwrite = true)
     f.delete(live, false)
     if (!f.rename(staging, live))
       throw new IllegalStateException(

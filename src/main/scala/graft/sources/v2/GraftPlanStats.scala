@@ -2,7 +2,6 @@ package graft.sources.v2
 
 import java.util.Base64
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96
 import org.apache.spark.sql.types._
@@ -27,35 +26,19 @@ import scala.jdk.CollectionConverters._
   * publish, never-published tables) fall back to a bounded PARALLEL
   * footer pool instead of the serial walk.
   *
-  * Line grammar (inside the `v<id>` manifest body, after the file and
-  * sidecar lines so the `#publishedAt` head read stays bounded; the
-  * body ENDS with a `#complete` terminator — the torn-read guard, see
-  * [[Complete]]):
-  *
-  *   #rgf\t<fileLen>\t<path>                       one per file
-  *   #rg\t<rows>\t<offset>\t<len>\t<colstats>      one per row group
-  *   #complete                                     last line
-  *
-  * `colstats` is `;`-joined `name=<bounds>:<nulls>` where bounds is
-  * `n:<min>:<max>` (numbers as plain decimal strings — decimals
-  * PRE-SCALED, the chunkBounds discipline), `s:<minB64>:<maxB64>`
-  * (raw binary stat bytes), or `-` (no usable stats / unrecordable
-  * type); nulls is a count or `?`. Decoding reconstructs exactly the
+  * This object owns the manifest's stats section: one `#rgf` line per
+  * file, then one `#rg` line per row group of that file. The whole
+  * body's grammar is documented on [[graft.sources.SnapshotManifest]],
+  * which reads and writes it. A row group's `colstats` is `;`-joined
+  * `name=<bounds>:<nulls>` where bounds is `n:<min>:<max>` (numbers as
+  * plain decimal strings — decimals PRE-SCALED, the chunkBounds
+  * discipline), `s:<minB64>:<maxB64>` (raw binary stat bytes), or `-`
+  * (no usable stats / unrecordable type); nulls is a count or `?`. Decoding reconstructs exactly the
   * JVM values [[GraftV2.chunkBounds]]/[[GraftV2.chunkNullCount]] would
   * produce from the footer, so pruning and the A67 column statistics
   * are bit-identical between the recorded and the fallback path.
   */
 object GraftPlanStats {
-
-  /** Manifest terminator line. `publishSnapshot` allocates the
-    * manifest with create-if-absent (the id race) and only then
-    * streams the body, so a LISTER can see the file before the body
-    * is durable; every consumer that plans live work from a manifest
-    * (scan stats, the table-tail stream) treats a body without this
-    * terminator as IN-FLIGHT/TORN and falls back or waits — never a
-    * silently-partial read.
-    */
-  val Complete = "#complete"
 
   /** One row group's planning-time stats — the ONE surface row-group
     * pruning, the A67 stats pass and split construction consume, so
@@ -270,6 +253,10 @@ object GraftPlanStats {
 
   // ── decode (scan side) ──────────────────────────────────────────────
 
+  /** Whether a manifest line belongs to the stats section. */
+  def isStatsLine(l: String): Boolean =
+    l.startsWith("#rgf\t") || l.startsWith("#rg\t")
+
   /** Parse a manifest body's stats lines into typeOf-free RawRgs. */
   def parseLines(lines: Seq[String]): Map[String, FileStats] = {
     val out = Map.newBuilder[String, FileStats]
@@ -331,67 +318,22 @@ object GraftPlanStats {
     (String, Long), Map[String, FileStats]]()
   private val CacheCap = 64
 
-  /** The snapshot-manifest directory of a table path
-    * (`<root>/<name>.parquet` → `<root>/_snapshots/<name>`) — the ONE
-    * derivation every manifest consumer shares.
-    */
-  def snapshotsDirFor(tablePath: String): Path = {
-    val p = new Path(tablePath)
-    new Path(p.getParent,
-      s"${graft.sources.GraftCatalog.SnapshotDir}/${p.getName.stripSuffix(".parquet")}")
-  }
-
-  /** Published epoch ids under a snapshots dir, ascending; non-numeric
-    * `v*` entries ignored, IO failures → empty.
-    */
-  def epochIds(snapDir: Path, conf: Configuration): Seq[Long] =
-    try {
-      val fs = snapDir.getFileSystem(conf)
-      if (!fs.exists(snapDir)) Seq.empty
-      else fs.listStatus(snapDir).toSeq.map(_.getPath.getName)
-        .collect { case n if n.startsWith("v") =>
-          try n.drop(1).toLong catch { case _: NumberFormatException => -1L } }
-        .filter(_ >= 0).sorted
-    } catch { case _: java.io.IOException => Seq.empty }
-
-  /** One manifest body as lines, None on IO failure. */
-  def readBody(snapDir: Path, id: Long,
-      conf: Configuration): Option[Seq[String]] =
-    try {
-      val fs = snapDir.getFileSystem(conf)
-      val in = fs.open(new Path(snapDir, s"v$id"))
-      val body = try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 65536, false)
-        bytes.toString(java.nio.charset.StandardCharsets.UTF_8.name())
-      } finally in.close()
-      Some(body.split("\n").toSeq)
-    } catch { case _: java.io.IOException => None }
-
-  /** Whether a manifest body carries the completeness terminator —
-    * bodies written before the terminator existed (or torn/in-flight
-    * ones) don't, and every LIVE-planning consumer then falls back.
-    */
-  def isComplete(lines: Seq[String]): Boolean =
-    lines.lastOption.exists(_.startsWith(Complete))
-
   /** The newest COMPLETE published manifest's recorded stats for the
     * table at `tablePath`, raw (typeOf-free); empty when nothing was
-    * published, the newest manifest is torn/in-flight/unreadable, or
-    * recording is disabled (`spark.graft.plan.manifestStats=false` is
-    * the read-side escape hatch; every file then takes the parallel
-    * footer pool). Stats are per-FILE and parquet files are immutable,
-    * so the newest manifest serves any scan — including AS-OF reads of
-    * older epochs — for exactly the files it covers.
+    * published or the newest manifests are torn, in flight or
+    * unreadable — every file then takes the parallel footer pool.
+    * Stats are per-FILE and parquet files are immutable, so the newest
+    * manifest serves any scan — including AS-OF reads of older epochs
+    * — for exactly the files it covers.
     */
   def rawForTable(tablePath: String,
       conf: Configuration): Map[String, FileStats] = {
-    val enabled =
-      try org.apache.spark.sql.internal.SQLConf.get
-        .getConfString("spark.graft.plan.manifestStats", "true").toBoolean
-      catch { case _: Exception => true }
-    if (!enabled) return Map.empty
-    val snapDir = snapshotsDirFor(tablePath)
+    val dir = graft.sources.SnapshotManifest.dirFor(tablePath)
+    val (fs, ids) =
+      try {
+        val fs = dir.getFileSystem(conf)
+        (fs, graft.sources.SnapshotManifest.ids(fs, dir))
+      } catch { case _: java.io.IOException => return Map.empty }
     // newest COMPLETE manifest wins: a torn/in-flight newest (publish
     // racing this plan, or a crashed publisher) falls back to the
     // prior epoch's stats — per-file stats of immutable files are
@@ -399,14 +341,17 @@ object GraftPlanStats {
     // bounded descent (3): a log of exclusively terminator-less bodies
     // (pre-terminator manifests) must not re-read O(epochs) manifests
     // on every scan — past the bound, plan from footers
-    epochIds(snapDir, conf).reverseIterator.take(3).foreach { id =>
-      val key = (snapDir.toString, id)
+    ids.reverseIterator.take(3).foreach { id =>
+      val key = (dir.toString, id)
       val hit = cache.get(key)
       if (hit != null) return hit
-      readBody(snapDir, id, conf) match {
-        case Some(lines) if isComplete(lines) =>
+      val m =
+        try graft.sources.SnapshotManifest.read(fs, dir, id)
+        catch { case _: java.io.IOException => None }
+      m match {
+        case Some(m) if m.complete =>
           val parsed =
-            try parseLines(lines)
+            try m.stats
             catch { case _: RuntimeException =>
               // a malformed stats section in a TERMINATED manifest is
               // a writer bug, but planning must stay correct: footers

@@ -2,7 +2,7 @@ package graft.sources.v2
 
 import graft.sources.GraftCatalog
 import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsOverwrite, V1Write, Write, WriteBuilder}
+import org.apache.spark.sql.connector.write.{SupportsOverwrite, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.functions.{concat_ws, lit, when}
 import org.apache.spark.sql.sources.{Filter, InsertableRelation}
 
@@ -73,8 +73,7 @@ object GraftSqlWrite {
     * partitions the batch carries, which a static partition spec has
     * already constant-folded into the rows.
     */
-  def builder(tablePath: String, partCols: Seq[String],
-      info: LogicalWriteInfo): WriteBuilder =
+  def builder(tablePath: String, partCols: Seq[String]): WriteBuilder =
     new WriteBuilder with SupportsOverwrite {
       private var overwriteMode = false
       override def overwrite(filters: Array[Filter]): WriteBuilder = {

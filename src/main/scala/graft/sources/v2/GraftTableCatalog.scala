@@ -1,7 +1,7 @@
 package graft.sources.v2
 
 import java.util
-import graft.sources.GraftCatalog
+import graft.sources.{GraftCatalog, SnapshotManifest}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
 import org.apache.spark.sql.connector.catalog._
@@ -124,23 +124,8 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
         layoutSpec = layout.map(GraftLayout.describe))
     }
 
-  private def partColsMarker(tablePath: String) =
-    new org.apache.hadoop.fs.Path(
-      s"$tablePath/${graft.sources.GraftMor.SchemaDir}/partcols")
-
-  private def readPartCols(tablePath: String): Seq[String] = {
-    val p = partColsMarker(tablePath)
-    if (!hadoopFs.exists(p)) Seq.empty
-    else {
-      val in = hadoopFs.open(p)
-      val body = try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 65536, false)
-        bytes.toString(java.nio.charset.StandardCharsets.UTF_8.name())
-      } finally in.close()
-      body.split(",").filter(_.nonEmpty).toSeq
-    }
-  }
+  private def readPartCols(tablePath: String): Seq[String] =
+    graft.sources.GraftMor.readPartCols(hadoopFs, tablePath)
 
   /** Partition-column types for a table: the DECLARED `_schema` marker
     * DDL wins when the `partcols` marker exists (r13 ADVICE: a CREATE
@@ -252,8 +237,8 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
 
   private def loadSnapshot(ident: Identifier, id: Long): Table =
     tables.getOrElseUpdate((ident.namespace.mkString("/"), s"${ident.name}@v$id"), {
-      val nsCat = catalogFor(ident.namespace)
-      val files = nsCat.snapshotFilesAsOf(ident.name, id)
+      val m = catalogFor(ident.namespace).manifest(ident.name, id)
+      val files = m.paths
       if (files.isEmpty) throw new NoSuchTableException(ident)
       val tablePath = s"${nsDir(ident.namespace)}/${ident.name}.parquet"
       val conf = spark.sessionState.newHadoopConf()
@@ -265,16 +250,10 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
       // AFTER the publish are caught by the scan-time `_eq` freshness
       // guard (the pinned eq listing is the manifest's; any current
       // drift refuses — GDPR erasure outranks addressed history).
-      val sc = nsCat.readManifestSidecars(ident.name, id)
-      val fs = new org.apache.hadoop.fs.Path(tablePath).getFileSystem(conf)
-      val gone = (sc.dv ++ sc.eq ++ sc.seqm).map(_._1)
-        .filterNot(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-      if (gone.nonEmpty)
-        throw new IllegalStateException(
-          s"[GRAFT] VERSION/TIMESTAMP AS OF $id on $ident refused: the " +
-            "epoch records mutation-sidecar state that a compaction has " +
-            s"since folded (e.g. ${gone.head}) - the masked historical " +
-            "state is no longer reconstructible; republish after morCompact")
+      val sc = m.sidecars
+      m.requireSidecarsLive(
+        new org.apache.hadoop.fs.Path(tablePath).getFileSystem(conf),
+        s"VERSION/TIMESTAMP AS OF $id on $ident")
       // eager key-type/cap validation, as loadTable does
       if (sc.eq.nonEmpty) GraftMorMask.loadEq(sc.eq.map(_._1), conf)
       val fileSchema = sc.schemaDdl
@@ -403,20 +382,13 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
     // bucket × hive-partitioning refusal)
     val layout = Option(properties.get("layout"))
       .map(GraftLayout.parse(_, schema, partCols))
-    val schemaDir = new org.apache.hadoop.fs.Path(
-      s"$tablePath/${graft.sources.GraftMor.SchemaDir}")
-    hadoopFs.mkdirs(schemaDir)
-    val out = hadoopFs.create(
-      new org.apache.hadoop.fs.Path(schemaDir, "ddl"), false)
-    try out.write(schema.toDDL.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    graft.sources.GraftMor.writeSchemaDdl(hadoopFs, tablePath, schema.toDDL,
+      overwrite = false)
     layout.foreach(GraftLayout.writeMarker(hadoopFs, tablePath, _))
-    if (partCols.nonEmpty) {
-      val pout = hadoopFs.create(partColsMarker(tablePath), false)
-      try pout.write(partCols.mkString(",")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally pout.close()
-    }
+    if (partCols.nonEmpty)
+      graft.sources.GraftIO.writeText(hadoopFs,
+        graft.sources.GraftMor.partColsMarker(tablePath),
+        partCols.mkString(","), overwrite = false)
     // CHAR(n)/VARCHAR(n) length semantics: Spark hands the catalog
     // StringType + raw-type metadata; the DDL marker cannot carry it
     // (toDDL drops metadata), so the declared lengths persist in their
@@ -535,20 +507,10 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
     val widened = org.apache.spark.sql.types.StructType(
       current.fields.filterNot(f => partNames(f.name)) ++ added ++
         current.fields.filter(f => partNames(f.name)))
-    writeDdlMarker(tablePath, widened)
+    graft.sources.GraftMor.writeSchemaDdl(hadoopFs, tablePath, widened.toDDL,
+      overwrite = true)
     invalidateTable(ident)
     loadTable(ident)
-  }
-
-  private def writeDdlMarker(tablePath: String, schema: StructType): Unit = {
-    val schemaDir = new org.apache.hadoop.fs.Path(
-      s"$tablePath/${graft.sources.GraftMor.SchemaDir}")
-    hadoopFs.mkdirs(schemaDir)
-    val out = hadoopFs.create(
-      new org.apache.hadoop.fs.Path(schemaDir, "ddl"), true)
-    try out.write(schema.toDDL
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
   }
 
   /** The A61 rewrite body: validate → stage the re-projected table →
@@ -657,9 +619,11 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
     (if (writeCols.nonEmpty) w.partitionBy(writeCols: _*) else w)
       .parquet(stageDir.toString)
     // marker first (see scaladoc), then the shared retire + move-in
-    writeDdlMarker(tablePath, org.apache.spark.sql.types.StructType(
-      newFields.filterNot(f => partNames(f.name)) ++
-        newFields.filter(f => partNames(f.name))))
+    graft.sources.GraftMor.writeSchemaDdl(hadoopFs, tablePath,
+      org.apache.spark.sql.types.StructType(
+        newFields.filterNot(f => partNames(f.name)) ++
+          newFields.filter(f => partNames(f.name))).toDDL,
+      overwrite = true)
     GraftV2.swapStagedFiles(hadoopFs,
       new org.apache.hadoop.fs.Path(tablePath), stageDir, "ALTER rewrite")
     // a renamed layout column keeps its clustering contract under the
@@ -682,8 +646,7 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
     if (!hadoopFs.exists(tp)) return false
     graft.sources.GraftLease.failIfLeased(spark, tablePath, "DROP TABLE")
     invalidateTable(ident)
-    val manifests = new org.apache.hadoop.fs.Path(
-      s"${nsDir(ident.namespace)}/${graft.sources.GraftCatalog.SnapshotDir}/${ident.name}")
+    val manifests = SnapshotManifest.dir(nsDir(ident.namespace), ident.name)
     if (hadoopFs.exists(manifests)) hadoopFs.delete(manifests, true)
     hadoopFs.delete(tp, true)
   }
@@ -718,74 +681,23 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
     graft.sources.GraftLease.failIfLeased(spark, oldPath, "RENAME TABLE")
     graft.sources.GraftMor.failIfMutationSidecars(spark, oldPath,
       "RENAME TABLE")
-    val snapDir = graft.sources.GraftCatalog.SnapshotDir
     // a multi-table tag names this table: renaming would dangle the
     // tag's consistent-set promise — refuse with the remedy
-    val tagsDir = new org.apache.hadoop.fs.Path(
-      s"${nsDir(oldIdent.namespace)}/$snapDir/_tags")
-    if (hadoopFs.exists(tagsDir)) {
-      hadoopFs.listStatus(tagsDir).foreach { st =>
-        val in = hadoopFs.open(st.getPath)
-        val body = try {
-          val bytes = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 65536, false)
-          bytes.toString(java.nio.charset.StandardCharsets.UTF_8.name())
-        } finally in.close()
-        if (body.split("\n").exists(_.startsWith(oldIdent.name + "\t")))
-          throw new IllegalStateException(
-            s"[GRAFT] RENAME TABLE ${oldIdent.name} refused: tag " +
-              s"'${st.getPath.getName}' pins it by name - drop or " +
-              "republish the tag after deciding what the consistent set " +
-              "should mean, then rename")
-      }
+    SnapshotManifest.tagPinning(hadoopFs, nsDir(oldIdent.namespace),
+        oldIdent.name).foreach { tag =>
+      throw new IllegalStateException(
+        s"[GRAFT] RENAME TABLE ${oldIdent.name} refused: tag '$tag' pins " +
+          "it by name - drop or republish the tag after deciding what the " +
+          "consistent set should mean, then rename")
     }
     // rewrite each epoch manifest (absolute paths old → new) into the
     // TARGET namespace's snapshot dir; a remnant target dir from a
     // crashed earlier rename (manifests copied, move never happened —
     // provably so, since the target table path is absent) is replaced
-    val oldMan = new org.apache.hadoop.fs.Path(
-      s"${nsDir(oldIdent.namespace)}/$snapDir/${oldIdent.name}")
-    val newMan = new org.apache.hadoop.fs.Path(
-      s"${nsDir(newIdent.namespace)}/$snapDir/${newIdent.name}")
+    val oldMan = SnapshotManifest.dir(nsDir(oldIdent.namespace), oldIdent.name)
+    val newMan = SnapshotManifest.dir(nsDir(newIdent.namespace), newIdent.name)
     if (hadoopFs.exists(newMan)) hadoopFs.delete(newMan, true)
-    if (hadoopFs.exists(oldMan)) {
-      hadoopFs.mkdirs(newMan)
-      hadoopFs.listStatus(oldMan).foreach { st =>
-        val in = hadoopFs.open(st.getPath)
-        val body = try {
-          val bytes = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 65536, false)
-          bytes.toString(java.nio.charset.StandardCharsets.UTF_8.name())
-        } finally in.close()
-        // prefix-anchored per-line rewrite: a manifest line carries its
-        // path as the LAST tab field (`len\tpath`, `#sidecar\t..\tpath`);
-        // only that field, and only when it IS the old root or starts
-        // with it as a path prefix, is rewritten — a blanket
-        // body.replace would corrupt any future field that happened to
-        // contain the root as a substring (e.g. a schema comment)
-        val oldPrefix = oldPath + "/"
-        val rewritten = body.split("\n", -1).map { line =>
-          val i = line.lastIndexOf('\t')
-          if (i < 0) line
-          else {
-            val p = line.substring(i + 1)
-            // stored paths may carry a scheme (`file:/...`): anchor on
-            // the URI path portion, preserve the scheme prefix as-is
-            val uriPath = scala.util.Try(
-              new org.apache.hadoop.fs.Path(p).toUri.getPath).getOrElse("")
-            if (uriPath == oldPath || uriPath.startsWith(oldPrefix)) {
-              val scheme = p.substring(0, p.length - uriPath.length)
-              line.substring(0, i + 1) + scheme + newPath +
-                uriPath.substring(oldPath.length)
-            } else line
-          }
-        }.mkString("\n")
-        val out = hadoopFs.create(
-          new org.apache.hadoop.fs.Path(newMan, st.getPath.getName), true)
-        try out.write(rewritten.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-      }
-    }
+    SnapshotManifest.copyRebased(hadoopFs, oldMan, newMan, oldPath, newPath)
     if (!hadoopFs.rename(oldP, newP))
       throw new IllegalStateException(
         s"[GRAFT] RENAME TABLE failed: rename($oldP -> $newP) returned false")
@@ -874,14 +786,12 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
         s"empty (${live.length} entries, e.g. " +
         s"${live.head.getPath.getName}) - drop its tables and child " +
         "namespaces first")
-    val tags = new org.apache.hadoop.fs.Path(
-      s"${nsDir(namespace)}/${graft.sources.GraftCatalog.SnapshotDir}/_tags")
-    if (hadoopFs.exists(tags) && hadoopFs.listStatus(tags).nonEmpty)
+    SnapshotManifest.tagNames(hadoopFs, nsDir(namespace)).headOption.foreach { tag =>
       throw new IllegalStateException(
         s"[GRAFT] DROP NAMESPACE ${namespace.mkString(".")} refused: " +
-          s"published tag(s) remain (e.g. " +
-          s"${hadoopFs.listStatus(tags).head.getPath.getName}) - a tag is " +
-          "a durable consistent-set promise; delete the tag files first")
+          s"published tag(s) remain (e.g. $tag) - a tag is a durable " +
+          "consistent-set promise; delete the tag files first")
+    }
     pinned.remove(namespace.mkString("/"))
     hadoopFs.delete(p, true)
   }

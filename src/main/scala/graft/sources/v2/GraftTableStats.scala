@@ -72,9 +72,7 @@ object GraftTableStats {
     // name, then delete + rename; the reader's worst case is a clean
     // miss (None), never a partial parse
     val tmp = new Path(dir, s".summary_${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    graft.sources.GraftIO.writeText(fs, tmp, body, overwrite = true)
     val dst = new Path(dir, "summary")
     if (fs.exists(dst)) fs.delete(dst, false)
     if (!fs.rename(tmp, dst))
@@ -104,14 +102,9 @@ object GraftTableStats {
     val key = (p.toString, st.getModificationTime, st.getLen)
     val hit = cache.get(key)
     if (hit != null) return Some(hit)
-    val body = try {
-      val in = fs.open(p)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 65536, false)
-        bytes.toString(java.nio.charset.StandardCharsets.UTF_8.name())
-      } finally in.close()
-    } catch { case _: java.io.IOException => return None }
+    val body =
+      try graft.sources.GraftIO.readText(fs, p).getOrElse(return None)
+      catch { case _: java.io.IOException => return None }
     var rows = 0L; var files = 0L; var at = 0L
     val cols = Map.newBuilder[String, ColStats]
     try body.split("\n").foreach { l =>

@@ -1,5 +1,6 @@
 package graft.sources.v2
 
+import graft.sources.SnapshotManifest
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
@@ -37,9 +38,14 @@ class GraftTableTailStream(path: String, required: StructType,
     conf: GraftV2.SessionConf) extends MicroBatchStream
     with SupportsTriggerAvailableNow {
 
-  private def snapDir: Path = GraftPlanStats.snapshotsDirFor(path)
+  private def snapDir: Path = SnapshotManifest.dirFor(path)
 
-  /** Only epochs whose manifest carries the `#complete` terminator are
+  /** Epoch `id`'s manifest; None when it is absent or unreadable. */
+  private def manifest(id: Long): Option[SnapshotManifest.Manifest] =
+    try SnapshotManifest.read(snapDir.getFileSystem(conf.value), snapDir, id)
+    catch { case _: java.io.IOException => None }
+
+  /** Only epochs whose manifest carries the completeness terminator are
     * offset-addressable: publishSnapshot makes the file LISTER-VISIBLE
     * before the body is durable, and committing an offset into a
     * half-written epoch would permanently skip the rows its body had
@@ -52,39 +58,37 @@ class GraftTableTailStream(path: String, required: StructType,
 
   private def isCompleteEpoch(id: Long): Boolean = {
     if (completeIds.contains(id)) return true
-    val ok = GraftPlanStats.readBody(snapDir, id, conf.value)
-      .exists(GraftPlanStats.isComplete)
+    val ok = manifest(id).exists(_.complete)
     if (ok) completeIds.add(id)
     ok
   }
 
   private def epochIds(): Seq[Long] =
-    GraftPlanStats.epochIds(snapDir, conf.value)
+    try SnapshotManifest.ids(snapDir.getFileSystem(conf.value), snapDir)
+    catch { case _: java.io.IOException => Seq.empty }
 
   private def newestComplete(): Long =
     epochIds().reverseIterator.find(isCompleteEpoch).getOrElse(0L)
 
-  /** One epoch's manifest: data files + whether it records mutation
-    * sidecar state. A missing manifest refuses by name (retention
-    * outran the checkpoint); a torn one refuses as in-flight — the
-    * offsets only ever ADDRESS complete epochs, so hitting either on
-    * a committed id is an external mutation of the log.
+  /** One epoch's complete manifest. A missing manifest refuses by name
+    * (retention outran the checkpoint); a torn one refuses as
+    * in-flight — the offsets only ever ADDRESS complete epochs, so
+    * hitting either on a committed id is an external mutation of the
+    * log.
     */
-  private def readEpoch(id: Long): (Seq[String], Boolean) = {
-    val lines = GraftPlanStats.readBody(snapDir, id, conf.value).getOrElse(
+  private def readEpoch(id: Long): SnapshotManifest.Manifest = {
+    val m = manifest(id).getOrElse(
       throw new IllegalStateException(
         s"[GRAFT] table tail of $path cannot resume: epoch v$id was " +
           "expired (retention outran the stream checkpoint) - re-seed " +
           "the consumer from a full read + a fresh checkpoint, and keep " +
           "expire_snapshots' keep_last above the consumer lag"))
-    if (!GraftPlanStats.isComplete(lines))
+    if (!m.complete)
       throw new IllegalStateException(
         s"[GRAFT] table tail of $path: epoch v$id's manifest carries no " +
           "completeness terminator (in-flight or torn publish) - it is " +
           "not consumable; if the publisher crashed, republish")
-    val files = lines.tail.filter(l => l.nonEmpty && !l.startsWith("#"))
-      .map(_.split("\t", 2)(1))
-    (files, lines.exists(_.startsWith("#sidecar\t")))
+    m
   }
 
   override def initialOffset(): Offset = GraftEpochOffset(0L)
@@ -128,9 +132,10 @@ class GraftTableTailStream(path: String, required: StructType,
     // deltas are invisible to a file diff (the A30 changesBetween
     // rule, stream-shaped)
     val ids = epochIds().filter(id => id > from && id <= until)
-    val (endFiles, endMasked) = readEpoch(until)
-    val rangeMasked = endMasked ||
-      ids.exists(id => id != until && readEpoch(id)._2)
+    val endEpoch = readEpoch(until)
+    val endFiles = endEpoch.paths
+    val rangeMasked = endEpoch.recordsSidecars ||
+      ids.exists(id => id != until && readEpoch(id).recordsSidecars)
     if (rangeMasked)
       throw new IllegalStateException(
         s"[GRAFT] table tail of $path refused at epochs ($from, $until]: " +
@@ -139,7 +144,7 @@ class GraftTableTailStream(path: String, required: StructType,
           "GraftMor.publishMorFeed (the mutation-aware change feed), or " +
           "fold with morCompact and republish")
     val startFiles: Set[String] =
-      if (from <= 0L) Set.empty else readEpoch(from)._1.toSet
+      if (from <= 0L) Set.empty else readEpoch(from).paths.toSet
     val removed = startFiles -- endFiles.toSet
     if (removed.nonEmpty)
       throw new IllegalStateException(

@@ -8,7 +8,7 @@ package graft
 class OptionLintSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   private val Options = Set(
-    "columnar.enabled", "plan.manifestStats", "swap.recoveryGraceMs",
+    "columnar.enabled", "swap.recoveryGraceMs",
     "jdbc.url", "jdbc.user", "jdbc.password")
 
   private val root = new java.io.File("src/main/scala/graft")
@@ -25,7 +25,7 @@ class OptionLintSpec extends org.scalatest.funsuite.AnyFunSuite {
     }
   }
 
-  test("source lint: the engine reads only graft's six spark.graft options") {
+  test("source lint: the engine reads only graft's five spark.graft options") {
     assume(root.isDirectory, "source tree not available")
     val key = "\"spark\\.graft\\.([A-Za-z0-9_.]*[A-Za-z0-9_])".r
     val found = sources().flatMap { case (_, lines) =>

@@ -661,7 +661,7 @@ class SimilaritySpec extends SparkSpecBase {
     // replay of an already-absorbed batch is a physical no-op
     val files = partFiles(s"$idx/lists")
     Similarity.applyVectorBatch(
-      vecs(700000 until 700010).toDF("vec_id", "emb"), 0L, idx)
+      vecs(700000 until 700010).toDF("vec_id", "emb"), idx)
     assert(partFiles(s"$idx/lists") === files, "replay must write nothing")
     // absorbed placement ≡ assignment against the persisted centroids
     val trained = spark.read.parquet(s"$idx/centroids")
@@ -757,7 +757,7 @@ class SimilaritySpec extends SparkSpecBase {
     // no centroid artifact: the sink maintains an index, never creates one
     val err = intercept[IllegalStateException] {
       Similarity.applyVectorBatch(
-        Seq((1L, Seq(1.0, 0.0))).toDF("vec_id", "emb"), 0L, idx)
+        Seq((1L, Seq(1.0, 0.0))).toDF("vec_id", "emb"), idx)
     }
     assert(err.getMessage.contains("build the IVF index"))
     // centroids only (just trained, nothing absorbed yet): the first
@@ -768,7 +768,7 @@ class SimilaritySpec extends SparkSpecBase {
       (10L, Seq(0.9, 0.1)), (10L, Seq(0.9, 0.1)), // exact in-batch re-send
       (11L, Seq(0.9, 0.2)), (11L, Seq(0.8, 0.1))) // conflicting rows
       .toDF("vec_id", "emb")
-    Similarity.applyVectorBatch(dup, 0L, idx)
+    Similarity.applyVectorBatch(dup, idx)
     val lists = spark.read.parquet(s"$idx/lists")
     // the persisted-side anti-join can't see duplicates WITHIN a batch:
     // without the in-batch dedup all four rows would land
@@ -853,11 +853,11 @@ class SimilaritySpec extends SparkSpecBase {
     assert(streamed.groupBy("vec_id", "entry_id").count()
       .where(col("count") > 1).count() === 0, "no duplicate assignment rows")
     val files = partFiles(s"$idxA/shards")
-    Hnsw.applyHnswBatch(mkVecs(910000 until 910010).toDF("vec_id", "emb"), 0L, idxA)
+    Hnsw.applyHnswBatch(mkVecs(910000 until 910010).toDF("vec_id", "emb"), idxA)
     assert(partFiles(s"$idxA/shards") === files, "replay must write nothing")
     // un-built index: clear contract error, not a path-not-found
     val err = intercept[IllegalStateException] {
-      Hnsw.applyHnswBatch(mkVecs(0 until 1).toDF("vec_id", "emb"), 0L,
+      Hnsw.applyHnswBatch(mkVecs(0 until 1).toDF("vec_id", "emb"),
         java.nio.file.Files.createTempDirectory("graft_hnsw_none").toString)
     }
     assert(err.getMessage.contains("build the HNSW index"))

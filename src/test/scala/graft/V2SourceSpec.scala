@@ -346,8 +346,7 @@ class V2SourceSpec extends SparkSpecBase {
     // an fs-level copy / restore / distcp rewrites mtimes — simulate by
     // resetting every manifest's mtime to the epoch; resolution must
     // come from the RECORDED #publishedAt line, not fs state
-    val snapDir = new org.apache.hadoop.fs.Path(
-      s"$wh/${graft.sources.GraftCatalog.SnapshotDir}/t")
+    val snapDir = graft.sources.SnapshotManifest.dir(wh, "t")
     val fs = snapDir.getFileSystem(spark.sessionState.newHadoopConf())
     fs.listStatus(snapDir).foreach(st => fs.setTimes(st.getPath, 1000L, -1))
     val c3 = new graft.sources.GraftCatalog(spark, wh)
@@ -1093,6 +1092,34 @@ class V2SourceSpec extends SparkSpecBase {
     def chain(t: Throwable): String =
       if (t == null) "" else t.getMessage + " || " + chain(t.getCause)
     assert(chain(e).contains("equality"), chain(e))
+  }
+
+  test("a compaction that folds an epoch's recorded sidecars refuses that epoch by name: tableAsOf and VERSION AS OF alike") {
+    import graft.sources.GraftMor
+    val wh = graft.sources.GraftSink.scratchDir + "/folded_tt_wh"
+    val path = s"$wh/db/t_fold.parquet"
+    new org.apache.hadoop.fs.Path(wh)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+      .delete(new org.apache.hadoop.fs.Path(wh), true)
+    spark.range(100).select(col("id").as("k"), (col("id") * 10).as("v"))
+      .repartition(2).write.parquet(path)
+    GraftMor.morDelete(spark, path, col("k") % 10 === 3)
+    val cat = new graft.sources.GraftCatalog(spark, s"$wh/db")
+    val v1 = cat.publishSnapshot("t_fold")
+    assert(cat.tableAsOf("t_fold", v1).count() === 90L)
+    GraftMor.morCompact(spark, path)
+    val refusal = "the masked historical state is no longer reconstructible"
+    val eScala = intercept[IllegalStateException](cat.tableAsOf("t_fold", v1))
+    assert(eScala.getMessage.contains(s"Snapshot v$v1 of [t_fold] refused"),
+      eScala.getMessage)
+    assert(eScala.getMessage.contains(refusal), eScala.getMessage)
+    graft.sources.v2.GraftTableCatalog.register(spark, wh, "graftfold")
+    val eSql = intercept[Exception](spark.sql(
+      s"SELECT count(*) FROM graftfold.db.t_fold VERSION AS OF $v1").collect())
+    def chain(t: Throwable): String =
+      if (t == null) "" else t.getMessage + " || " + chain(t.getCause)
+    assert(chain(eSql).contains(s"VERSION/TIMESTAMP AS OF $v1"), chain(eSql))
+    assert(chain(eSql).contains(refusal), chain(eSql))
   }
 
   test("A44 key types: TIMESTAMP- and DECIMAL-keyed erases serve through the SQL surface (canonical key values across physical encodings)") {
@@ -2628,6 +2655,7 @@ class V2SourceSpec extends SparkSpecBase {
   }
 
   test("torn manifests never serve: incomplete bodies refuse/skip; re-publish reuses prior recorded stats") {
+    import graft.sources.SnapshotManifest
     import graft.sources.v2.GraftPlanStats
     val wh = graft.sources.GraftSink.scratchDir + "/torn_wh"
     val dir = s"$wh/t.parquet"
@@ -2649,7 +2677,7 @@ class V2SourceSpec extends SparkSpecBase {
     assert(publishOpens === 1L,
       s"re-publish must only open the appended file's footer, got $publishOpens")
     // the reused lines still plan zero-footer and value-exact
-    val snapDir = GraftPlanStats.snapshotsDirFor(dir)
+    val snapDir = SnapshotManifest.dirFor(dir)
     val raw = GraftPlanStats.rawForTable(dir, conf)
     assert(raw.size === 3, s"v$v2 must record all 3 files: ${raw.keys}")
     assert(spark.read.format("graft").load(dir).count() ===
@@ -2657,11 +2685,11 @@ class V2SourceSpec extends SparkSpecBase {
     // (2) a manifest WITH stats lines but WITHOUT the terminator is
     // torn: rawForTable ignores it (no cache), tableAsOf refuses,
     // the tail never addresses it
-    val full = GraftPlanStats.readBody(snapDir, v2, conf).get
-    assert(GraftPlanStats.isComplete(full))
+    val full = SnapshotManifest.read(fs, snapDir, v2).get
+    assert(full.complete)
     val tornId = v2 + 1
-    val out = fs.create(new org.apache.hadoop.fs.Path(snapDir, s"v$tornId"), false)
-    try out.write(full.dropRight(1).mkString("\n")
+    val out = fs.create(SnapshotManifest.file(snapDir, tornId), false)
+    try out.write(SnapshotManifest.render(full.copy(complete = false))
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     assert(GraftPlanStats.rawForTable(dir, conf).size === 3,
@@ -2677,9 +2705,34 @@ class V2SourceSpec extends SparkSpecBase {
       spark.read.parquet(dir).schema, graft.sources.v2.GraftV2.sessionConf())
     assert(stream.latestOffset().asInstanceOf[graft.sources.v2.GraftEpochOffset]
       .epoch === v2, "the tail must stop at the newest COMPLETE epoch")
-    // cleanup: drop the torn manifest so later reads of this scratch
+    // (2b) a body cut INSIDE its first data line (the length written,
+    // no tab yet) is torn too: planning falls back, the tail stays at
+    // v2, tableAsOf refuses — none of them fails to parse the prefix
+    fs.delete(SnapshotManifest.file(snapDir, tornId), false)
+    val whole = SnapshotManifest.render(full)
+    val cutAt = whole.indexOf(s"\n${full.files.head._2}\t") + 2
+    val cut = fs.create(SnapshotManifest.file(snapDir, tornId), false)
+    try cut.write(whole.take(cutAt).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally cut.close()
+    assert(GraftPlanStats.rawForTable(dir, conf).size === 3,
+      "a body cut inside a data line must fall back to v2's stats")
+    assert(stream.latestOffset().asInstanceOf[graft.sources.v2.GraftEpochOffset]
+      .epoch === v2, "the tail must not address a body cut inside a line")
+    val eCut = intercept[Exception](cat.tableAsOf("t", tornId).count())
+    assert(chain(eCut).contains("in-flight or torn"), chain(eCut))
+    // (3) a LEGACY body — written before stats lines and the terminator
+    // existed, so it carries neither — is whole and still reads
+    fs.delete(SnapshotManifest.file(snapDir, tornId), false)
+    val legacyId = tornId + 1
+    val legacy = fs.create(SnapshotManifest.file(snapDir, legacyId), false)
+    try legacy.write(SnapshotManifest.render(full.copy(publishedAt = None,
+        statsLines = Nil, complete = false))
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally legacy.close()
+    assert(cat.tableAsOf("t", legacyId).count() === cat.tableAsOf("t", v2).count())
+    // cleanup: drop the legacy manifest so later reads of this scratch
     // table (none today) see a clean log
-    fs.delete(new org.apache.hadoop.fs.Path(snapDir, s"v$tornId"), false)
+    fs.delete(SnapshotManifest.file(snapDir, legacyId), false)
     assert(v1 >= 1L)
   }
 
@@ -2746,9 +2799,6 @@ class V2SourceSpec extends SparkSpecBase {
       .orderBy("o_orderkey").repartitionByRange(3, col("o_orderkey"))
       .sortWithinPartitions("o_orderkey")
       .write.option("parquet.block.size", "65536").parquet(dir)
-    val cat = new graft.sources.GraftCatalog(spark, wh)
-    val epoch = cat.publishSnapshot("t")
-    assert(epoch >= 1L)
     val conf = spark.sessionState.newHadoopConf()
     val files = GraftV2.dataFiles(dir, conf)
     val schema = spark.read.parquet(dir).schema
@@ -2766,6 +2816,12 @@ class V2SourceSpec extends SparkSpecBase {
       LessThan("o_orderpriority", "3-MEDIUM"))
     def mk(fl: Array[Filter]) = GraftScan(dir, schema, fl,
       pinnedFiles = files, tableSchema = schema)
+    // the footer path: the same files, planned before any publish
+    val footerAll = splits(mk(Array.empty))
+    val footerPruned = splits(mk(filters))
+    val footerStat = stat(mk(filters))
+    val epoch = new graft.sources.GraftCatalog(spark, wh).publishSnapshot("t")
+    assert(epoch >= 1L)
     // THE contract: planning + stats of a published table opens no
     // footer — splits come from the manifest's recorded #rg lines
     val before = GraftV2.footerOpens.get()
@@ -2776,14 +2832,11 @@ class V2SourceSpec extends SparkSpecBase {
       "planning a published table must open ZERO parquet footers")
     assert(recordedPruned.nonEmpty && recordedPruned.size < recordedAll.size,
       s"filters must prune recorded row groups: ${recordedPruned.size} of ${recordedAll.size}")
-    // parity: the footer path (escape hatch) plans IDENTICAL splits
-    // and identical statistics — one pruning rule, two stats sources
-    spark.conf.set("spark.graft.plan.manifestStats", "false")
-    try {
-      assert(splits(mk(Array.empty)) === recordedAll)
-      assert(splits(mk(filters)) === recordedPruned)
-      assert(stat(mk(filters)) === recordedStat)
-    } finally spark.conf.unset("spark.graft.plan.manifestStats")
+    // parity: the footer path plans IDENTICAL splits and identical
+    // statistics — one pruning rule, two stats sources
+    assert(footerAll === recordedAll)
+    assert(footerPruned === recordedPruned)
+    assert(footerStat === recordedStat)
     // values through the full read path stay exact
     val got = spark.read.format("graft").load(dir)
       .where(col("o_totalprice") > 150000.0)
