@@ -1,12 +1,25 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptContext, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
-/** Shared low-overhead filesystem + parquet-read helpers (r16
-  * optimization round). Two measured driver-side costs motivate this
-  * file (profiled with graft.tools.ProfileQuery on the MOR ladders):
+/** Shared low-overhead filesystem + parquet read/write helpers (r16
+  * optimization round). Three measured costs motivate this file (the
+  * first two profiled with graft.tools.ProfileQuery on the MOR
+  * ladders):
   *
   *  1. `FileSystem.listFiles(path, recursive)` materializes
   *     `LocatedFileStatus`es whose constructor EAGERLY loads POSIX
@@ -32,6 +45,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *     summaries, index layouts, scratch tables); NOT for
   *     hive-partitioned directory layouts, where a user-supplied
   *     schema would drop the partition columns.
+  *
+  *  3. `DataFrameWriter.parquet` (Spark's `FileFormatWriter`) packs the
+  *     session's whole Hadoop conf — 1,106 properties, ~114 KB — into
+  *     every write stage's task binary, and commits through
+  *     `FileOutputCommitter`'s `_temporary` rename round.
+  *     [[writeParquet]] ships Spark's parquet writer factory, the few
+  *     keys that configure it and the session conf broadcast, and
+  *     returns the files its tasks wrote, for the caller to move in.
   */
 object GraftIO {
 
@@ -77,6 +98,13 @@ object GraftIO {
         Some(bytes.toString(java.nio.charset.StandardCharsets.UTF_8.name()))
       } finally in.close()
     } catch { case _: java.io.FileNotFoundException => None }
+
+  /** [[readText]] for a marker that is usually absent: one status
+    * probe answers the absent case, so only a present marker is opened
+    * (a failed open costs more than a status call on every store).
+    */
+  def readMarker(fs: FileSystem, path: Path): Option[String] =
+    if (fs.exists(path)) readText(fs, path) else None
 
   /** Write `body` (UTF-8) as the whole content of `path`, closing the
     * stream on every exit. `overwrite = false` fails on an existing
@@ -193,4 +221,169 @@ object GraftIO {
       case None    => s.read.parquet(paths: _*)
     }
   }
+
+  /** Write `df` as parquet files under the batch-private directory
+    * `stage` and return the files written, relative to `stage`. One
+    * Spark job, run as a SQL execution named `graft <op>`. Each task
+    * writes its rows with Spark's own parquet output writer (the
+    * factory `ParquetFileFormat.prepareWrite` returns), so footers,
+    * codec and types are those of `DataFrameWriter.parquet`; a task
+    * ships that factory, the few conf keys `prepareWrite` sets and the
+    * session conf broadcast handle, never the conf itself.
+    *
+    * A task with no rows writes no file. A failed task attempt's files
+    * are not returned, so a caller that moves in exactly the returned
+    * files never lands them; dropping `stage` discards them.
+    * `partitionCols` lays the files out in hive `col=value` directories
+    * and leaves those columns out of the files, as `partitionBy` does.
+    * `keepEmpty` writes one row-less file when no task wrote any, for
+    * a result that must stay readable with its schema.
+    */
+  def writeParquet(df: DataFrame, stage: Path, op: String,
+      partitionCols: Seq[String] = Nil, keepEmpty: Boolean = false): Seq[String] = {
+    require(!(keepEmpty && partitionCols.nonEmpty),
+      "[GRAFT] keepEmpty applies to unpartitioned writes only")
+    val s = df.sparkSession
+    val dataSchema = StructType(df.schema.filterNot(f => partitionCols.contains(f.name)))
+    // partition values travel as their hive strings, grouped per task
+    // so each task holds one open file at a time (Spark's own rule)
+    val input =
+      if (partitionCols.isEmpty) df
+      else df.select(dataSchema.fieldNames.map(col) ++
+          partitionCols.map(c => col(c).cast("string").as(c)): _*)
+        .sortWithinPartitions(partitionCols.map(col): _*)
+    val writer = taskWriter(s, dataSchema, stage, partitionCols)
+    val written = org.apache.spark.sql.graft.Bridge.withExecution(input, s"graft $op") { rdd =>
+      s.sparkContext.runJob(rdd, writer.write _)
+    }.toSeq.flatten
+    if (written.nonEmpty || !keepEmpty) written
+    else Seq(writeRows(s, dataSchema, Nil, stage).getName)
+  }
+
+  /** What one write's tasks receive: Spark's parquet writer factory
+    * for `dataSchema`, the conf keys that configure it and the session
+    * conf broadcast handle.
+    */
+  private[graft] def taskWriter(s: SparkSession, dataSchema: StructType, stage: Path,
+      partitionCols: Seq[String]): ParquetTaskWriter = {
+    val (factory, keys) = prepareParquet(s, dataSchema)
+    new ParquetTaskWriter(factory, keys, graft.sources.v2.GraftV2.sessionConf(),
+      stage.toString, dataSchema, partitionCols, java.util.UUID.randomUUID().toString,
+      s.sessionState.conf.maxRecordsPerFile)
+  }
+
+  /** Write `rows` as one parquet file in `dir` on the driver, through
+    * the same Spark writer as [[writeParquet]], and return the file.
+    * No Spark job; the file is written under a hidden name without the
+    * `.parquet` suffix and renamed, so neither a reader nor a sidecar
+    * listing ever sees it half written.
+    */
+  def writeRows(s: SparkSession, schema: StructType, rows: Seq[InternalRow],
+      dir: Path): Path = {
+    val (factory, keys) = prepareParquet(s, schema)
+    val conf = s.sessionState.newHadoopConf()
+    keys.foreach { case (k, v) => conf.set(k, v) }
+    val ctx = ParquetTaskWriter.attemptContext(conf, 0, 0)
+    val name = ParquetTaskWriter.fileName(0, java.util.UUID.randomUUID().toString, 0L, 0,
+      factory.getFileExtension(ctx))
+    val tmp = new Path(dir, s".$name.tmp")
+    val fs = tmp.getFileSystem(conf)
+    try {
+      val out = factory.newInstance(tmp.toString, schema, ctx)
+      try rows.foreach(out.write) finally out.close()
+    } catch { case NonFatal(e) =>
+      try fs.delete(tmp, false) catch { case NonFatal(x) => e.addSuppressed(x) }
+      throw e
+    }
+    val dst = new Path(dir, name)
+    if (!fs.rename(tmp, dst))
+      throw new IllegalStateException(s"[GRAFT] rename($tmp -> $dst) returned false")
+    dst
+  }
+
+  /** Spark's parquet writer factory for `schema`, and the conf keys
+    * `prepareWrite` set to configure it (the keys whose value differs
+    * from the session's conf).
+    */
+  private def prepareParquet(s: SparkSession,
+      schema: StructType): (OutputWriterFactory, Map[String, String]) = {
+    val conf = s.sessionState.newHadoopConf()
+    val job = Job.getInstance(conf)
+    val factory = new ParquetFileFormat().prepareWrite(s, job, Map.empty, schema)
+    val keys = job.getConfiguration.iterator().asScala.collect {
+      case e if conf.getRaw(e.getKey) != e.getValue => e.getKey -> e.getValue
+    }.toMap
+    (factory, keys)
+  }
+}
+
+/** The task half of [[GraftIO.writeParquet]]: everything a write task
+  * receives. It holds no Hadoop `Configuration`: each task copies the
+  * session conf from its broadcast and sets `keys` on the copy.
+  */
+private[graft] final class ParquetTaskWriter(factory: OutputWriterFactory,
+    keys: Map[String, String], sessionConf: graft.sources.v2.GraftV2.SessionConf,
+    stage: String, dataSchema: StructType, partitionCols: Seq[String],
+    writeId: String, maxRecordsPerFile: Long) extends Serializable {
+
+  /** Write one partition's rows (data columns, then the partition
+    * columns as strings, grouped by them) and return the files written,
+    * relative to the stage.
+    */
+  def write(tc: TaskContext, rows: Iterator[InternalRow]): Seq[String] = {
+    val conf = new Configuration(sessionConf.value)
+    keys.foreach { case (k, v) => conf.set(k, v) }
+    val ctx = ParquetTaskWriter.attemptContext(conf, tc.partitionId, tc.attemptNumber)
+    val ext = factory.getFileExtension(ctx)
+    val nData = dataSchema.length
+    val project =
+      if (partitionCols.isEmpty) null
+      else UnsafeProjection.create(dataSchema.fields.toSeq.zipWithIndex.map {
+        case (f, i) => BoundReference(i, f.dataType, f.nullable) })
+    def dirOf(r: InternalRow): String = partitionCols.indices.map { i =>
+      val v = if (r.isNullAt(nData + i)) null else r.getUTF8String(nData + i).toString
+      ExternalCatalogUtils.getPartitionPathString(partitionCols(i), v)
+    }.mkString("/")
+    val files = Seq.newBuilder[String]
+    var out: OutputWriter = null
+    var dir: String = null
+    var inFile = 0L
+    var counter = 0
+    try {
+      rows.foreach { r =>
+        val d = if (project == null) "" else dirOf(r)
+        if (out == null || d != dir || (maxRecordsPerFile > 0 && inFile >= maxRecordsPerFile)) {
+          if (out != null) out.close()
+          out = null
+          counter = if (d == dir) counter + 1 else 0
+          val name = ParquetTaskWriter.fileName(tc.partitionId, writeId,
+            tc.taskAttemptId, counter, ext)
+          val rel = if (d.isEmpty) name else s"$d/$name"
+          files += rel
+          out = factory.newInstance(s"$stage/$rel", dataSchema, ctx)
+          dir = d
+          inFile = 0L
+        }
+        out.write(if (project == null) r else project(r))
+        inFile += 1
+      }
+      if (out != null) out.close()
+    } catch { case t: Throwable =>
+      // the attempt fails; its files stay unreturned in the stage
+      if (out != null) try out.close() catch { case NonFatal(e) => t.addSuppressed(e) }
+      throw t
+    }
+    files.result()
+  }
+}
+
+private[graft] object ParquetTaskWriter {
+  def fileName(partition: Int, writeId: String, attempt: Long, counter: Int,
+      ext: String): String =
+    f"part-$partition%05d-$writeId-$attempt-c$counter%03d$ext"
+
+  def attemptContext(conf: Configuration, partition: Int,
+      attempt: Int): TaskAttemptContext =
+    new TaskAttemptContextImpl(conf, new TaskAttemptID(
+      new TaskID(new JobID("graft", 0), TaskType.MAP, partition), attempt))
 }

@@ -41,9 +41,11 @@ import org.apache.hadoop.fs.permission.FsPermission
   *    needs real permission/owner bits must use its own conf with the
   *    stock `fs.file.impl` and `FileSystem.newInstance`.
   *  - `setPermission` maps only the LOW 9 PERMISSION BITS to java.nio
-  *    POSIX permissions and REJECTS setuid/setgid/sticky requests
-  *    (java.nio cannot express them; silently dropping them would turn
-  *    a security request into a no-op).
+  *    POSIX permissions. java.nio cannot express setuid/setgid/sticky,
+  *    so those bits are MASKED with a warning (logged once per JVM):
+  *    the FileSystem cache hands this impl to every same-JVM `file://`
+  *    caller, and Hive-style staging dirs ask for 1777 — refusing would
+  *    fail their writes, while the stock local FS sets the bits.
   */
 class GraftLocalFileSystem extends LocalFileSystem(new GraftRawLocalFileSystem) {
   override def initialize(uri: java.net.URI,
@@ -80,11 +82,13 @@ class GraftRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit = {
     val perms = new java.util.HashSet[java.nio.file.attribute.PosixFilePermission]()
     import java.nio.file.attribute.PosixFilePermission._
-    // only the low 9 bits are expressible via java.nio; refuse special
-    // bits loudly rather than silently dropping a security request
-    require((permission.toShort & ~0x1FF) == 0,
-      s"[GRAFT] GraftRawLocalFileSystem.setPermission cannot express " +
-        s"setuid/setgid/sticky bits (requested $permission on $p)")
+    // only the low 9 bits are expressible via java.nio
+    if ((permission.toShort & ~0x1FF) != 0 &&
+        GraftRawLocalFileSystem.warnedSpecialBits.compareAndSet(false, true))
+      org.slf4j.LoggerFactory.getLogger(classOf[GraftRawLocalFileSystem]).warn(
+        s"[GRAFT] setPermission($p, $permission): setuid/setgid/sticky bits " +
+          "cannot be set through java.nio and are masked to the low 9 bits " +
+          "(warned once per JVM)")
     val m = permission.toShort & 0x1FF
     if ((m & 0x100) != 0) perms.add(OWNER_READ)
     if ((m & 0x080) != 0) perms.add(OWNER_WRITE)
@@ -111,6 +115,10 @@ class GraftRawLocalFileSystem extends RawLocalFileSystem {
   override def getFileLinkStatus(f: Path): FileStatus =
     if (java.nio.file.Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
     else getFileStatus(f)
+}
+
+object GraftRawLocalFileSystem {
+  private val warnedSpecialBits = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
 
 /** The FileContext binding for `file://` (`fs.AbstractFileSystem.file

@@ -1,8 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, max}
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import scala.util.control.NonFatal
 
 /** A42/A43: MERGE-ON-READ mutation via DELETION VECTORS — the other
@@ -134,11 +136,28 @@ object GraftMor {
     // sequence at or above that, or the in-flight batch would mask it
     val seq = math.max(nextEpoch(s, tablePath, eqPath),
       reservedFloor(fs(s, tablePath), eqPath(tablePath))).toLong
-    import s.implicits._
-    files.map(graft.sources.v2.GraftMorMask.norm).toDF("file_norm")
-      .withColumn("file_seq", org.apache.spark.sql.functions.lit(seq))
-      .coalesce(1).write.mode(SaveMode.Append).parquet(seqmPath(tablePath))
+    appendSeqm(s, tablePath, files, seq)
   }
+
+  private val SeqmSchema = StructType(Seq(StructField("file_norm", StringType),
+    StructField("file_seq", LongType, nullable = false)))
+
+  /** One `_seqm` file mapping each of `files` to `seq`, written on the
+    * driver: a commit's few entries launch no Spark job.
+    */
+  private def appendSeqm(s: SparkSession, tablePath: String,
+      files: Seq[String], seq: Long): Unit =
+    if (files.nonEmpty)
+      GraftIO.writeRows(s, SeqmSchema, files.map(f => InternalRow(
+          UTF8String.fromString(graft.sources.v2.GraftMorMask.norm(f)), seq)),
+        new org.apache.hadoop.fs.Path(seqmPath(tablePath)))
+
+  /** The file list a feed or summary state records (`<state>/files`). */
+  private def writeFileList(s: SparkSession, dir: String,
+      files: Iterable[String]): Unit =
+    GraftIO.writeRows(s, StructType(Seq(StructField("file_norm", StringType))),
+      files.map(f => InternalRow(UTF8String.fromString(f))).toSeq,
+      new org.apache.hadoop.fs.Path(dir))
 
   /** Refuse a COW rewrite BY NAME while mutation sidecars are live: a
     * raw-read rewrite (merge/compact) would RESURRECT tombstoned rows
@@ -159,8 +178,9 @@ object GraftMor {
           "morCompact first")
   }
 
-  /** The table's current sidecar state — three listings + one tiny
-    * marker read, the whole metadata cost of a mask-aware read.
+  /** The table's current sidecar state — three listings + one status
+    * probe of the evolved-schema marker (read only when present), the
+    * whole metadata cost of a mask-aware read.
     */
   def sidecars(s: SparkSession, tablePath: String): Sidecars =
     Sidecars(
@@ -174,7 +194,7 @@ object GraftMor {
 
   private[sources] def readSchemaDdl(s: SparkSession,
       tablePath: String): Option[String] =
-    GraftIO.readText(fs(s, tablePath), schemaMarker(tablePath))
+    GraftIO.readMarker(fs(s, tablePath), schemaMarker(tablePath))
 
   /** Record the table's served schema in its `_schema/ddl` marker — the
     * one writer of that marker. `overwrite = false` is CREATE TABLE's
@@ -196,7 +216,7 @@ object GraftMor {
   /** The declared partition columns, empty when none were declared. */
   private[sources] def readPartCols(f: org.apache.hadoop.fs.FileSystem,
       tablePath: String): Seq[String] =
-    GraftIO.readText(f, partColsMarker(tablePath)).toSeq
+    GraftIO.readMarker(f, partColsMarker(tablePath)).toSeq
       .flatMap(_.split(",").filter(_.nonEmpty))
 
   /** The table's data files read with the recorded evolved schema when
@@ -507,10 +527,16 @@ object GraftMor {
     }
   }
 
+  /** Stage `tombstones`, then land them as the next position epoch,
+    * allocated once the write has succeeded. An input with no rows
+    * lands the epoch directory without a file, so the epoch still
+    * counts for `nextEpoch` and the feeds.
+    */
   private def writeEpoch(s: SparkSession, tablePath: String,
-      tombstones: DataFrame): Unit =
-    tombstones.write.mode(SaveMode.Overwrite)
-      .parquet(s"${dvPath(tablePath)}/epoch=${allocateEpoch(s, tablePath)}")
+      tombstones: DataFrame, op: String): Unit = {
+    val (stage, files) = writeStage(tombstones, tablePath, "dv", op)
+    moveIn(fs(s, tablePath), allocateDvEpochDir(s, tablePath), stage, files, op)
+  }
 
   /** Allocate (and name) the next position-tombstone epoch dir — the
     * A55 delta DML commit lands its task-written coordinate files
@@ -529,7 +555,7 @@ object GraftMor {
     */
   def morDelete(s: SparkSession, tablePath: String, cond: Column): Unit =
     writeEpoch(s, tablePath,
-      currentMatches(s, tablePath, sidecars(s, tablePath), _.where(cond)))
+      currentMatches(s, tablePath, sidecars(s, tablePath), _.where(cond)), "morDelete")
 
   /** A42 (key form): delete every row whose key appears in
     * `deleteKeys` — the GDPR erasure batch. The key set is broadcast;
@@ -540,7 +566,8 @@ object GraftMor {
       deleteKeys: DataFrame, keyCols: Seq[String]): Unit = {
     val keys = deleteKeys.select(keyCols.map(col): _*)
     writeEpoch(s, tablePath, currentMatches(s, tablePath,
-      sidecars(s, tablePath), _.join(broadcast(keys), keyCols, "left_semi")))
+      sidecars(s, tablePath), _.join(broadcast(keys), keyCols, "left_semi")),
+      "morDeleteKeys")
   }
 
   /** A44: EQUALITY delete — the other Iceberg-v2 delete-file flavor,
@@ -560,10 +587,10 @@ object GraftMor {
   def morErase(s: SparkSession, tablePath: String,
       eraseKeys: DataFrame, keyCols: Seq[String]): Unit = {
     checkEqKeys(s, tablePath, sidecars(s, tablePath), keyCols, "morErase")
-    eraseKeys.select(keyCols.map(col): _*).distinct()
-      .withColumn("seq", org.apache.spark.sql.functions.lit(EraseSeq))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"${eqPath(tablePath)}/epoch=${allocateEpoch(s, tablePath, eqPath)}")
+    val (stage, files) = writeStage(eraseKeys.select(keyCols.map(col): _*).distinct()
+      .withColumn("seq", lit(EraseSeq)), tablePath, "eq", "morErase")
+    moveIn(fs(s, tablePath), s"${eqPath(tablePath)}/epoch=${allocateEpoch(s, tablePath, eqPath)}",
+      stage, files, "morErase")
   }
 
   /** A45: SEQUENCE-NUMBERED equality upsert — the Flink-CDC-into-
@@ -595,33 +622,30 @@ object GraftMor {
     // mask the other's appends at its own number
     val epoch = allocateEpoch(s, tablePath, eqPath)
     val seq = epoch.toLong + 1L
-    // the new versions stage and move in by name (the A52 staging
-    // rule, see `moveIn`). They LAND AND SEQUENCE BEFORE the tombstone
-    // epoch writes, so a crash mid-commit serves transient duplicates
+    // the new versions and the tombstones both stage before anything
+    // lands (the A52 staging rule, see `moveIn`), so a failed write
+    // changes nothing. The versions LAND AND SEQUENCE BEFORE the
+    // tombstone epoch, so a crash mid-commit serves transient duplicates
     // (old + new versions), never a pure delete with the new versions
     // stranded.
-    val stage = stageDir(tablePath, s"eqbatch_$epoch")
-    updates.select(targetCols.map(col): _*)
-      .write.mode(SaveMode.Overwrite).parquet(stage.toString)
-    val landed = moveIn(fs(s, tablePath), tablePath, stage, "morUpsertEq")
-    if (landed.nonEmpty) {
-      import s.implicits._
-      landed.toDF("file_norm")
-        .withColumn("file_seq", org.apache.spark.sql.functions.lit(seq))
-        .coalesce(1).write.mode(SaveMode.Append).parquet(seqmPath(tablePath))
-    }
-    updates.select(keyCols.map(col): _*).distinct()
-      .withColumn("seq", org.apache.spark.sql.functions.lit(seq))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"${eqPath(tablePath)}/epoch=$epoch")
+    val f = fs(s, tablePath)
+    val (rowStage, rowFiles) = writeStage(updates.select(targetCols.map(col): _*),
+      tablePath, "eqbatch", "morUpsertEq")
+    val (eqStage, eqFiles) = try writeStage(updates.select(keyCols.map(col): _*)
+      .distinct().withColumn("seq", lit(seq)), tablePath, "eq", "morUpsertEq")
+    catch { case NonFatal(e) => dropStage(f, rowStage); throw e }
+    appendSeqm(s, tablePath, moveIn(f, tablePath, rowStage, rowFiles, "morUpsertEq"), seq)
+    moveIn(f, s"${eqPath(tablePath)}/epoch=$epoch", eqStage, eqFiles, "morUpsertEq")
   }
 
   /** A43: merge-on-read UPSERT — tombstone the matched keys' current
     * versions, then APPEND the update rows as new data files. Two
     * O(batch) writes, zero rewrites; the read path hides the old
-    * versions. Matched coordinates are materialized (the epoch write
-    * IS the action) BEFORE the append, so the tombstone scan can
-    * never see — and kill — the rows it is inserting. As in SQL
+    * versions. Both writes stage before anything lands, so the
+    * tombstone scan can never see — and kill — the rows it is
+    * inserting, and a failed write changes nothing. The new rows land
+    * first: a crash between the two move-ins serves transient
+    * duplicates, never a pure delete. As in SQL
     * MERGE, `updates` carries at most one row per key. Repeated
     * upserts of the same key chain naturally: the next batch's
     * semi-join tombstones the previously-appended version too. With a
@@ -638,56 +662,75 @@ object GraftMor {
     // land (recorded in the _schema marker); breaking changes are
     // refused by name.
     val targetCols = evolveForBatch(s, tablePath, sc, updates, "morUpsert")
-    writeEpoch(s, tablePath, currentMatches(s, tablePath, sc,
-      _.join(broadcast(keys), keyCols, "left_semi")))
-    val rows = updates.select(targetCols.map(col): _*)
-    if (sc.eq.isEmpty) rows.write.mode(SaveMode.Append).parquet(tablePath)
-    else {
-      // a live equality sidecar masks by file sequence, and a plain
-      // append reads as base sequence 0 — an older morUpsertEq of the
-      // same key would mask the new version. Stage the batch so its
-      // exact file set is known, then sequence it above every existing
-      // finite tombstone (erases still outrank it).
-      val stage = stageDir(tablePath, s"upsert_${java.util.UUID.randomUUID()}")
-      rows.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-      sequenceAppendedFiles(s, tablePath,
-        moveIn(fs(s, tablePath), tablePath, stage, "morUpsert"))
+    val f = fs(s, tablePath)
+    val (rowStage, rowFiles) = writeStage(updates.select(targetCols.map(col): _*),
+      tablePath, "upsert", "morUpsert")
+    val (dvStage, dvFiles) = try writeStage(currentMatches(s, tablePath, sc,
+        _.join(broadcast(keys), keyCols, "left_semi")), tablePath, "dv", "morUpsert")
+    catch { case NonFatal(e) => dropStage(f, rowStage); throw e }
+    // the batch's exact file set is known: with a live equality sidecar
+    // it is sequenced above every existing finite tombstone (erases
+    // still outrank it), or an older morUpsertEq of the same key would
+    // mask the new version
+    sequenceAppendedFiles(s, tablePath, moveIn(f, tablePath, rowStage, rowFiles, "morUpsert"))
+    moveIn(f, allocateDvEpochDir(s, tablePath), dvStage, dvFiles, "morUpsert")
+  }
+
+  /** A batch-private staging dir `<root>/_staging/<batch>` — the `_`
+    * prefix hides it from every read path and data-file listing.
+    */
+  private def stageDir(root: String, batch: String) =
+    new org.apache.hadoop.fs.Path(
+      s"$root/_staging/${batch}_${java.util.UUID.randomUUID()}")
+
+  /** Write `df` through the graft task writer into a fresh stage under
+    * `root` (the A52 staging rule) and return the stage with the files
+    * written, relative to it. A write that throws drops its stage, so
+    * `root` is left as it was.
+    */
+  private def writeStage(df: DataFrame, root: String, batch: String, op: String,
+      partitionCols: Seq[String] = Nil,
+      keepEmpty: Boolean = false): (org.apache.hadoop.fs.Path, Seq[String]) = {
+    val stage = stageDir(root, batch)
+    try (stage, GraftIO.writeParquet(df, stage, op, partitionCols, keepEmpty))
+    catch { case NonFatal(e) =>
+      try dropStage(fs(df.sparkSession, root), stage) catch { case NonFatal(x) => e.addSuppressed(x) }
+      throw e
     }
   }
 
-  /** A batch-private staging dir `<table>/_staging/<batch>` — the
-    * `_` prefix hides it from every read path and data-file listing.
-    */
-  private def stageDir(tablePath: String, batch: String) =
-    new org.apache.hadoop.fs.Path(s"$tablePath/_staging/$batch")
-
-  /** The A52 staging rule's move-in: rename every visible file written
-    * under `stage` into the table, keeping its path below the stage
-    * (hive partition dirs), then drop the stage and its `_staging`
-    * shell when empty. The batch's file set is known EXACTLY — a
-    * before/after listing diff could capture (and mis-sequence) a
-    * concurrent writer's simultaneous appends. Files `keep` rejects
-    * are discarded with the stage. Returns the landed files'
-    * scheme-less paths.
-    */
-  private def moveIn(f: org.apache.hadoop.fs.FileSystem, tablePath: String,
-      stage: org.apache.hadoop.fs.Path, op: String,
-      keep: org.apache.hadoop.fs.Path => Boolean = _ => true): Seq[String] = {
-    val root = stage.toUri.getPath
-    val landed = GraftIO.walkVisibleFiles(f, stage).map(_.getPath).filter(keep)
-      .map { src =>
-        val rel = src.toUri.getPath.stripPrefix(root).stripPrefix("/")
-        val dst = new org.apache.hadoop.fs.Path(tablePath, rel)
-        if (rel.contains('/')) f.mkdirs(dst.getParent)
-        if (!f.rename(src, dst))
-          throw new IllegalStateException(
-            s"[GRAFT] $op move-in failed: rename($src -> $dst) returned false")
-        graft.sources.v2.GraftMorMask.norm(dst.toUri.getPath)
-      }
+  /** Delete `stage` and its `_staging` shell when nothing else is in it. */
+  private def dropStage(f: org.apache.hadoop.fs.FileSystem,
+      stage: org.apache.hadoop.fs.Path): Unit = {
     f.delete(stage, true)
     val shell = stage.getParent
     if (f.exists(shell) && f.listStatus(shell).isEmpty)
       f.delete(shell, false)
+  }
+
+  /** The A52 staging rule's move-in: rename exactly `files` (relative
+    * to `stage`, as the writer returned them) into `dest`, keeping
+    * their path below the stage (hive partition dirs), then drop the
+    * stage and its `_staging` shell when empty. The batch's file set is
+    * known EXACTLY — a before/after listing diff could capture (and
+    * mis-sequence) a concurrent writer's simultaneous appends — and a
+    * failed task attempt's files are discarded with the stage. `dest`
+    * is created even when `files` is empty. Returns the landed files'
+    * scheme-less paths.
+    */
+  private def moveIn(f: org.apache.hadoop.fs.FileSystem, dest: String,
+      stage: org.apache.hadoop.fs.Path, files: Seq[String], op: String): Seq[String] = {
+    val moves = files.map(rel =>
+      (new org.apache.hadoop.fs.Path(stage, rel), new org.apache.hadoop.fs.Path(dest, rel)))
+    (new org.apache.hadoop.fs.Path(dest) +: moves.map(_._2.getParent)).distinct
+      .foreach(f.mkdirs)
+    val landed = moves.map { case (src, dst) =>
+      if (!f.rename(src, dst))
+        throw new IllegalStateException(
+          s"[GRAFT] $op move-in failed: rename($src -> $dst) returned false")
+      graft.sources.v2.GraftMorMask.norm(dst.toUri.getPath)
+    }
+    dropStage(f, stage)
     landed
   }
 
@@ -831,11 +874,20 @@ object GraftMor {
       eq.groupBy(keyColsEq.map(col): _*).agg(max("seq").as("__max_seq"))
     }
     val seqOpt = seqFrame(s, sc)
-    if (dvOpt.isEmpty && eqOpt.isEmpty) return
+    val f = fs(s, tablePath)
+    // an epoch whose input had no rows is a directory without files: it
+    // masks nothing, but its directory still folds
+    def present(files: Seq[(String, Long)], dir: String) =
+      files.nonEmpty || f.exists(new org.apache.hadoop.fs.Path(dir))
+    val hasDv = present(sc.dv, dvPath(tablePath))
+    val hasEq = present(sc.eq, eqPath(tablePath))
+    if (!hasDv && !hasEq) return
+    val hasSeqm = present(sc.seqm, seqmPath(tablePath))
     // monotone epoch counters survive the clear: a consumer that
-    // stored "applied = N" can never later see a fresh epoch < N
-    val nextDv = nextEpoch(s, tablePath)
-    val nextEq = nextEpoch(s, tablePath, eqPath)
+    // stored "applied = N" can never later see a fresh epoch < N, and
+    // a reserved number whose write never landed stays burned
+    val nextDv = math.max(nextEpoch(s, tablePath), reservedFloor(f, dvPath(tablePath)))
+    val nextEq = math.max(nextEpoch(s, tablePath, eqPath), reservedFloor(f, eqPath(tablePath)))
     // attach each row's file sequence (manifest absent/missing → base
     // sequence 0) and build the A45 mask condition against `tomb`
     def withFileSeq(df: DataFrame): DataFrame = seqOpt match {
@@ -866,9 +918,8 @@ object GraftMor {
         .select("dv_file").distinct().collect().map(_.getString(0))
     }
     val affected = (dvFiles ++ eqFiles).distinct
-    val f = fs(s, tablePath)
-    def clear(): Unit = clearSidecars(f, tablePath, dvOpt.nonEmpty,
-      eqOpt.nonEmpty, seqOpt.nonEmpty, nextDv, nextEq)
+    def clear(): Unit = clearSidecars(f, tablePath, hasDv, hasEq, hasSeqm,
+      nextDv, nextEq)
     if (affected.isEmpty) { clear(); return }
     // basePath keeps hive partition columns attached when the affected
     // FILES are addressed directly
@@ -894,29 +945,17 @@ object GraftMor {
     val dataCols = scanned.columns
       .filterNot(Set("dv_file", "dv_pos", "__fn", "file_norm", "file_seq",
         "__file_seq"))
-    val stage = stageDir(tablePath, s"compact_${java.util.UUID.randomUUID()}")
-    try {
-      val w = masked.select(dataCols.map(col): _*).write.mode(SaveMode.Overwrite)
-      if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*).parquet(stage.toString)
-      else w.parquet(stage.toString)
-    } catch { case NonFatal(e) =>
-      // nothing live was touched: drop the partial stage and rethrow
-      try f.delete(stage, true) catch { case NonFatal(_) => }
-      throw e
-    }
+    // nothing live is touched before the survivors are staged; a task
+    // with no survivors writes no file
+    val (stage, files) = writeStage(masked.select(dataCols.map(col): _*),
+      tablePath, "compact", "morCompact", partitionCols)
     affected.foreach { file =>
       if (!f.delete(new org.apache.hadoop.fs.Path(file), false))
         throw new IllegalStateException(
           s"[GRAFT] morCompact failed to remove $file")
     }
     clear()
-    // Spark's first write task keeps a row-less file for the schema
-    // even when it has no rows; its footer says so, and it is dropped
-    // instead of landing
-    val conf = s.sessionState.newHadoopConf()
-    moveIn(f, tablePath, stage, "morCompact", p =>
-      graft.sources.v2.GraftV2.withReader(p.toString, conf)(
-        _.getFooter.getBlocks.asScala.exists(_.getRowCount > 0)))
+    moveIn(f, tablePath, stage, files, "morCompact")
   }
 
   private[sources] def toMicros(t: java.time.LocalDateTime): Long =
@@ -1008,7 +1047,7 @@ object GraftMor {
       }).localCheckpoint(true)
       try {
         tombstoned = coords.count()
-        if (tombstoned > 0L) writeEpoch(s, tablePath, coords)
+        if (tombstoned > 0L) writeEpoch(s, tablePath, coords, "retentionSweep")
       } finally graft.GraftSession.releaseCheckpoint(coords)
     }
     (wholly.length, tombstoned)
@@ -1132,14 +1171,17 @@ object GraftMor {
         .withColumn("change_type", lit("I"))
       case ps => ps.reduce(_ unionByName _)
     }
-    try body
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$feedRoot/segments/seq=$nextSeq")
-    finally dHeld.foreach(graft.GraftSession.releaseCheckpoint)
+    try {
+      // a replayed publish replaces the crashed one's segment
+      val segment = s"$feedRoot/segments/seq=$nextSeq"
+      val (stage, files) = writeStage(body, feedRoot, "segment", "publishMorFeed",
+        keepEmpty = true)
+      f.delete(hp(segment), true)
+      moveIn(f, segment, stage, files, "publishMorFeed")
+    } finally dHeld.foreach(graft.GraftSession.releaseCheckpoint)
     // state advances AFTER the segment is durable
-    import s.implicits._
-    curFiles.toSeq.toDF("file_norm").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$stagePath/files")
+    f.delete(hp(stagePath), true)
+    writeFileList(s, s"$stagePath/files", curFiles)
     val out = f.create(marker(stagePath), true)
     try { out.writeLong(nextSeq); out.writeInt(curEpochs) } finally out.close()
     f.delete(hp(statePath), true)
@@ -1251,7 +1293,7 @@ object GraftMor {
     val merged = foldPartials(parts.result(), groupCols)
       .localCheckpoint(true) // the swap deletes the files this read
     try {
-      merged.write.mode(SaveMode.Overwrite).parquet(stagePath)
+      landMerged(merged, stagePath, "consumeMorFeed")
       val out = f.create(marker(stagePath), true)
       try out.writeLong(tip) finally out.close()
       f.delete(hp(livePath), true)
@@ -1261,6 +1303,18 @@ object GraftMor {
             s"rename($stagePath -> $livePath) returned false")
     } finally graft.GraftSession.releaseCheckpoint(merged)
     graft.sources.GraftIO.readParquet(s, livePath)
+  }
+
+  /** Write a folded rollup or summary as the whole content of the
+    * staging dir `dir` (a leftover from a crashed run is replaced),
+    * staged inside it; it keeps a row-less file when empty, so the
+    * swapped-in result always reads with its schema.
+    */
+  private def landMerged(merged: DataFrame, dir: String, op: String): Unit = {
+    val f = fs(merged.sparkSession, dir)
+    f.delete(new org.apache.hadoop.fs.Path(dir), true)
+    val (stage, files) = writeStage(merged, dir, "merged", op, keepEmpty = true)
+    moveIn(f, dir, stage, files, op)
   }
 
   /** Pending tombstone rows across both sidecar flavors — the
@@ -1383,10 +1437,8 @@ object GraftMor {
     val merged = foldPartials(parts.result(), groupCols)
       .localCheckpoint(true) // the swap deletes the files this read
     try {
-      merged.write.mode(SaveMode.Overwrite).parquet(stagePath)
-      import s.implicits._
-      curFiles.toSeq.toDF("file_norm").coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$stagePath/_state/files")
+      landMerged(merged, stagePath, "morIncrementalAgg")
+      writeFileList(s, s"$stagePath/_state/files", curFiles)
       val out = f.create(marker(stagePath), true)
       try out.writeInt(curEpochs) finally out.close()
       f.delete(hp(summaryPath), true)

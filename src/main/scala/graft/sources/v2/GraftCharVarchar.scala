@@ -50,7 +50,7 @@ object GraftCharVarchar {
 
   /** Declared (column, isChar, n) triples, empty when none. */
   def read(fs: FileSystem, tablePath: String): Seq[(String, Boolean, Int)] = {
-    val body = graft.sources.GraftIO.readText(fs, marker(tablePath))
+    val body = graft.sources.GraftIO.readMarker(fs, marker(tablePath))
       .getOrElse(return Seq.empty)
     body.split("\n").toSeq.flatMap { l =>
       l.split("\t", 3) match {

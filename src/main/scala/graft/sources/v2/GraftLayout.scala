@@ -207,7 +207,7 @@ object GraftLayout {
   def readMarker(fs: org.apache.hadoop.fs.FileSystem,
       tablePath: String): Option[Layout] = {
     val p = markerPath(tablePath)
-    val body = graft.sources.GraftIO.readText(fs, p).getOrElse(return None)
+    val body = graft.sources.GraftIO.readMarker(fs, p).getOrElse(return None)
     body.split("\t") match {
       case Array(kind, cols) =>
         Some(Layout(kind, cols.split(",").filter(_.nonEmpty).toSeq))

@@ -1,9 +1,13 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Column ↔ catalyst Expression bridge for Spark 4 (where Column wraps
   * a ColumnNode, not an Expression). Lives under org.apache.spark.sql
@@ -18,4 +22,18 @@ object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Run `body` over `df`'s row RDD as one SQL execution named `name`,
+    * the way a Dataset action runs: the session's SQL confs reach the
+    * tasks, and listeners see the execution. `name` is also the jobs'
+    * description unless the caller set one.
+    */
+  def withExecution[T](df: DataFrame, name: String)(body: RDD[InternalRow] => T): T = {
+    val qe = df.queryExecution
+    val sc = df.sparkSession.sparkContext
+    val described = sc.getLocalProperty(SparkContext.SPARK_JOB_DESCRIPTION) != null
+    if (!described) sc.setJobDescription(name)
+    try SQLExecution.withNewExecutionId(qe, Some(name))(body(qe.toRdd))
+    finally if (!described) sc.setJobDescription(null)
+  }
 }

@@ -122,6 +122,11 @@ class ConfShippingSpec extends SparkSpecBase {
       out.takeRight(30).mkString("\n"))
   }
 
+  private def sourceLines(f: java.io.File): List[String] = {
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    try src.getLines().toList finally src.close()
+  }
+
   test("source lint: only GraftV2 handles SerializableConfiguration") {
     val root = new java.io.File("src/main/scala/graft")
     assume(root.isDirectory, "source tree not available")
@@ -129,8 +134,7 @@ class ConfShippingSpec extends SparkSpecBase {
       if (f.isDirectory) files(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     }
     val offenders = files(root).flatMap { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      val lines = try src.getLines().toList finally src.close()
+      val lines = sourceLines(f)
       val v2 = lines.indexOf("object GraftV2 {")
       val allowedFrom =
         if (f.getName == "GraftDataSource.scala" && v2 >= 0) v2 else Int.MaxValue
@@ -143,6 +147,36 @@ class ConfShippingSpec extends SparkSpecBase {
       "executor-side code reads the Hadoop conf through GraftV2.sessionConf(); " +
         "a SerializableConfiguration elsewhere ships a ~114 KB conf per task:\n" +
         offenders.mkString("\n"))
+  }
+
+  test("source lint: GraftMor writes only through the graft task writer, which holds no conf") {
+    val mor = new java.io.File("src/main/scala/graft/sources/GraftMor.scala")
+    val io = new java.io.File("src/main/scala/graft/sources/GraftIO.scala")
+    assume(mor.isFile && io.isFile, "source tree not available")
+    // a DataFrameWriter call: `.write` not applied to arguments
+    val dfWrite = """\.write\b(?!\s*\()|DataFrameWriter|SaveMode""".r
+    val writes = sourceLines(mor).zipWithIndex.collect {
+      case (l, i) if !l.trim.startsWith("*") && !l.trim.startsWith("//") &&
+          dfWrite.findFirstIn(l.split("//").head).isDefined =>
+        s"GraftMor.scala:${i + 1}: $l"
+    }
+    // the task writer's fields: its constructor parameters
+    val ioSrc = sourceLines(io).mkString("\n")
+    val ctor = ioSrc.indexOf("class ParquetTaskWriter(")
+    assert(ctor >= 0, "GraftIO defines ParquetTaskWriter")
+    val params = ioSrc.substring(ctor, ioSrc.indexOf("extends Serializable", ctor))
+    val confFields = """\b(Serializable)?Configuration\b""".r.findAllIn(params).toSeq
+    assert(writes.isEmpty && confFields.isEmpty,
+      "GraftMor writes through GraftIO.writeParquet/writeRows, whose task writer ships " +
+        "the session conf as a broadcast handle:\n" + (writes ++ confFields).mkString("\n"))
+  }
+
+  test("the graft task writer carries no serialized conf") {
+    val schema = spark.read.parquet(s"$sfDir/orders.parquet").schema
+    val w = graft.sources.GraftIO.taskWriter(spark, schema,
+      new org.apache.hadoop.fs.Path(s"${graft.sources.GraftSink.scratchDir}/conf_ship_w"), Nil)
+    val n = serializedBytes(w)
+    assert(n < 8 * 1024, s"the task writer serializes to $n bytes: it ships the conf itself")
   }
 }
 
