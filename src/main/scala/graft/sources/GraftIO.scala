@@ -106,6 +106,17 @@ object GraftIO {
   def readMarker(fs: FileSystem, path: Path): Option[String] =
     if (fs.exists(path)) readText(fs, path) else None
 
+  /** Delete the directory `dir` when it is empty — a shared parent
+    * such as a table's `_staging` shell. Best-effort: another writer
+    * may add its own entry between the listing and the delete (which a
+    * non-recursive delete then refuses) or remove `dir` first; either
+    * way what is left is that writer's to clear, and the caller's
+    * commit does not fail over it.
+    */
+  def dropIfEmpty(fs: FileSystem, dir: Path): Unit =
+    try { if (fs.listStatus(dir).isEmpty) fs.delete(dir, false) }
+    catch { case _: java.io.IOException => }
+
   /** Write `body` (UTF-8) as the whole content of `path`, closing the
     * stream on every exit. `overwrite = false` fails on an existing
     * file (create-if-absent).
@@ -267,7 +278,7 @@ object GraftIO {
   private[graft] def taskWriter(s: SparkSession, dataSchema: StructType, stage: Path,
       partitionCols: Seq[String]): ParquetTaskWriter = {
     val (factory, keys) = prepareParquet(s, dataSchema)
-    new ParquetTaskWriter(factory, keys, graft.sources.v2.GraftV2.sessionConf(),
+    new ParquetTaskWriter(factory, keys, graft.sources.v2.GraftV2.sessionConf(s),
       stage.toString, dataSchema, partitionCols, java.util.UUID.randomUUID().toString,
       s.sessionState.conf.maxRecordsPerFile)
   }

@@ -468,11 +468,13 @@ object GraftMor {
     * in the `_schema` marker so every read path (and pre-evolution
     * files) serves it null-filled; anything breaking (dropped column,
     * retype/widen, non-nullable add) is refused BY NAME. Returns the
-    * batch's write column order: table order first, added columns
-    * appended (parquet appends are positional at write time).
+    * batch's write column order (table order first, added columns
+    * appended: parquet appends are positional at write time) and the
+    * widened DDL when columns were added, for the caller to record
+    * once its batch has staged.
     */
   private def evolveForBatch(s: SparkSession, tablePath: String,
-      sc: Sidecars, updates: DataFrame, op: String): Seq[String] = {
+      sc: Sidecars, updates: DataFrame, op: String): (Seq[String], Option[String]) = {
     val tableSchema = readTable(s, tablePath, sc).schema
     val changes = GraftSchemaPolicy.diff(tableSchema, updates.schema)
     // an added column is recorded NULLABLE here whatever the batch
@@ -490,14 +492,9 @@ object GraftMor {
           "\n(evolve additively — new nullable columns — or rewrite the table)")
     val added = changes.collect {
       case a: GraftSchemaPolicy.AddedColumn => a.name }
-    if (added.nonEmpty) {
-      val widened = org.apache.spark.sql.types.StructType(
-        tableSchema.fields ++ added.map(n =>
-          updates.schema(n).copy(nullable = true)))
-      writeSchemaDdl(fs(s, tablePath), tablePath, widened.toDDL,
-        overwrite = true)
-    }
-    tableSchema.fieldNames.toSeq ++ added
+    val widened = Option.when(added.nonEmpty)(org.apache.spark.sql.types.StructType(
+      tableSchema.fields ++ added.map(n => updates.schema(n).copy(nullable = true))).toDDL)
+    (tableSchema.fieldNames.toSeq ++ added, widened)
   }
 
   /** The (file, position) coordinates of every CURRENT row matching
@@ -614,7 +611,7 @@ object GraftMor {
       keyCols: Seq[String]): Unit = {
     val sc = sidecars(s, tablePath)
     checkEqKeys(s, tablePath, sc, keyCols, "morUpsertEq")
-    val targetCols = evolveForBatch(s, tablePath, sc, updates, "morUpsertEq")
+    val (targetCols, widened) = evolveForBatch(s, tablePath, sc, updates, "morUpsertEq")
     // the commit sequence: one past the last eq epoch (erases consume
     // epoch numbers too, keeping the counter monotone across flavors);
     // the epoch is ATOMICALLY allocated (A59) — two concurrent upserts
@@ -623,27 +620,31 @@ object GraftMor {
     val epoch = allocateEpoch(s, tablePath, eqPath)
     val seq = epoch.toLong + 1L
     // the new versions and the tombstones both stage before anything
-    // lands (the A52 staging rule, see `moveIn`), so a failed write
-    // changes nothing. The versions LAND AND SEQUENCE BEFORE the
-    // tombstone epoch, so a crash mid-commit serves transient duplicates
-    // (old + new versions), never a pure delete with the new versions
-    // stranded.
+    // lands (the A52 staging rule, see `moveIn`), and a widened schema
+    // is recorded only then, so a failed write changes nothing. The
+    // versions LAND AND SEQUENCE BEFORE the tombstone epoch, so a crash
+    // mid-commit serves transient duplicates (old + new versions),
+    // never a pure delete with the new versions stranded.
     val f = fs(s, tablePath)
     val (rowStage, rowFiles) = writeStage(updates.select(targetCols.map(col): _*),
       tablePath, "eqbatch", "morUpsertEq")
     val (eqStage, eqFiles) = try writeStage(updates.select(keyCols.map(col): _*)
       .distinct().withColumn("seq", lit(seq)), tablePath, "eq", "morUpsertEq")
     catch { case NonFatal(e) => dropStage(f, rowStage); throw e }
-    appendSeqm(s, tablePath, moveIn(f, tablePath, rowStage, rowFiles, "morUpsertEq"), seq)
-    moveIn(f, s"${eqPath(tablePath)}/epoch=$epoch", eqStage, eqFiles, "morUpsertEq")
+    try {
+      widened.foreach(writeSchemaDdl(f, tablePath, _, overwrite = true))
+      appendSeqm(s, tablePath, land(f, tablePath, rowStage, rowFiles, "morUpsertEq"), seq)
+      land(f, s"${eqPath(tablePath)}/epoch=$epoch", eqStage, eqFiles, "morUpsertEq")
+    } finally { dropStage(f, rowStage); dropStage(f, eqStage) }
   }
 
   /** A43: merge-on-read UPSERT — tombstone the matched keys' current
     * versions, then APPEND the update rows as new data files. Two
     * O(batch) writes, zero rewrites; the read path hides the old
-    * versions. Both writes stage before anything lands, so the
-    * tombstone scan can never see — and kill — the rows it is
-    * inserting, and a failed write changes nothing. The new rows land
+    * versions. Both writes stage before anything lands (and before a
+    * widened schema is recorded), so the tombstone scan can never see
+    * — and kill — the rows it is inserting, and a failed write changes
+    * nothing. The new rows land
     * first: a crash between the two move-ins serves transient
     * duplicates, never a pure delete. As in SQL
     * MERGE, `updates` carries at most one row per key. Repeated
@@ -661,19 +662,22 @@ object GraftMor {
     // files whose footers disagree with the table's. Additive columns
     // land (recorded in the _schema marker); breaking changes are
     // refused by name.
-    val targetCols = evolveForBatch(s, tablePath, sc, updates, "morUpsert")
+    val (targetCols, widened) = evolveForBatch(s, tablePath, sc, updates, "morUpsert")
     val f = fs(s, tablePath)
     val (rowStage, rowFiles) = writeStage(updates.select(targetCols.map(col): _*),
       tablePath, "upsert", "morUpsert")
     val (dvStage, dvFiles) = try writeStage(currentMatches(s, tablePath, sc,
         _.join(broadcast(keys), keyCols, "left_semi")), tablePath, "dv", "morUpsert")
     catch { case NonFatal(e) => dropStage(f, rowStage); throw e }
-    // the batch's exact file set is known: with a live equality sidecar
-    // it is sequenced above every existing finite tombstone (erases
-    // still outrank it), or an older morUpsertEq of the same key would
-    // mask the new version
-    sequenceAppendedFiles(s, tablePath, moveIn(f, tablePath, rowStage, rowFiles, "morUpsert"))
-    moveIn(f, allocateDvEpochDir(s, tablePath), dvStage, dvFiles, "morUpsert")
+    try {
+      widened.foreach(writeSchemaDdl(f, tablePath, _, overwrite = true))
+      // the batch's exact file set is known: with a live equality
+      // sidecar it is sequenced above every existing finite tombstone
+      // (erases still outrank it), or an older morUpsertEq of the same
+      // key would mask the new version
+      sequenceAppendedFiles(s, tablePath, land(f, tablePath, rowStage, rowFiles, "morUpsert"))
+      land(f, allocateDvEpochDir(s, tablePath), dvStage, dvFiles, "morUpsert")
+    } finally { dropStage(f, rowStage); dropStage(f, dvStage) }
   }
 
   /** A batch-private staging dir `<root>/_staging/<batch>` — the `_`
@@ -693,45 +697,52 @@ object GraftMor {
       keepEmpty: Boolean = false): (org.apache.hadoop.fs.Path, Seq[String]) = {
     val stage = stageDir(root, batch)
     try (stage, GraftIO.writeParquet(df, stage, op, partitionCols, keepEmpty))
-    catch { case NonFatal(e) =>
-      try dropStage(fs(df.sparkSession, root), stage) catch { case NonFatal(x) => e.addSuppressed(x) }
-      throw e
-    }
+    catch { case NonFatal(e) => dropStage(fs(df.sparkSession, root), stage); throw e }
   }
 
-  /** Delete `stage` and its `_staging` shell when nothing else is in it. */
+  /** Delete `stage`, then its `_staging` shell when nothing else is in
+    * it. Best-effort: it runs once the batch has landed or failed, and
+    * must not fail that call — a stage left behind holds no landed
+    * file, and its `_` prefix hides it from every read.
+    */
   private def dropStage(f: org.apache.hadoop.fs.FileSystem,
       stage: org.apache.hadoop.fs.Path): Unit = {
-    f.delete(stage, true)
-    val shell = stage.getParent
-    if (f.exists(shell) && f.listStatus(shell).isEmpty)
-      f.delete(shell, false)
+    try f.delete(stage, true)
+    catch { case NonFatal(e) =>
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(s"[GRAFT] left stage $stage behind", e)
+    }
+    GraftIO.dropIfEmpty(f, stage.getParent)
   }
 
-  /** The A52 staging rule's move-in: rename exactly `files` (relative
-    * to `stage`, as the writer returned them) into `dest`, keeping
-    * their path below the stage (hive partition dirs), then drop the
-    * stage and its `_staging` shell when empty. The batch's file set is
-    * known EXACTLY — a before/after listing diff could capture (and
-    * mis-sequence) a concurrent writer's simultaneous appends — and a
-    * failed task attempt's files are discarded with the stage. `dest`
-    * is created even when `files` is empty. Returns the landed files'
-    * scheme-less paths.
+  /** The A52 staging rule's move-in: [[land]] the stage's files in
+    * `dest`, then drop the stage. Returns the landed files' scheme-less
+    * paths.
     */
   private def moveIn(f: org.apache.hadoop.fs.FileSystem, dest: String,
+      stage: org.apache.hadoop.fs.Path, files: Seq[String], op: String): Seq[String] =
+    try land(f, dest, stage, files, op) finally dropStage(f, stage)
+
+  /** Rename exactly `files` (relative to `stage`, as the writer
+    * returned them) into `dest`, keeping their path below the stage
+    * (hive partition dirs). The batch's file set is known EXACTLY — a
+    * before/after listing diff could capture (and mis-sequence) a
+    * concurrent writer's simultaneous appends — and a failed task
+    * attempt's files are discarded with the stage. `dest` is created
+    * even when `files` is empty. Returns the landed files' scheme-less
+    * paths.
+    */
+  private def land(f: org.apache.hadoop.fs.FileSystem, dest: String,
       stage: org.apache.hadoop.fs.Path, files: Seq[String], op: String): Seq[String] = {
     val moves = files.map(rel =>
       (new org.apache.hadoop.fs.Path(stage, rel), new org.apache.hadoop.fs.Path(dest, rel)))
     (new org.apache.hadoop.fs.Path(dest) +: moves.map(_._2.getParent)).distinct
       .foreach(f.mkdirs)
-    val landed = moves.map { case (src, dst) =>
+    moves.map { case (src, dst) =>
       if (!f.rename(src, dst))
         throw new IllegalStateException(
           s"[GRAFT] $op move-in failed: rename($src -> $dst) returned false")
       graft.sources.v2.GraftMorMask.norm(dst.toUri.getPath)
     }
-    dropStage(f, stage)
-    landed
   }
 
   /** The merge-on-read SCAN: data files anti-joined against the
@@ -969,7 +980,7 @@ object GraftMor {
   private[sources] def footerTsStats(s: SparkSession, tablePath: String,
       tsCol: String): Array[(String, Option[(Long, Long)])] = {
     import graft.sources.v2.GraftV2
-    val conf = GraftV2.sessionConf()
+    val conf = GraftV2.sessionConf(s)
     val files = GraftV2.dataFiles(tablePath, s.sessionState.newHadoopConf())
     if (files.isEmpty) return Array.empty
     val slices = math.max(1, math.min(files.length,

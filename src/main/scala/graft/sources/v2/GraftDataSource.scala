@@ -1428,8 +1428,15 @@ object GraftV2 {
     * conf when no live session is active (driver-less unit use,
     * executor threads).
     */
-  def sessionConf(): SessionConf =
-    SparkSession.getActiveSession.filterNot(_.sparkContext.isStopped) match {
+  def sessionConf(): SessionConf = shippedConf(SparkSession.getActiveSession)
+
+  /** [[sessionConf()]] of session `s`, whichever session is active on
+    * the calling thread.
+    */
+  def sessionConf(s: SparkSession): SessionConf = shippedConf(Some(s))
+
+  private def shippedConf(session: Option[SparkSession]): SessionConf =
+    session.filterNot(_.sparkContext.isStopped) match {
       case None => new SessionConf(null, new SerializableConfiguration(new Configuration()))
       case Some(s) =>
         val conf = s.sessionState.newHadoopConf()
@@ -1543,9 +1550,7 @@ object GraftV2 {
     }
     fs.delete(journal, false)
     fs.delete(stageDir, true)
-    val shell = stageDir.getParent
-    if (fs.exists(shell) && fs.listStatus(shell).isEmpty)
-      fs.delete(shell, false)
+    graft.sources.GraftIO.dropIfEmpty(fs, stageDir.getParent)
   }
 
   /** Finish any swap a prior process crashed through: a staging dir

@@ -28,7 +28,7 @@ import scala.collection.mutable
   * content address): a second scan of the same pin — or the same
   * table re-queried in a session — re-opens ZERO sidecar files; a
   * mutation writes new epoch files, which is a new key. The cache is
-  * an LRU bounded by the estimated bytes of its artifacts and keys.
+  * a small LRU (the loaded artifacts are driver-capped already).
   *
   * Reference anchor: the reference's record reader applies per-split
   * constants/skips during iteration
@@ -44,15 +44,7 @@ object GraftMorMask {
 
   // ── load cache ──────────────────────────────────────────────────
 
-  /** Estimated bytes the cached artifacts and their keys may hold
-    * together; least recently used entries leave past it, except the
-    * entry just loaded. A table's working set is up to three entries
-    * (dv, eq, seqm) of a few KB each at churn scale, and one load at
-    * the tombstone cap is tens of MB.
-    */
-  private val MaxCacheBytes = 64L * 1024 * 1024
-
-  private type Key = (String, Seq[String], Long)
+  private val MaxCacheEntries = 8
 
   /** One entry's lazily-computed artifact: the `lazy val` gives each
     * KEY its own initialization lock, so the global map lock is held
@@ -61,51 +53,39 @@ object GraftMorMask {
     * driver IO behind one monitor (r13 VERDICT wart). Scala retries a
     * lazy initializer whose first run threw, which is exactly right
     * for the cap/key-type refusals — but the failed cell is also
-    * evicted below so it cannot squat in the LRU. `bytes` is set once
-    * the artifact exists; until then the entry weighs nothing.
+    * evicted below so it cannot squat in the LRU.
     */
-  private final class Cell(compute: () => AnyRef, weigh: AnyRef => Long) {
-    @volatile var bytes = 0L
-    lazy val value: AnyRef = { val v = compute(); bytes = weigh(v); v }
+  private final class Cell(compute: () => AnyRef) {
+    lazy val value: AnyRef = compute()
   }
 
-  private val cache = new java.util.LinkedHashMap[Key, Cell](16, 0.75f, true)
-
-  private def strBytes(x: String): Long = 40L + 2L * x.length
+  private val cache =
+    new java.util.LinkedHashMap[(String, Seq[String], Long), Cell](
+        16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, Seq[String], Long), Cell]): Boolean =
+        size() > MaxCacheEntries
+    }
 
   private def cached[T <: AnyRef](kind: String, files: Seq[String],
-      cap: Long)(weigh: T => Long)(compute: => T): T = {
+      cap: Long)(compute: => T): T = {
     val key = (kind, files, cap)
-    val keyBytes = files.iterator.map(strBytes).sum
     val cell = cache.synchronized {
       cache.get(key) match {
         case hit: Cell => hit
         case _ =>
-          val c = new Cell(() => compute, v => keyBytes + weigh(v.asInstanceOf[T]))
+          val c = new Cell(() => compute)
           cache.put(key, c)
           c
       }
     }
-    val v = try cell.value.asInstanceOf[T]
+    try cell.value.asInstanceOf[T]
     catch {
       case e: Throwable =>
         // a refused load must not occupy an LRU slot (and a racing
         // waiter evicting the same cell is idempotent)
         cache.synchronized { if (cache.get(key) eq cell) cache.remove(key) }
         throw e
-    }
-    trim(key)
-    v
-  }
-
-  /** Evict least recently used entries until the cache fits its budget. */
-  private def trim(keep: Key): Unit = cache.synchronized {
-    var total = 0L
-    cache.values.forEach(c => total += c.bytes)
-    val it = cache.entrySet.iterator
-    while (total > MaxCacheBytes && it.hasNext) {
-      val e = it.next()
-      if (e.getKey != keep) { total -= e.getValue.bytes; it.remove() }
     }
   }
 
@@ -201,10 +181,7 @@ object GraftMorMask {
   def load(sidecarFiles: Seq[String], conf: Configuration,
       cap: Long = graft.sources.GraftMor.MaxBroadcastTombstones)
       : Map[String, Array[Long]] =
-    cached("dv", sidecarFiles, cap)((m: Map[String, Array[Long]]) =>
-      m.iterator.map { case (f, pos) => 64L + strBytes(f) + 8L * pos.length }.sum) {
-      loadUncached(sidecarFiles, conf, cap)
-    }
+    cached("dv", sidecarFiles, cap) { loadUncached(sidecarFiles, conf, cap) }
 
   private def loadUncached(sidecarFiles: Seq[String], conf: Configuration,
       cap: Long): Map[String, Array[Long]] = {
@@ -256,13 +233,7 @@ object GraftMorMask {
   def loadEq(sidecarFiles: Seq[String], conf: Configuration,
       cap: Long = graft.sources.GraftMor.MaxBroadcastTombstones)
       : (Seq[String], Map[Seq[Any], Long]) =
-    cached("eq", sidecarFiles, cap)((art: (Seq[String], Map[Seq[Any], Long])) =>
-      art._2.keysIterator.map(k => 96L + k.iterator.map {
-        case x: String => strBytes(x)
-        case _ => 48L
-      }.sum).sum) {
-      loadEqUncached(sidecarFiles, conf, cap)
-    }
+    cached("eq", sidecarFiles, cap) { loadEqUncached(sidecarFiles, conf, cap) }
 
   private def loadEqUncached(sidecarFiles: Seq[String], conf: Configuration,
       cap: Long): (Seq[String], Map[Seq[Any], Long]) = {
@@ -320,10 +291,7 @@ object GraftMorMask {
     */
   def loadSeqm(sidecarFiles: Seq[String],
       conf: Configuration): Map[String, Long] =
-    cached("seqm", sidecarFiles, 0L)((m: Map[String, Long]) =>
-      m.keysIterator.map(f => 80L + strBytes(f)).sum) {
-      loadSeqmUncached(sidecarFiles, conf)
-    }
+    cached("seqm", sidecarFiles, 0L) { loadSeqmUncached(sidecarFiles, conf) }
 
   private def loadSeqmUncached(sidecarFiles: Seq[String],
       conf: Configuration): Map[String, Long] = {

@@ -285,9 +285,7 @@ case class GraftDeltaWrite(path: String, writeSchema: StructType,
       }
       fs.delete(new Path(stagingDir), true)
       // drop the _staging shell when this was its last batch
-      val shell = new Path(stagingDir).getParent
-      if (fs.exists(shell) && fs.listStatus(shell).isEmpty)
-        fs.delete(shell, false)
+      graft.sources.GraftIO.dropIfEmpty(fs, new Path(stagingDir).getParent)
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit = {

@@ -218,9 +218,7 @@ object GraftSqlWrite {
     }
     fs.delete(stageDir, true) // empty shell (+ _SUCCESS bookkeeping)
     // drop the _staging parent when this was its last batch
-    if (fs.exists(stageDir.getParent) &&
-        fs.listStatus(stageDir.getParent).isEmpty)
-      fs.delete(stageDir.getParent, false)
+    graft.sources.GraftIO.dropIfEmpty(fs, stageDir.getParent)
     // 3b. SEQUENCE the batch (only when the table carries an equality
     // sidecar): the inserted files record at the CURRENT epoch
     // sequence, so they outrank every existing finite eq tombstone —

@@ -1,20 +1,18 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
-import org.apache.hadoop.fs.{FSDataInputStream, Path}
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, struct, to_json, udf}
 import scala.jdk.CollectionConverters._
 
 import graft.sources.{GraftIO, GraftMor, GraftSink}
-import graft.sources.v2.GraftMorMask
 
 /** GraftMor's write path: every MOR file goes through the graft task
   * writer (`GraftIO.writeParquet`), which keeps Spark's parquet format
   * and lands exactly the files that successful tasks returned; the
-  * absent `_schema` markers cost no open; the mask cache holds a
-  * churn-sized working set.
+  * absent `_schema` markers cost no open.
   */
 class MorWritePathSpec extends SparkSpecBase {
 
@@ -132,12 +130,17 @@ class MorWritePathSpec extends SparkSpecBase {
     val boom = udf { (x: Long) =>
       if (x == 7L) throw new IllegalStateException("boom") else x }
     val bad = spark.range(5, 10).select(boom(col("id")).as("k"), lit(9L).as("v"))
+    // a batch that adds a column: the widened schema is recorded only
+    // once the batch has staged
+    val badEvolving = bad.withColumn("extra", lit("x"))
     val files = parquetFiles(path)
     val side = GraftMor.sidecars(spark, path)
     val served = rowsOf(GraftMor.morRead(spark, path))
     for ((op, run) <- Seq[(String, () => Unit)](
         "morUpsert" -> (() => GraftMor.morUpsert(spark, path, bad, Seq("k"))),
         "morUpsertEq" -> (() => GraftMor.morUpsertEq(spark, path, bad, Seq("k"))),
+        "evolving morUpsert" -> (() => GraftMor.morUpsert(spark, path, badEvolving, Seq("k"))),
+        "evolving morUpsertEq" -> (() => GraftMor.morUpsertEq(spark, path, badEvolving, Seq("k"))),
         "morDeleteKeys" -> (() => GraftMor.morDeleteKeys(spark, path, bad, Seq("k"))),
         "morErase" -> (() => GraftMor.morErase(spark, path, bad.select("k"), Seq("k"))))) {
       val e = intercept[Exception](run())
@@ -145,6 +148,7 @@ class MorWritePathSpec extends SparkSpecBase {
         .exists(x => String.valueOf(x.getMessage).contains("boom")), s"$op: $e")
       assert(parquetFiles(path) === files, op)
       assert(GraftMor.sidecars(spark, path) === side, op)
+      assert(GraftMor.sidecars(spark, path).schemaDdl.isEmpty, op)
       assert(!hfs(path).exists(new Path(s"$path/_staging")), op)
       assert(rowsOf(GraftMor.morRead(spark, path)) === served, op)
     }
@@ -189,28 +193,24 @@ class MorWritePathSpec extends SparkSpecBase {
     assert(java.nio.file.attribute.PosixFilePermissions.toString(mode) === "rwxrwxrwx")
   }
 
-  test("the mask cache holds the masks of nine tables: re-reading all nine opens no sidecar") {
+  test("another writer's stage appearing in _staging while a MOR commit drops its own does not fail the commit") {
     import spark.implicits._
-    val root = fresh("maskcache")
-    val conf = spark.sessionState.newHadoopConf()
-    val tables = (1 to 9).map { i =>
-      val path = s"$root/t$i.parquet"
-      spark.range(20).select(col("id").as("k"), lit(i.toLong).as("v")).coalesce(1)
-        .write.parquet(path)
-      GraftMor.morDeleteKeys(spark, path, Seq(1L).toDF("k"), Seq("k"))
-      GraftMor.morUpsertEq(spark, path, Seq((2L, 0L)).toDF("k", "v"), Seq("k"))
-      GraftMor.sidecars(spark, path)
+    for ((name, upsert) <- Seq[(String, (SparkSession, String, DataFrame, Seq[String]) => Unit)](
+        "morUpsert" -> GraftMor.morUpsert, "morUpsertEq" -> GraftMor.morUpsertEq)) {
+      val path = fresh(s"foreign_$name") + "/t.parquet"
+      spark.range(10).select(col("id").as("k"), lit(1L).as("v")).coalesce(1).write.parquet(path)
+      ForeignStageFs.armed.set(true)
+      CountingLocalFs.serving(spark, classOf[ForeignStageFs]) {
+        upsert(spark, path, Seq((2L, 5L), (20L, 5L)).toDF("k", "v"), Seq("k"))
+      }
+      assert(!ForeignStageFs.armed.get, s"$name: the foreign stage appeared")
+      assert(hfs(path).exists(new Path(s"$path/_staging/${ForeignStageFs.Name}")),
+        s"$name: another writer's stage is left alone")
+      val served = GraftMor.morRead(spark, path)
+      assert(served.count() === 11L, name)
+      assert(served.where(col("v") === 5L).select("k").as[Long].collect().sorted.toSeq ===
+        Seq(2L, 20L), name)
     }
-    def loadAll(): Unit = tables.foreach { sc =>
-      assert(sc.dv.nonEmpty && sc.eq.nonEmpty && sc.seqm.nonEmpty)
-      GraftMorMask.load(sc.dv.map(_._1), conf)
-      GraftMorMask.loadEq(sc.eq.map(_._1), conf)
-      GraftMorMask.loadSeqm(sc.seqm.map(_._1), conf)
-    }
-    loadAll()
-    val opened = GraftMorMask.sidecarOpens
-    loadAll()
-    assert(GraftMorMask.sidecarOpens === opened, "27 small artifacts fit the cache")
   }
 }
 
@@ -228,17 +228,41 @@ object CountingLocalFs {
     * and returns its result with the opens it made.
     */
   def counting[T](spark: SparkSession)(body: => T): (T, Long) = {
-    val hc = spark.sparkContext.hadoopConfiguration
-    val impl = hc.get("fs.file.impl")
-    hc.set("fs.file.impl", classOf[CountingLocalFs].getName)
-    hc.setBoolean("fs.file.impl.disable.cache", true)
     opens.set(0L)
-    try (body, opens.get)
+    serving(spark, classOf[CountingLocalFs])((body, opens.get))
+  }
+
+  /** Runs `body` with `file://` served by uncached instances of `impl`. */
+  def serving[T](spark: SparkSession, impl: Class[_ <: FileSystem])(body: => T): T = {
+    val hc = spark.sparkContext.hadoopConfiguration
+    val was = hc.get("fs.file.impl")
+    hc.set("fs.file.impl", impl.getName)
+    hc.setBoolean("fs.file.impl.disable.cache", true)
+    try body
     finally {
-      hc.set("fs.file.impl", impl)
+      hc.set("fs.file.impl", was)
       hc.unset("fs.file.impl.disable.cache")
     }
   }
+}
+
+/** A test-scope local FileSystem that, once armed, creates another
+  * writer's stage in a `_staging` shell right after a listing found the
+  * shell empty: the window between a writer's emptiness check and its
+  * delete of the shell.
+  */
+class ForeignStageFs extends graft.sources.GraftLocalFileSystem {
+  override def listStatus(f: Path): Array[FileStatus] = {
+    val xs = super.listStatus(f)
+    if (f.getName == "_staging" && xs.isEmpty && ForeignStageFs.armed.compareAndSet(true, false))
+      super.mkdirs(new Path(f, ForeignStageFs.Name))
+    xs
+  }
+}
+
+object ForeignStageFs {
+  val Name = "foreign_stage"
+  val armed = new AtomicBoolean(false)
 }
 
 /** Child-JVM half of MorWritePathSpec: a session whose tasks may retry
