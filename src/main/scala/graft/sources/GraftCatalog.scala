@@ -48,13 +48,18 @@ final class GraftCatalog(spark: SparkSession, root: String) {
   private val pinnedMor =
     scala.collection.concurrent.TrieMap.empty[String, GraftMor.Sidecars]
 
-  private def rootFs: org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+  /** The session Hadoop conf, resolved once per catalog: a copy of the
+    * whole conf per listing or probe was the largest driver cost of a
+    * catalog read.
+    */
+  private lazy val hadoopConf = GraftIO.hadoopConf(spark)
+
+  private lazy val rootFs: org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(root).getFileSystem(hadoopConf)
 
   private def morPin(name: String): GraftMor.Sidecars =
-    pinnedMor.getOrElseUpdate(name,
-      GraftMor.sidecars(spark, s"$root/$name.parquet"))
+    pinnedMor.getOrElseUpdate(name, GraftIO.withCallConf(spark, hadoopConf)(
+      GraftMor.sidecars(spark, s"$root/$name.parquet")))
 
   /** Eagerly pin EVERY table currently under the root, making this
     * catalog's view of N tables ATOMIC — the analog of the
@@ -73,9 +78,8 @@ final class GraftCatalog(spark: SparkSession, root: String) {
     */
   def tableNames(): Seq[String] = {
     val path = new org.apache.hadoop.fs.Path(root)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(path)) Seq.empty
-    else fs.listStatus(path).toSeq.map(_.getPath.getName)
+    if (!rootFs.exists(path)) Seq.empty
+    else rootFs.listStatus(path).toSeq.map(_.getPath.getName)
       .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).sorted
   }
 
@@ -89,7 +93,7 @@ final class GraftCatalog(spark: SparkSession, root: String) {
     tableSchema(name).fields.toSeq.map(f => f.name -> HiveTypeMapping.toHiveName(f.dataType))
 
   private def pinned(name: String): PinnedTable =
-    pinnedListings.getOrElseUpdate(name, listDataFiles(spark, s"$root/$name.parquet"))
+    pinnedListings.getOrElseUpdate(name, listDataFiles(hadoopConf, s"$root/$name.parquet"))
 
   /** The (path, length) snapshot this catalog has pinned for a table —
     * pins it on first call.
@@ -164,7 +168,7 @@ final class GraftCatalog(spark: SparkSession, root: String) {
     * sidecars pays two metadata listings at pin time and nothing per
     * read.
     */
-  def table(name: String): DataFrame = {
+  def table(name: String): DataFrame = GraftIO.withCallConf(spark, hadoopConf) {
     val pin = pinned(name)
     require(pin.files.nonEmpty, s"[GRAFT] Table [$name] has no data files under $root")
     val sc = morPin(name)
@@ -312,7 +316,7 @@ final class GraftCatalog(spark: SparkSession, root: String) {
   def publishSnapshot(name: String): Long = {
     val pin = pinned(name)
     val dir = SnapshotManifest.dir(root, name)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = dir.getFileSystem(hadoopConf)
     fs.mkdirs(dir)
     // the epoch pins the table STATE, not just the file set: live
     // merge-on-read sidecar listings (A42-A45 masks) and the evolved
@@ -332,9 +336,8 @@ final class GraftCatalog(spark: SparkSession, root: String) {
     // O(table)); uncovered files take the bounded parallel footer
     // pool. Computed once outside the id-collision retry loop.
     val statsLines = graft.sources.v2.GraftPlanStats.statsLines(pin.files,
-      spark.sessionState.newHadoopConf(),
-      prior = graft.sources.v2.GraftPlanStats.rawForTable(
-        s"$root/$name.parquet", spark.sessionState.newHadoopConf()))
+      hadoopConf,
+      prior = graft.sources.v2.GraftPlanStats.rawForTable(s"$root/$name.parquet", hadoopConf))
     // the PUBLISH INSTANT lives INSIDE the manifest body: file mtime
     // is fs-level state an fs copy / restore / distcp rewrites, which
     // would silently re-address every epoch.
@@ -505,7 +508,7 @@ final class GraftCatalog(spark: SparkSession, root: String) {
         s""""schema":"${esc(schemaDdl)}",""" +
         files.map(f => "\"" + esc(f) + "\"").mkString("\"files\":[", ",", "]}")
     val p = new org.apache.hadoop.fs.Path(outFile)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = p.getFileSystem(hadoopConf)
     GraftIO.writeText(fs, p, json, overwrite = true)
     files
   }
@@ -533,7 +536,7 @@ final class GraftCatalog(spark: SparkSession, root: String) {
     val dataDir = s"$outDir/data"
     df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dataDir)
     val p = new org.apache.hadoop.fs.Path(dataDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = p.getFileSystem(hadoopConf)
     val files = fs.listStatus(p).toSeq.map(_.getPath)
       .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
       .map(_.toString).sorted
@@ -603,7 +606,7 @@ final class GraftCatalog(spark: SparkSession, root: String) {
       s"[GRAFT] Cannot restore [$name] to v$id: ${missing.size} file(s) it " +
         s"names no longer exist (e.g. ${missing.head})")
     val keep = files.toSet
-    listDataFiles(spark, s"$root/$name.parquet").files.map(_._1)
+    listDataFiles(hadoopConf, s"$root/$name.parquet").files.map(_._1)
       .filterNot(keep)
       .foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), false))
     pinnedListings.remove(name)
@@ -647,7 +650,7 @@ final class GraftCatalog(spark: SparkSession, root: String) {
       refuseBreakingSchema: Boolean = true)
       : Either[DataFrame, Long] = {
     require(rules.nonEmpty, "[GRAFT] publishAudited needs at least one audit rule")
-    val current = listDataFiles(spark, s"$root/$name.parquet")
+    val current = listDataFiles(hadoopConf, s"$root/$name.parquet")
     val published: Set[String] = snapshotIds(name).lastOption
       .map(manifest(name, _).paths.toSet).getOrElse(Set.empty)
     val staged = current.files.map(_._1).filterNot(published)
@@ -740,7 +743,7 @@ final class GraftCatalog(spark: SparkSession, root: String) {
     require(ids.nonEmpty,
       s"[GRAFT] vacuum needs at least one published snapshot of [$name]")
     val live = ids.flatMap(manifest(name, _).paths).toSet
-    val current = listDataFiles(spark, s"$root/$name.parquet").files.map(_._1)
+    val current = listDataFiles(hadoopConf, s"$root/$name.parquet").files.map(_._1)
     val fs = rootFs
     val doomed = current.filterNot(live)
     doomed.foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), false))
@@ -786,9 +789,13 @@ object GraftCatalog {
     * dotfiles). One listing per table per catalog — at 100 TB this is
     * the only namenode/object-store round trip the snapshot costs.
     */
-  private[sources] def listDataFiles(spark: SparkSession, dir: String): PinnedTable = {
+  private[sources] def listDataFiles(spark: SparkSession, dir: String): PinnedTable =
+    listDataFiles(GraftIO.hadoopConf(spark), dir)
+
+  private[sources] def listDataFiles(conf: org.apache.hadoop.conf.Configuration,
+      dir: String): PinnedTable = {
     val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = path.getFileSystem(conf)
     if (!fs.exists(path)) return PinnedTable(rootIsDir = false, Seq.empty)
     val status = fs.getFileStatus(path)
     if (status.isFile) return PinnedTable(rootIsDir = false, Seq((path.toString, status.getLen)))

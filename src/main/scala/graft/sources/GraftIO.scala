@@ -56,6 +56,58 @@ import scala.util.control.NonFatal
   */
 object GraftIO {
 
+  /** One top-level graft call's resolved session Hadoop conf, and the
+    * conf broadcast handle made from it.
+    */
+  private final class CallConf(val session: SparkSession, resolve: () => Configuration) {
+    lazy val conf: Configuration = resolve()
+    var shipped: graft.sources.v2.GraftV2.SessionConf = _
+  }
+
+  private val callConf = new ThreadLocal[CallConf]
+
+  private def inCall(s: SparkSession): Option[CallConf] =
+    Option(callConf.get).filter(_.session eq s)
+
+  /** Run `body` as one top-level call on `s`: every [[hadoopConf]] of
+    * `s` inside it, on this thread, is ONE copy of the session conf.
+    * `SessionState.newHadoopConf()` copies the whole conf (~1,100
+    * properties) per call, which a write or compaction used to pay at
+    * every listing and probe. The copy is taken at its first use;
+    * nested calls share the outer one, and a `spark.conf.set` reaches
+    * the next top-level call.
+    */
+  def withCallConf[T](s: SparkSession)(body: => T): T =
+    withCallConf(s, s.sessionState.newHadoopConf())(body)
+
+  /** [[withCallConf]] over a conf the caller already resolved. */
+  def withCallConf[T](s: SparkSession, conf: => Configuration)(body: => T): T =
+    if (inCall(s).isDefined) body
+    else {
+      val prev = callConf.get
+      callConf.set(new CallConf(s, () => conf))
+      try body finally callConf.set(prev)
+    }
+
+  /** The session Hadoop conf: the current call's copy inside
+    * [[withCallConf]], a fresh copy outside. Read it, never `set` on it.
+    */
+  def hadoopConf(s: SparkSession): Configuration =
+    inCall(s).fold(s.sessionState.newHadoopConf())(_.conf)
+
+  /** The conf broadcast handle `ship` makes from [[hadoopConf]], made
+    * once per top-level call.
+    */
+  private[graft] def shippedPerCall(s: SparkSession)(
+      ship: Configuration => graft.sources.v2.GraftV2.SessionConf)
+      : graft.sources.v2.GraftV2.SessionConf =
+    inCall(s) match {
+      case Some(c) =>
+        if (c.shipped == null) c.shipped = ship(c.conf)
+        c.shipped
+      case None => ship(s.sessionState.newHadoopConf())
+    }
+
   /** Every FILE under `root`, recursively, without ever touching
     * permissions (no process forks on local FS, one RPC per directory
     * on a remote one). Returns the same arbitrary FS-listing order
@@ -164,7 +216,7 @@ object GraftIO {
     */
   def parquetSchema(s: SparkSession, path: String): Option[StructType] = {
     val p = new Path(path)
-    val conf = s.sessionState.newHadoopConf()
+    val conf = hadoopConf(s)
     val fs = p.getFileSystem(conf)
     firstDataFile(fs, p).map { st =>
       val key = st.getPath.toString + "#" + st.getLen + "#" + st.getModificationTime
@@ -200,8 +252,7 @@ object GraftIO {
     */
   def flatParquetSchema(s: SparkSession, path: String): Option[StructType] = {
     val p = new Path(path)
-    val conf = s.sessionState.newHadoopConf()
-    val fs = p.getFileSystem(conf)
+    val fs = p.getFileSystem(hadoopConf(s))
     firstDataFile(fs, p) match {
       case Some(st) if st.getPath.getParent.toUri.getPath == p.toUri.getPath
           || st.getPath.toUri.getPath == p.toUri.getPath =>
@@ -217,11 +268,12 @@ object GraftIO {
     * back to plain inference unchanged — safe to use as a drop-in at
     * any internal read site.
     */
-  def readParquet(s: SparkSession, path: String): DataFrame =
+  def readParquet(s: SparkSession, path: String): DataFrame = withCallConf(s) {
     flatParquetSchema(s, path) match {
       case Some(sch) => s.read.schema(sch).parquet(path)
       case None      => s.read.parquet(path)
     }
+  }
 
   /** Multi-path form: schema from the first path that has a data file. */
   def readParquet(s: SparkSession, paths: Seq[String]): DataFrame = {
@@ -265,10 +317,34 @@ object GraftIO {
         .sortWithinPartitions(partitionCols.map(col): _*)
     val writer = taskWriter(s, dataSchema, stage, partitionCols)
     val written = org.apache.spark.sql.graft.Bridge.withExecution(input, s"graft $op") { rdd =>
-      s.sparkContext.runJob(rdd, writer.write _)
-    }.toSeq.flatten
+      runWrite(s.sparkContext, rdd, writer)
+    }
     if (written.nonEmpty || !keepEmpty) written
     else Seq(writeRows(s, dataSchema, Nil, stage).getName)
+  }
+
+  /** Run `writer` over every partition of `rdd` and return the files
+    * written. A failed job returns only once none of its tasks still
+    * runs: Spark fails the job at the first failed task and kills the
+    * others asynchronously, and a task still writing could otherwise
+    * recreate the stage after the caller dropped it. The wait is
+    * bounded.
+    */
+  private def runWrite(sc: org.apache.spark.SparkContext,
+      rdd: org.apache.spark.rdd.RDD[InternalRow], writer: ParquetTaskWriter): Seq[String] = {
+    val out = new Array[Seq[String]](rdd.partitions.length)
+    val job = sc.submitJob(rdd, (rows: Iterator[InternalRow]) => writer.write(TaskContext.get(), rows),
+      rdd.partitions.indices, (i: Int, files: Seq[String]) => out(i) = files, ())
+    scala.concurrent.Await.ready(job, scala.concurrent.duration.Duration.Inf)
+    job.value.get match {
+      case scala.util.Failure(e) =>
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        def running = job.jobIds.flatMap(sc.statusTracker.getJobInfo(_)).flatMap(_.stageIds)
+          .flatMap(sc.statusTracker.getStageInfo(_)).map(_.numActiveTasks).sum
+        while (running > 0 && System.nanoTime() < deadline) Thread.sleep(10)
+        throw e
+      case _ => out.toSeq.flatten
+    }
   }
 
   /** What one write's tasks receive: Spark's parquet writer factory
@@ -277,7 +353,7 @@ object GraftIO {
     */
   private[graft] def taskWriter(s: SparkSession, dataSchema: StructType, stage: Path,
       partitionCols: Seq[String]): ParquetTaskWriter = {
-    val (factory, keys) = prepareParquet(s, dataSchema)
+    val (factory, keys, _) = prepareParquet(s, dataSchema)
     new ParquetTaskWriter(factory, keys, graft.sources.v2.GraftV2.sessionConf(s),
       stage.toString, dataSchema, partitionCols, java.util.UUID.randomUUID().toString,
       s.sessionState.conf.maxRecordsPerFile)
@@ -291,9 +367,7 @@ object GraftIO {
     */
   def writeRows(s: SparkSession, schema: StructType, rows: Seq[InternalRow],
       dir: Path): Path = {
-    val (factory, keys) = prepareParquet(s, schema)
-    val conf = s.sessionState.newHadoopConf()
-    keys.foreach { case (k, v) => conf.set(k, v) }
+    val (factory, _, conf) = prepareParquet(s, schema)
     val ctx = ParquetTaskWriter.attemptContext(conf, 0, 0)
     val name = ParquetTaskWriter.fileName(0, java.util.UUID.randomUUID().toString, 0L, 0,
       factory.getFileExtension(ctx))
@@ -312,19 +386,20 @@ object GraftIO {
     dst
   }
 
-  /** Spark's parquet writer factory for `schema`, and the conf keys
+  /** Spark's parquet writer factory for `schema`, the conf keys
     * `prepareWrite` set to configure it (the keys whose value differs
-    * from the session's conf).
+    * from the session's conf) and the job's own copy of the conf with
+    * those keys set.
     */
-  private def prepareParquet(s: SparkSession,
-      schema: StructType): (OutputWriterFactory, Map[String, String]) = {
-    val conf = s.sessionState.newHadoopConf()
+  private def prepareParquet(s: SparkSession, schema: StructType)
+      : (OutputWriterFactory, Map[String, String], Configuration) = {
+    val conf = hadoopConf(s)
     val job = Job.getInstance(conf)
     val factory = new ParquetFileFormat().prepareWrite(s, job, Map.empty, schema)
     val keys = job.getConfiguration.iterator().asScala.collect {
       case e if conf.getRaw(e.getKey) != e.getValue => e.getKey -> e.getValue
     }.toMap
-    (factory, keys)
+    (factory, keys, job.getConfiguration)
   }
 }
 

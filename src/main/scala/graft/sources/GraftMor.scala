@@ -35,7 +35,13 @@ import scala.util.control.NonFatal
   * surface and the advisor flags it until compaction. Each mutation
   * writes one new epoch (O(matched) bytes, zero data files touched);
   * `morCompact` folds all tombstones into the affected files ONLY
-  * and clears the sidecar.
+  * and clears the sidecar. It folds through the SQL serving path's
+  * masks: loaded on the driver by `GraftMorMask`, applied inside the
+  * v2 reader (`GraftScan`), so a compaction is one write job, plus one
+  * probe job when an equality sidecar is live. What those masks
+  * refuse (past the serving cap, a floating-point or nested key) and
+  * what they cannot address (a key in a partition directory) take the
+  * anti-join plan (`compactByJoins`).
   *
   * Concurrency contract (same class as the COW paths): a delete /
   * upsert never unlinks a data file, so live pinned readers are SAFE
@@ -182,12 +188,13 @@ object GraftMor {
     * probe of the evolved-schema marker (read only when present), the
     * whole metadata cost of a mask-aware read.
     */
-  def sidecars(s: SparkSession, tablePath: String): Sidecars =
+  def sidecars(s: SparkSession, tablePath: String): Sidecars = GraftIO.withCallConf(s) {
     Sidecars(
       sidecarFiles(s, tablePath, DvDir),
       sidecarFiles(s, tablePath, EqDir),
       sidecarFiles(s, tablePath, SeqDir),
       readSchemaDdl(s, tablePath))
+  }
 
   private def schemaMarker(tablePath: String) =
     new org.apache.hadoop.fs.Path(s"$tablePath/$SchemaDir/ddl")
@@ -275,8 +282,7 @@ object GraftMor {
     org.apache.spark.sql.functions.regexp_replace(c, "^[a-zA-Z0-9.+-]+:/+", "/")
 
   private def fs(s: SparkSession, p: String) =
-    new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(s.sessionState.newHadoopConf())
+    new org.apache.hadoop.fs.Path(p).getFileSystem(GraftIO.hadoopConf(s))
 
   /** All accumulated tombstones as (dv_file, dv_pos) from the
     * sidecar's listed files, or None when no mutation epoch exists
@@ -413,7 +419,7 @@ object GraftMor {
       // schema (no inference job); explicit-file reads carry no epoch
       // partition column
       val schema = graft.sources.v2.GraftV2.readSchema(
-        sc.eq.head._1, s.sessionState.newHadoopConf())
+        sc.eq.head._1, GraftIO.hadoopConf(s))
       val df = s.read.schema(schema).parquet(sc.eq.map(_._1): _*)
       Some(if (df.columns.contains("epoch")) df.drop("epoch") else df)
     }
@@ -551,8 +557,8 @@ object GraftMor {
     * row-coordinate write and rewriting every affected partition.
     */
   def morDelete(s: SparkSession, tablePath: String, cond: Column): Unit =
-    writeEpoch(s, tablePath,
-      currentMatches(s, tablePath, sidecars(s, tablePath), _.where(cond)), "morDelete")
+    GraftIO.withCallConf(s)(writeEpoch(s, tablePath,
+      currentMatches(s, tablePath, sidecars(s, tablePath), _.where(cond)), "morDelete"))
 
   /** A42 (key form): delete every row whose key appears in
     * `deleteKeys` — the GDPR erasure batch. The key set is broadcast;
@@ -560,7 +566,7 @@ object GraftMor {
     * semi-join — no shuffle of the fact.
     */
   def morDeleteKeys(s: SparkSession, tablePath: String,
-      deleteKeys: DataFrame, keyCols: Seq[String]): Unit = {
+      deleteKeys: DataFrame, keyCols: Seq[String]): Unit = GraftIO.withCallConf(s) {
     val keys = deleteKeys.select(keyCols.map(col): _*)
     writeEpoch(s, tablePath, currentMatches(s, tablePath,
       sidecars(s, tablePath), _.join(broadcast(keys), keyCols, "left_semi")),
@@ -582,7 +588,7 @@ object GraftMor {
     * (checked — a mixed-key sidecar would silently mask nothing).
     */
   def morErase(s: SparkSession, tablePath: String,
-      eraseKeys: DataFrame, keyCols: Seq[String]): Unit = {
+      eraseKeys: DataFrame, keyCols: Seq[String]): Unit = GraftIO.withCallConf(s) {
     checkEqKeys(s, tablePath, sidecars(s, tablePath), keyCols, "morErase")
     val (stage, files) = writeStage(eraseKeys.select(keyCols.map(col): _*).distinct()
       .withColumn("seq", lit(EraseSeq)), tablePath, "eq", "morErase")
@@ -608,7 +614,7 @@ object GraftMor {
     * SQL MERGE, `updates` carries at most one row per key.
     */
   def morUpsertEq(s: SparkSession, tablePath: String, updates: DataFrame,
-      keyCols: Seq[String]): Unit = {
+      keyCols: Seq[String]): Unit = GraftIO.withCallConf(s) {
     val sc = sidecars(s, tablePath)
     checkEqKeys(s, tablePath, sc, keyCols, "morUpsertEq")
     val (targetCols, widened) = evolveForBatch(s, tablePath, sc, updates, "morUpsertEq")
@@ -654,7 +660,7 @@ object GraftMor {
     * an older `morUpsertEq` tombstone of the key cannot mask them.
     */
   def morUpsert(s: SparkSession, tablePath: String, updates: DataFrame,
-      keyCols: Seq[String]): Unit = {
+      keyCols: Seq[String]): Unit = GraftIO.withCallConf(s) {
     val sc = sidecars(s, tablePath)
     val keys = updates.select(keyCols.map(col): _*)
     // pin the target column ORDER before appending: parquet appends
@@ -754,7 +760,7 @@ object GraftMor {
     * compaction, not a bigger broadcast.
     */
   def morRead(s: SparkSession, tablePath: String,
-      maxBroadcastBytes: Long = MaxBroadcastSidecarBytes): DataFrame = {
+      maxBroadcastBytes: Long = MaxBroadcastSidecarBytes): DataFrame = GraftIO.withCallConf(s) {
     val sc = sidecars(s, tablePath)
     applyMasks(s, readTable(s, tablePath, sc), sc, maxBroadcastBytes)
   }
@@ -839,7 +845,7 @@ object GraftMor {
     val fresh = sidecarFiles(s, tablePath, EqDir)
     if (fresh.isEmpty || fresh == unlessSame) return df
     val eqSchema = graft.sources.v2.GraftV2.readSchema(
-      fresh.head._1, s.sessionState.newHadoopConf())
+      fresh.head._1, GraftIO.hadoopConf(s))
     val eqDf = s.read.schema(eqSchema).parquet(fresh.map(_._1): _*)
     val eq = if (eqDf.columns.contains("epoch")) eqDf.drop("epoch") else eqDf
     val keyColsEq = eq.columns.filterNot(_ == "seq").toSeq
@@ -855,15 +861,33 @@ object GraftMor {
       .select(outCols.map(col): _*)
   }
 
-  /** Fold the deletion vector into the data: ONLY files that appear
-    * in the vector are rewritten (their survivors re-land as fresh
-    * appends); every untouched file keeps its bytes — the A18/A19
+  /** Fold the live masks into the data: ONLY files that lose a row
+    * to them are rewritten (their survivors re-land as fresh appends);
+    * every untouched file keeps its name and bytes — the A18/A19
     * affected-only discipline at FILE grain instead of partition
-    * grain. Clears the sidecar, so the next `morRead` is a plain
-    * scan again. The only MOR operation that unlinks files, hence
-    * the only one behind the A24 lease gate. Pass `partitionCols`
-    * for a hive-partitioned table so survivors re-land in their
-    * directories. Idempotent: no vector → no-op.
+    * grain. Clears the sidecars, so the next `morRead` is a plain scan
+    * again. The only MOR operation that unlinks files, hence the only
+    * one behind the A24 lease gate. Pass `partitionCols` for a
+    * hive-partitioned table so survivors re-land in their
+    * directories. Idempotent: no sidecar → no-op.
+    *
+    * The plan is the SQL serving path's ([[foldInReader]]): the
+    * sidecars and the data files are each listed once, the masks load
+    * on the driver through `GraftMorMask` (no Spark job), the position-
+    * affected files are the files the position mask names, and the
+    * equality-affected files come from one masked probe job over the
+    * candidates' key columns. The survivors are one `GraftScan` of the
+    * affected files that applies both masks inside each batch, written
+    * as one job: at most one Spark job for a position-only table and
+    * two with an equality sidecar, no broadcast and no v1 scan. Sidecars
+    * past [[MaxBroadcastTombstones]], an equality key the serving
+    * surface refuses (floating point, nested, raw binary) or sitting in
+    * a partition directory, a partition layout other than
+    * `partitionCols` and columnar reads switched off
+    * (`spark.graft.columnar.enabled=false`) take [[compactByJoins]],
+    * the anti-join plan —
+    * compaction is the remedy for the serving cap, so it never refuses
+    * at it.
     *
     * Survivors are written to a batch-private `_staging/` dir BEFORE
     * anything live is touched (the A52 staging rule), so a failed
@@ -874,17 +898,14 @@ object GraftMor {
     * in memory.
     */
   def morCompact(s: SparkSession, tablePath: String,
-      partitionCols: Seq[String] = Nil): Unit = {
+      partitionCols: Seq[String] = Nil): Unit =
+    GraftIO.withCallConf(s)(compact(s, tablePath, partitionCols, MaxBroadcastTombstones))
+
+  /** [[morCompact]] with the mask loads capped at `maskCap` tombstones. */
+  private[graft] def compact(s: SparkSession, tablePath: String,
+      partitionCols: Seq[String], maskCap: Long): Unit = {
     GraftLease.failIfLeased(s, tablePath, "morCompact")
     val sc = sidecars(s, tablePath)
-    val dvOpt = dvFrame(s, sc)
-    // fold the eq sidecar to one max-sequence row per key up front —
-    // that is the whole mask (sequences accumulate monotonically)
-    val eqOpt = eqFrame(s, sc).map { eq =>
-      val keyColsEq = eq.columns.filterNot(_ == "seq").toSeq
-      eq.groupBy(keyColsEq.map(col): _*).agg(max("seq").as("__max_seq"))
-    }
-    val seqOpt = seqFrame(s, sc)
     val f = fs(s, tablePath)
     // an epoch whose input had no rows is a directory without files: it
     // masks nothing, but its directory still folds
@@ -899,6 +920,151 @@ object GraftMor {
     // a reserved number whose write never landed stays burned
     val nextDv = math.max(nextEpoch(s, tablePath), reservedFloor(f, dvPath(tablePath)))
     val nextEq = math.max(nextEpoch(s, tablePath, eqPath), reservedFloor(f, eqPath(tablePath)))
+    val (affected, survivors) = foldInReader(s, tablePath, sc, partitionCols, maskCap)
+      .getOrElse(compactByJoins(s, tablePath, sc))
+    // nothing live is touched before the survivors are staged; a task
+    // with no survivors writes no file
+    val staged = Option.when(affected.nonEmpty)(
+      writeStage(survivors, tablePath, "compact", "morCompact", partitionCols))
+    affected.foreach { file =>
+      if (!f.delete(new org.apache.hadoop.fs.Path(file), false))
+        throw new IllegalStateException(
+          s"[GRAFT] morCompact failed to remove $file")
+    }
+    clearSidecars(f, tablePath, hasDv, hasEq, hasSeqm, nextDv, nextEq)
+    graft.sources.v2.GraftMorMask.forget((sc.dv ++ sc.eq ++ sc.seqm).map(_._1))
+    staged.foreach { case (stage, files) => moveIn(f, tablePath, stage, files, "morCompact") }
+  }
+
+  /** [[morCompact]]'s plan over the serving masks: the affected files
+    * and their survivors, or None when the fold must take
+    * [[compactByJoins]] (a refused mask load, an equality key in a
+    * partition directory, a partition layout other than
+    * `partitionCols`, columnar reads switched off). Partition values are read back as their
+    * directory strings, so survivors re-land under the same directory
+    * names whatever the values look like.
+    */
+  private def foldInReader(s: SparkSession, tablePath: String, sc: Sidecars,
+      partitionCols: Seq[String], maskCap: Long): Option[(Seq[String], DataFrame)] = {
+    import graft.sources.v2.{GraftMorMask, GraftTable, GraftV2}
+    val conf = GraftIO.hadoopConf(s)
+    val (dvFiles, eqFiles) = (sc.dv.map(_._1), sc.eq.map(_._1))
+    val seqmFiles = if (eqFiles.isEmpty) Nil else sc.seqm.map(_._1)
+    val masks = try Some((GraftMorMask.load(dvFiles, conf, maskCap),
+        if (eqFiles.isEmpty) (Nil, Map.empty[Seq[Any], Long])
+        else GraftMorMask.loadEq(eqFiles, conf, maskCap),
+        GraftMorMask.loadSeqm(seqmFiles, conf)))
+      catch { case _: GraftMorMask.Refused => None }
+    lazy val data = GraftV2.dataFileSizes(tablePath, conf)
+    lazy val partSchema = StructType(GraftV2.partitionSchema(tablePath, data.map(_._1))
+      .map(_.copy(dataType = StringType)))
+    // with `spark.graft.columnar.enabled=false` the scan decodes rows
+    // through the row reader, which reads no struct or map column
+    val columnar = org.apache.spark.sql.internal.SQLConf.get
+      .getConfString("spark.graft.columnar.enabled", "true").toBoolean
+    masks.filter { case (_, (eqKeys, _), _) =>
+      columnar && !eqKeys.exists(partitionCols.contains) &&
+        partSchema.fieldNames.toSeq == partitionCols
+    }.map { case (dv, (_, eq), seqm) =>
+      val named = data.map { case (p, _) => GraftMorMask.norm(p) -> p }
+      val dvAffected = named.collect { case (n, p) if dv.contains(n) => p }
+      // a file can lose rows to the equality mask only when some
+      // tombstone outranks its sequence (base files are sequence 0)
+      val maxSeq = eq.values.maxOption.getOrElse(Long.MinValue)
+      val candidates = named.collect { case (n, p)
+        if !dv.contains(n) && seqm.getOrElse(n, 0L) < maxSeq => p }
+      val dataSchema = sc.schemaDdl.map(StructType.fromDDL)
+        .orElse(data.headOption.flatMap(d => GraftIO.parquetSchema(s, d._1)))
+        .map(d => StructType(d.filterNot(c => partitionCols.contains(c.name))))
+        .getOrElse(new StructType())
+      val tableSchema = StructType(dataSchema ++ partSchema)
+      val eqAffected =
+        if (candidates.isEmpty) Nil
+        else eqProbe(s, tablePath, candidates, partSchema, tableSchema, eqFiles, seqmFiles)
+      val affected = dvAffected ++ eqAffected
+      val affectedSet = affected.toSet
+      val survivors =
+        if (affected.isEmpty) s.emptyDataFrame
+        else org.apache.spark.sql.graft.Bridge.ofRows(s,
+            org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+              GraftTable(tablePath, tableSchema, pinnedFiles = affected,
+                partSchema = partSchema, morDv = dvFiles, morEq = eqFiles,
+                morSeqm = seqmFiles), None, None))
+          .coalesce(packedTasks(s, data.filter(d => affectedSet(d._1)).map(_._2)))
+          .select((dataSchema.fieldNames ++ partitionCols).map(col).toIndexedSeq: _*)
+      (affected, survivors)
+    }
+  }
+
+  /** The candidate files that lose at least one row to the equality
+    * mask: one Spark job, no shuffle, over a `GraftScan` of the
+    * candidates' key columns that applies the mask in its reader; a
+    * row group whose reader serves fewer rows than it holds names its
+    * file.
+    */
+  private def eqProbe(s: SparkSession, tablePath: String, candidates: Seq[String],
+      partSchema: StructType, tableSchema: StructType, eqFiles: Seq[String],
+      seqmFiles: Seq[String]): Seq[String] = {
+    import graft.sources.v2.{GraftInputPartition, GraftScan, GraftV2}
+    val scan = GraftScan(tablePath, new StructType(), Array.empty,
+      GraftV2.sessionConf(s), pinnedFiles = candidates, partSchema = partSchema,
+      morEq = eqFiles, morSeqm = seqmFiles, tableSchema = tableSchema)
+    val splits = scan.planInputPartitions().toSeq.collect { case p: GraftInputPartition => p }
+    if (splits.isEmpty) return Nil
+    val factory = scan.createReaderFactory()
+    org.apache.spark.sql.graft.Bridge.described(s.sparkContext, "graft morCompact probe") {
+      s.sparkContext.parallelize(splits, splits.length).filter { p =>
+        var n = 0L
+        if (factory.supportColumnarReads(p)) {
+          val r = factory.createColumnarReader(p)
+          try while (r.next()) n += r.get().numRows() finally r.close()
+        } else {
+          val r = factory.createReader(p)
+          try while (r.next()) n += 1 finally r.close()
+        }
+        n < p.rowCount
+      }.map(_.path).collect().toSeq.distinct
+    }
+  }
+
+  /** Write tasks for survivors of files of `sizes` bytes: the number of
+    * partitions Spark's own file scan packs them into
+    * (`FilePartition.maxSplitBytes`, then next-fit by size), so a
+    * compaction writes no more files than a v1 scan of its input did,
+    * while a large file still splits over several tasks.
+    */
+  private def packedTasks(s: SparkSession, sizes: Seq[Long]): Int = {
+    val c = s.sessionState.conf
+    val open = c.filesOpenCostInBytes
+    val minParts = c.filesMinPartitionNum.getOrElse(s.sparkContext.defaultParallelism)
+    val maxSplit = math.min(c.filesMaxPartitionBytes,
+      math.max(open, (sizes.sum + sizes.size * open) / math.max(1, minParts)))
+    val pieces = sizes.flatMap(n =>
+      Seq.fill((n / maxSplit).toInt)(maxSplit) ++ Option(n % maxSplit).filter(_ > 0))
+    var bins = 0
+    var current = 0L
+    pieces.sorted(Ordering[Long].reverse).foreach { n =>
+      if (bins == 0 || current + n > maxSplit) { bins += 1; current = 0L }
+      current += n + open
+    }
+    math.max(1, bins)
+  }
+
+  /** [[morCompact]]'s anti-join plan, for what the serving masks
+    * refuse: the affected files and their survivors through v1 scans
+    * of the sidecars and the data, folded by broadcast (or, past
+    * [[MaxBroadcastSidecarBytes]], shuffled) anti-joins.
+    */
+  private def compactByJoins(s: SparkSession, tablePath: String,
+      sc: Sidecars): (Seq[String], DataFrame) = {
+    val dvOpt = dvFrame(s, sc)
+    // fold the eq sidecar to one max-sequence row per key up front —
+    // that is the whole mask (sequences accumulate monotonically)
+    val eqOpt = eqFrame(s, sc).map { eq =>
+      val keyColsEq = eq.columns.filterNot(_ == "seq").toSeq
+      eq.groupBy(keyColsEq.map(col): _*).agg(max("seq").as("__max_seq"))
+    }
+    val seqOpt = seqFrame(s, sc)
     // attach each row's file sequence (manifest absent/missing → base
     // sequence 0) and build the A45 mask condition against `tomb`
     def withFileSeq(df: DataFrame): DataFrame = seqOpt match {
@@ -929,9 +1095,7 @@ object GraftMor {
         .select("dv_file").distinct().collect().map(_.getString(0))
     }
     val affected = (dvFiles ++ eqFiles).distinct
-    def clear(): Unit = clearSidecars(f, tablePath, hasDv, hasEq, hasSeqm,
-      nextDv, nextEq)
-    if (affected.isEmpty) { clear(); return }
+    if (affected.isEmpty) return (Nil, s.emptyDataFrame)
     // basePath keeps hive partition columns attached when the affected
     // FILES are addressed directly
     val scanned = readFilesWithBase(s, tablePath, affected, sc.schemaDdl)
@@ -956,17 +1120,7 @@ object GraftMor {
     val dataCols = scanned.columns
       .filterNot(Set("dv_file", "dv_pos", "__fn", "file_norm", "file_seq",
         "__file_seq"))
-    // nothing live is touched before the survivors are staged; a task
-    // with no survivors writes no file
-    val (stage, files) = writeStage(masked.select(dataCols.map(col): _*),
-      tablePath, "compact", "morCompact", partitionCols)
-    affected.foreach { file =>
-      if (!f.delete(new org.apache.hadoop.fs.Path(file), false))
-        throw new IllegalStateException(
-          s"[GRAFT] morCompact failed to remove $file")
-    }
-    clear()
-    moveIn(f, tablePath, stage, files, "morCompact")
+    (affected, masked.select(dataCols.map(col): _*))
   }
 
   private[sources] def toMicros(t: java.time.LocalDateTime): Long =
@@ -981,7 +1135,7 @@ object GraftMor {
       tsCol: String): Array[(String, Option[(Long, Long)])] = {
     import graft.sources.v2.GraftV2
     val conf = GraftV2.sessionConf(s)
-    val files = GraftV2.dataFiles(tablePath, s.sessionState.newHadoopConf())
+    val files = GraftV2.dataFiles(tablePath, GraftIO.hadoopConf(s))
     if (files.isEmpty) return Array.empty
     val slices = math.max(1, math.min(files.length,
       s.sparkContext.defaultParallelism))

@@ -69,7 +69,23 @@ object GraftSchemaPolicy {
     case _ => false
   }
 
-  /** Classify every difference from `old` to `next`. */
+  /** `t` with every NESTED field, element and value nullable: a table
+    * read back from parquet serves nested fields nullable whatever the
+    * writer declared, so nested nullability is not a type change.
+    */
+  private def nestedNullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nestedNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nestedNullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nestedNullable(m.keyType), nestedNullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
+
+  /** Classify every difference from `old` to `next`. Nested types
+    * compare with nullability ignored; a column's own nullability is
+    * classified on its own.
+    */
   def diff(old: StructType, next: StructType): Seq[Change] = {
     val oldBy = old.fields.map(f => f.name -> f).toMap
     val nextBy = next.fields.map(f => f.name -> f).toMap
@@ -80,7 +96,7 @@ object GraftSchemaPolicy {
     val common = next.fields.filter(f => oldBy.contains(f.name)).flatMap { f =>
       val o = oldBy(f.name)
       val typeChange: Option[Change] =
-        if (o.dataType == f.dataType) None
+        if (nestedNullable(o.dataType) == nestedNullable(f.dataType)) None
         else if (widens(o.dataType, f.dataType))
           Some(WidenedType(f.name, o.dataType, f.dataType))
         else Some(RetypedColumn(f.name, o.dataType, f.dataType))

@@ -906,7 +906,8 @@ case class GraftScan(path: String, required: StructType, filters: Array[Filter],
                 seqmMap.getOrElse(
                   GraftMorMask.norm(new Path(file).toUri.getPath), 0L),
                 rgOffset = b.offset,
-                rgLength = b.length))
+                rgLength = b.length,
+                rowCount = b.rowCount))
             }
           }.toSeq
       }
@@ -1073,7 +1074,8 @@ class GraftAggReader(path: String, spec: GraftAggSpec,
   * skips exactly those rows, split-locally. `rgOffset`/`rgLength` are
   * the row group's byte coordinates from the footer (free at planning)
   * — what the VECTORIZED reader's file split addresses; rgLength <= 0
-  * means unknown and forces the row-based reader.
+  * means unknown and forces the row-based reader. `rowCount` is the
+  * row group's unmasked row count (-1 when unknown).
   */
 case class GraftInputPartition(path: String, rowGroup: Int,
     hosts: Array[String] = Array.empty,
@@ -1082,7 +1084,8 @@ case class GraftInputPartition(path: String, rowGroup: Int,
     masked: Array[Long] = Array.empty,
     fileSeq: Long = 0L,
     rgOffset: Long = 0L,
-    rgLength: Long = -1L) extends InputPartition {
+    rgLength: Long = -1L,
+    rowCount: Long = -1L) extends InputPartition {
   override def preferredLocations(): Array[String] = hosts
 }
 
@@ -1438,8 +1441,9 @@ object GraftV2 {
   private def shippedConf(session: Option[SparkSession]): SessionConf =
     session.filterNot(_.sparkContext.isStopped) match {
       case None => new SessionConf(null, new SerializableConfiguration(new Configuration()))
-      case Some(s) =>
-        val conf = s.sessionState.newHadoopConf()
+      // inside one top-level graft call the conf is fixed, so its
+      // content is compared once per call
+      case Some(s) => graft.sources.GraftIO.shippedPerCall(s) { conf =>
         val content = conf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
         val sc = s.sparkContext
         shipped.synchronized {
@@ -1452,6 +1456,7 @@ object GraftV2 {
             case h => h
           }
         }
+      }
     }
 
   /** Data files of a table path: the path itself when it is a single

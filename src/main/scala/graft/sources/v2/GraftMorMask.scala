@@ -23,12 +23,12 @@ import scala.collection.mutable
   * is churn-bounded by the advisor's `mor-compact` budget, and past
   * the cap the right answer is a compaction, so the load refuses BY
   * NAME instead of growing an unbounded driver artifact. Loads are
-  * CACHED keyed by the sidecar file list (sidecar parquet is
-  * immutable and part-file names are unique, so the path list is a
-  * content address): a second scan of the same pin — or the same
-  * table re-queried in a session — re-opens ZERO sidecar files; a
-  * mutation writes new epoch files, which is a new key. The cache is
-  * a small LRU (the loaded artifacts are driver-capped already).
+  * CACHED per sidecar FILE (sidecar parquet is immutable and
+  * part-file names are unique, so the path is a content address) and
+  * merged per load: a second scan of the same pin — or the same table
+  * re-queried in a session — re-opens ZERO sidecar files, and a
+  * mutation's new epoch opens only its own files. The cache is an LRU
+  * bounded in files (the loaded artifacts are driver-capped already).
   *
   * Reference anchor: the reference's record reader applies per-split
   * constants/skips during iteration
@@ -44,7 +44,18 @@ object GraftMorMask {
 
   // ── load cache ──────────────────────────────────────────────────
 
-  private val MaxCacheEntries = 8
+  /** Bound on cached sidecar FILES. A table holds about one file per
+    * live epoch and flavour, and a `mor_churn` run (nine tables, reads
+    * following its writes, a compaction every few rounds) held at most
+    * 17 loaded sidecar files at once; 64 keeps all of those with room
+    * for a compaction's own loads and a second session's tables.
+    */
+  private val MaxCacheEntries = 64
+
+  /** One sidecar file's parsed artifact and the tombstone rows it
+    * holds (the cap applies to the merged sum).
+    */
+  private final case class Part[T](value: T, rows: Long)
 
   /** One entry's lazily-computed artifact: the `lazy val` gives each
     * KEY its own initialization lock, so the global map lock is held
@@ -60,21 +71,24 @@ object GraftMorMask {
   }
 
   private val cache =
-    new java.util.LinkedHashMap[(String, Seq[String], Long), Cell](
-        16, 0.75f, true) {
+    new java.util.LinkedHashMap[(String, String), Cell](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Seq[String], Long), Cell]): Boolean =
+          e: java.util.Map.Entry[(String, String), Cell]): Boolean =
         size() > MaxCacheEntries
     }
 
-  private def cached[T <: AnyRef](kind: String, files: Seq[String],
-      cap: Long)(compute: => T): T = {
-    val key = (kind, files, cap)
+  /** One sidecar FILE's artifact, cached by (kind, path): sidecar
+    * parquet is immutable and part-file names are unique, so the path
+    * is a content address, and a new epoch is new files — a read after
+    * a mutation opens only the new epoch's files.
+    */
+  private def cached[T <: AnyRef](kind: String, file: String)(compute: => T): T = {
+    val key = (kind, file)
     val cell = cache.synchronized {
       cache.get(key) match {
         case hit: Cell => hit
         case _ =>
-          val c = new Cell(() => compute)
+          val c = new Cell(() => { opens.incrementAndGet(); compute })
           cache.put(key, c)
           c
       }
@@ -89,6 +103,14 @@ object GraftMorMask {
     }
   }
 
+  /** Drop the cached artifacts of `files` — sidecar files a compaction
+    * folded and deleted, whose entries no read can hit again.
+    */
+  def forget(files: Seq[String]): Unit = cache.synchronized {
+    val gone = files.toSet
+    cache.keySet().removeIf(k => gone.contains(k._2))
+  }
+
   private val opens = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Total sidecar parquet files OPENED by the loaders so far — the
@@ -96,6 +118,51 @@ object GraftMorMask {
     * nothing).
     */
   def sidecarOpens: Long = opens.get()
+
+  /** A load refused BY NAME: past the serving cap, or a key type the
+    * serving surface cannot canonicalize. `morCompact` folds such
+    * sidecars through its join plan instead.
+    */
+  final class Refused(msg: String) extends IllegalStateException(msg)
+
+  /** Feed every row of `columns` in one sidecar file to the row
+    * handler `init` builds from the requested schema.
+    */
+  private def eachRow(f: String, conf: Configuration, columns: Seq[String])(
+      init: MessageType => Group => Unit): Unit =
+    GraftV2.withReader(f, conf) { r =>
+      val fileSchema = r.getFooter.getFileMetaData.getSchema
+      val requested = new MessageType(fileSchema.getName,
+        columns.map(c => fileSchema.getType(Seq(c): _*)): _*)
+      val row = init(requested)
+      r.setRequestedSchema(requested)
+      var store = r.readNextRowGroup()
+      while (store != null) {
+        val rr = new ColumnIOFactory().getColumnIO(requested)
+          .getRecordReader(store, new GroupRecordConverter(requested))
+        var i = 0L
+        val rows = store.getRowCount
+        while (i < rows) { row(rr.read()); i += 1 }
+        store = r.readNextRowGroup()
+      }
+    }
+
+  private def overCap(kind: String, cap: Long) = new Refused(
+    s"[GRAFT] more than $cap unmerged $kind tombstones: past " +
+      "the SQL serving cap - fold them with GraftMor.morCompact " +
+      "(then REFRESH TABLE), or read via GraftMor.morRead")
+
+  /** The per-file parts of `files`, refused once their rows pass `cap`. */
+  private def parts[T](kind: String, files: Seq[String], cap: Long)(
+      one: String => Part[T]): Seq[T] = {
+    var n = 0L
+    files.map { f =>
+      val p = one(f)
+      n += p.rows
+      if (n > cap) throw overCap(kind, cap)
+      p.value
+    }
+  }
 
   // ── canonical key values ────────────────────────────────────────
 
@@ -175,49 +242,31 @@ object GraftMorMask {
   }
 
   /** Load the listed sidecar parquet files into
-    * `normalized data-file path -> sorted row indexes`. Throws past
-    * `cap` total tombstones. Cached by the (immutable) file list.
+    * `normalized data-file path -> sorted row indexes`. Throws
+    * [[Refused]] past `cap` total tombstones. Each file is cached on
+    * its own and the files merge per call.
     */
   def load(sidecarFiles: Seq[String], conf: Configuration,
       cap: Long = graft.sources.GraftMor.MaxBroadcastTombstones)
-      : Map[String, Array[Long]] =
-    cached("dv", sidecarFiles, cap) { loadUncached(sidecarFiles, conf, cap) }
+      : Map[String, Array[Long]] = {
+    val ps = parts("position", sidecarFiles, cap)(f =>
+      cached("dv", f)(loadDv(f, conf, cap)))
+    if (ps.sizeIs == 1) ps.head
+    else ps.flatten.groupMap(_._1)(_._2).map { case (k, vs) =>
+      k -> (if (vs.sizeIs == 1) vs.head else vs.flatten.toArray.sorted) }
+  }
 
-  private def loadUncached(sidecarFiles: Seq[String], conf: Configuration,
-      cap: Long): Map[String, Array[Long]] = {
+  private def loadDv(f: String, conf: Configuration,
+      cap: Long): Part[Map[String, Array[Long]]] = {
     val acc = mutable.HashMap.empty[String, mutable.ArrayBuffer[Long]]
     var n = 0L
-    sidecarFiles.foreach { f =>
-      opens.incrementAndGet()
-      GraftV2.withReader(f, conf) { r =>
-        val fileSchema = r.getFooter.getFileMetaData.getSchema
-        val requested = new MessageType(fileSchema.getName,
-          fileSchema.getType(Seq("dv_file"): _*),
-          fileSchema.getType(Seq("dv_pos"): _*))
-        r.setRequestedSchema(requested)
-        var store = r.readNextRowGroup()
-        while (store != null) {
-          val rr = new ColumnIOFactory().getColumnIO(requested)
-            .getRecordReader(store, new GroupRecordConverter(requested))
-          var i = 0L
-          val rows = store.getRowCount
-          while (i < rows) {
-            val g = rr.read()
-            n += 1
-            if (n > cap)
-              throw new IllegalStateException(
-                s"[GRAFT] more than $cap unmerged position tombstones: past " +
-                  "the SQL serving cap - fold them with GraftMor.morCompact " +
-                  "(then REFRESH TABLE), or read via GraftMor.morRead")
-            acc.getOrElseUpdate(norm(g.getBinary(0, 0).toStringUsingUTF8),
-              new mutable.ArrayBuffer[Long]) += g.getLong(1, 0)
-            i += 1
-          }
-          store = r.readNextRowGroup()
-        }
-      }
+    eachRow(f, conf, Seq("dv_file", "dv_pos")) { _ => g =>
+      n += 1
+      if (n > cap) throw overCap("position", cap)
+      acc.getOrElseUpdate(norm(g.getBinary(0, 0).toStringUsingUTF8),
+        new mutable.ArrayBuffer[Long]) += g.getLong(1, 0)
     }
-    acc.iterator.map { case (k, v) => k -> v.toArray.sorted }.toMap
+    Part(acc.iterator.map { case (k, v) => k -> v.toArray.sorted }.toMap, n)
   }
 
   /** One equality-sidecar load (A44/A45) for the SQL serving surface:
@@ -228,97 +277,59 @@ object GraftMorMask {
     * string, date, timestamp (incl. legacy INT96) and decimal keys
     * all serve; true exotics (nested, raw binary, floating point)
     * refuse BY NAME (fall back to morRead). Same driver-side,
-    * hard-capped, cached discipline as [[load]].
+    * hard-capped, per-file cached discipline as [[load]].
     */
   def loadEq(sidecarFiles: Seq[String], conf: Configuration,
       cap: Long = graft.sources.GraftMor.MaxBroadcastTombstones)
-      : (Seq[String], Map[Seq[Any], Long]) =
-    cached("eq", sidecarFiles, cap) { loadEqUncached(sidecarFiles, conf, cap) }
-
-  private def loadEqUncached(sidecarFiles: Seq[String], conf: Configuration,
-      cap: Long): (Seq[String], Map[Seq[Any], Long]) = {
+      : (Seq[String], Map[Seq[Any], Long]) = {
     require(sidecarFiles.nonEmpty, "[GRAFT] loadEq with no sidecar files")
-    val schema = GraftV2.readSchema(sidecarFiles.head, conf)
-    val keyFields = schema.fields.filterNot(f => f.name == "seq").toSeq
+    val ps = parts("equality", sidecarFiles, cap)(f =>
+      cached("eq", f)(loadEqFile(f, conf, cap)))
+    if (ps.sizeIs == 1) ps.head
+    else {
+      val acc = mutable.HashMap.empty[Seq[Any], Long]
+      ps.foreach(_._2.foreach { case (k, seq) =>
+        if (seq > acc.getOrElse(k, Long.MinValue)) acc.put(k, seq) })
+      (ps.head._1, acc.toMap)
+    }
+  }
+
+  private def loadEqFile(f: String, conf: Configuration,
+      cap: Long): Part[(Seq[String], Map[Seq[Any], Long])] = {
+    val keyFields = GraftV2.readSchema(f, conf).fields.filterNot(_.name == "seq").toSeq
     val acc = mutable.HashMap.empty[Seq[Any], Long]
     var n = 0L
-    sidecarFiles.foreach { f =>
-      opens.incrementAndGet()
-      GraftV2.withReader(f, conf) { r =>
-        val fileSchema = r.getFooter.getFileMetaData.getSchema
-        val names = keyFields.map(_.name) :+ "seq"
-        val requested = new MessageType(fileSchema.getName,
-          names.map(n0 => fileSchema.getType(Seq(n0): _*)): _*)
-        val getters: Array[Group => Any] = keyFields.indices.toArray.map { j =>
-          canonicalKeyGetter(requested.getType(j), j).getOrElse(
-            throw new IllegalStateException(
-              s"[GRAFT] equality-mask key column '${keyFields(j).name}' has " +
-                s"type ${keyFields(j).dataType.simpleString}: the SQL serving " +
-                "surface composes integral/string/date/timestamp/decimal " +
-                "keys only - read via GraftMor.morRead or fold with morCompact"))
-        }
-        r.setRequestedSchema(requested)
-        var store = r.readNextRowGroup()
-        while (store != null) {
-          val rr = new ColumnIOFactory().getColumnIO(requested)
-            .getRecordReader(store, new GroupRecordConverter(requested))
-          var i = 0L
-          val rows = store.getRowCount
-          while (i < rows) {
-            val g = rr.read()
-            n += 1
-            if (n > cap)
-              throw new IllegalStateException(
-                s"[GRAFT] more than $cap unmerged equality tombstones: past " +
-                  "the SQL serving cap - fold them with GraftMor.morCompact " +
-                  "(then REFRESH TABLE), or read via GraftMor.morRead")
-            val key: Seq[Any] = getters.toIndexedSeq.map(_(g))
-            val seq = g.getLong(keyFields.length, 0)
-            val prev = acc.getOrElse(key, Long.MinValue)
-            if (seq > prev) acc.put(key, seq)
-            i += 1
-          }
-          store = r.readNextRowGroup()
-        }
+    eachRow(f, conf, keyFields.map(_.name) :+ "seq") { requested =>
+      val getters: Array[Group => Any] = keyFields.indices.toArray.map { j =>
+        canonicalKeyGetter(requested.getType(j), j).getOrElse(
+          throw new Refused(
+            s"[GRAFT] equality-mask key column '${keyFields(j).name}' has " +
+              s"type ${keyFields(j).dataType.simpleString}: the SQL serving " +
+              "surface composes integral/string/date/timestamp/decimal " +
+              "keys only - read via GraftMor.morRead or fold with morCompact"))
+      }
+      (g: Group) => {
+        n += 1
+        if (n > cap) throw overCap("equality", cap)
+        val key: Seq[Any] = getters.toIndexedSeq.map(_(g))
+        val seq = g.getLong(keyFields.length, 0)
+        if (seq > acc.getOrElse(key, Long.MinValue)) acc.put(key, seq)
       }
     }
-    (keyFields.map(_.name), acc.toMap)
+    Part((keyFields.map(_.name), acc.toMap), n)
   }
 
   /** The A45 file→sequence manifest, driver-loaded: normalized data
     * file path -> commit sequence; files absent are base (sequence 0).
-    * Cached like [[load]].
+    * Cached per file like [[load]].
     */
   def loadSeqm(sidecarFiles: Seq[String],
       conf: Configuration): Map[String, Long] =
-    cached("seqm", sidecarFiles, 0L) { loadSeqmUncached(sidecarFiles, conf) }
-
-  private def loadSeqmUncached(sidecarFiles: Seq[String],
-      conf: Configuration): Map[String, Long] = {
-    val acc = mutable.HashMap.empty[String, Long]
-    sidecarFiles.foreach { f =>
-      opens.incrementAndGet()
-      GraftV2.withReader(f, conf) { r =>
-        val fileSchema = r.getFooter.getFileMetaData.getSchema
-        val requested = new MessageType(fileSchema.getName,
-          fileSchema.getType(Seq("file_norm"): _*),
-          fileSchema.getType(Seq("file_seq"): _*))
-        r.setRequestedSchema(requested)
-        var store = r.readNextRowGroup()
-        while (store != null) {
-          val rr = new ColumnIOFactory().getColumnIO(requested)
-            .getRecordReader(store, new GroupRecordConverter(requested))
-          var i = 0L
-          val rows = store.getRowCount
-          while (i < rows) {
-            val g = rr.read()
-            acc.put(norm(g.getBinary(0, 0).toStringUsingUTF8), g.getLong(1, 0))
-            i += 1
-          }
-          store = r.readNextRowGroup()
-        }
+    parts("sequence", sidecarFiles, Long.MaxValue)(f => cached("seqm", f) {
+      val acc = mutable.HashMap.empty[String, Long]
+      eachRow(f, conf, Seq("file_norm", "file_seq")) { _ => g =>
+        acc.put(norm(g.getBinary(0, 0).toStringUsingUTF8), g.getLong(1, 0))
       }
-    }
-    acc.toMap
-  }
+      Part(acc.toMap, 0L)
+    }).foldLeft(Map.empty[String, Long])(_ ++ _)
 }

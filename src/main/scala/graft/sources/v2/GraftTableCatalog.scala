@@ -73,7 +73,7 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
   private def spark = if (owner != null) owner else SparkSession.active
 
   private def hadoopFs = new org.apache.hadoop.fs.Path(root)
-    .getFileSystem(spark.sessionState.newHadoopConf())
+    .getFileSystem(graft.sources.GraftIO.hadoopConf(spark))
 
   private def nsDir(ns: Array[String]): String = (root +: ns.toSeq).mkString("/")
 
@@ -152,7 +152,7 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
   }
 
   override def loadTable(ident: Identifier): Table =
-    tables.getOrElseUpdate((ident.namespace.mkString("/"), ident.name), {
+    graft.sources.GraftIO.withCallConf(spark)(tables.getOrElseUpdate((ident.namespace.mkString("/"), ident.name), {
       val nsCat = catalogFor(ident.namespace)
       val createdPath = s"${nsDir(ident.namespace)}/${ident.name}.parquet"
       // a crashed staged swap (ALTER rewrite / rebucket) left a journal
@@ -165,7 +165,7 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
         return emptyCreatedTable(createdPath)
           .getOrElse(throw new NoSuchTableException(ident))
       val tablePath = createdPath
-      val conf = spark.sessionState.newHadoopConf()
+      val conf = graft.sources.GraftIO.hadoopConf(spark)
       // MERGE-ON-READ awareness (A42-A47): ALL mutation sidecars are
       // PINNED here with the files and served split-locally by the v2
       // reader — position vectors as per-split row-index slices,
@@ -209,7 +209,7 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
         layoutBucket = layout.filter(_.kind == "bucket")
           .map(l => (l.cols, l.buckets)),
         layoutSpec = layout.map(GraftLayout.describe))
-    })
+    }))
 
   /** `SELECT … FROM graft.db.t VERSION AS OF <id>` — the SQL surface
     * over A26's published snapshots: the Table is built from the
@@ -236,12 +236,12 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
       catalogFor(ident.namespace).snapshotIdAt(ident.name, timestamp / 1000L))
 
   private def loadSnapshot(ident: Identifier, id: Long): Table =
-    tables.getOrElseUpdate((ident.namespace.mkString("/"), s"${ident.name}@v$id"), {
+    graft.sources.GraftIO.withCallConf(spark)(tables.getOrElseUpdate((ident.namespace.mkString("/"), s"${ident.name}@v$id"), {
       val m = catalogFor(ident.namespace).manifest(ident.name, id)
       val files = m.paths
       if (files.isEmpty) throw new NoSuchTableException(ident)
       val tablePath = s"${nsDir(ident.namespace)}/${ident.name}.parquet"
-      val conf = spark.sessionState.newHadoopConf()
+      val conf = graft.sources.GraftIO.hadoopConf(spark)
       // A54: the epoch's RECORDED mutation-sidecar state rides into
       // the v2 scan exactly as a live pin does — `VERSION AS OF` an
       // epoch published after a morDelete/morUpsert serves the
@@ -268,7 +268,7 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
         files, partSchema,
         morDv = sc.dv.map(_._1), morEq = sc.eq.map(_._1),
         morSeqm = sc.seqm.map(_._1))
-    })
+    }))
 
   /** `REFRESH TABLE graft.db.t` lands here: drop the memoized Table
     * and the table's pinned file listing so the next read re-pins the

@@ -30,10 +30,16 @@ object Bridge {
     */
   def withExecution[T](df: DataFrame, name: String)(body: RDD[InternalRow] => T): T = {
     val qe = df.queryExecution
-    val sc = df.sparkSession.sparkContext
-    val described = sc.getLocalProperty(SparkContext.SPARK_JOB_DESCRIPTION) != null
-    if (!described) sc.setJobDescription(name)
-    try SQLExecution.withNewExecutionId(qe, Some(name))(body(qe.toRdd))
-    finally if (!described) sc.setJobDescription(null)
+    described(df.sparkSession.sparkContext, name)(
+      SQLExecution.withNewExecutionId(qe, Some(name))(body(qe.toRdd)))
+  }
+
+  /** Run `body` with `name` as its jobs' description unless the caller
+    * set one.
+    */
+  def described[T](sc: SparkContext, name: String)(body: => T): T = {
+    val set = sc.getLocalProperty(SparkContext.SPARK_JOB_DESCRIPTION) != null
+    if (!set) sc.setJobDescription(name)
+    try body finally if (!set) sc.setJobDescription(null)
   }
 }

@@ -80,9 +80,9 @@ class MorWritePathSpec extends SparkSpecBase {
       val path = s"$root/$name.parquet"
       allTypes(0, 10, "a").coalesce(1).write.parquet(path)
       val base = parquetFiles(path)
-      // a batch read from parquet: nested fields nullable, as the table's
-      allTypes(5, 15, "b").write.parquet(s"$root/${name}_batch")
-      upsert(spark, path, spark.read.parquet(s"$root/${name}_batch"), Seq("k"))
+      // the batch straight from SQL: its named_struct's fields are
+      // non-nullable, the table's (read back from parquet) nullable
+      upsert(spark, path, allTypes(5, 15, "b"), Seq("k"))
       val expect = rowsOf(allTypes(0, 5, "a").union(allTypes(5, 15, "b")))
       assert(rowsOf(GraftMor.morRead(spark, path)) === expect, name)
       val written = parquetFiles(path) -- base
@@ -91,6 +91,23 @@ class MorWritePathSpec extends SparkSpecBase {
       GraftMor.morCompact(spark, path)
       assert(rowsOf(spark.read.parquet(path)) === expect, s"$name after compaction")
       parquetFiles(path).foreach(f => assert(rowMetadata(f).isDefined, f))
+    }
+  }
+
+  test("a nested type change still refuses a MOR upsert; nested nullability alone does not") {
+    val path = fresh("retype") + "/t.parquet"
+    spark.sql("SELECT id AS k, named_struct('a', CAST(id AS INT)) AS st FROM range(4)")
+      .coalesce(1).write.parquet(path)
+    val same = spark.sql("SELECT id AS k, named_struct('a', CAST(id AS INT)) AS st FROM range(2, 6)")
+    assert(!same.schema("st").dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
+      .fields.head.nullable, "the batch's nested field is non-nullable")
+    GraftMor.morUpsert(spark, path, same, Seq("k"))
+    assert(GraftMor.morRead(spark, path).count() === 6L)
+    val wider = spark.sql("SELECT id AS k, named_struct('a', id) AS st FROM range(1)")
+    for (upsert <- Seq[(SparkSession, String, DataFrame, Seq[String]) => Unit](
+        GraftMor.morUpsert, GraftMor.morUpsertEq)) {
+      val e = intercept[IllegalStateException](upsert(spark, path, wider, Seq("k")))
+      assert(e.getMessage.contains("retyped 'st': struct<a:int> -> struct<a:bigint>"), e.getMessage)
     }
   }
 
