@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, max}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, max, regexp_replace, url_decode}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import scala.util.control.NonFatal
@@ -278,8 +278,15 @@ object GraftMor {
     * listings (`file:/...`) and `_metadata.file_path` (`file:///...`)
     * agree as join keys.
     */
-  private def normPath(c: Column): Column =
-    org.apache.spark.sql.functions.regexp_replace(c, "^[a-zA-Z0-9.+-]+:/+", "/")
+  private def normPath(c: Column): Column = regexp_replace(c, "^[a-zA-Z0-9.+-]+:/+", "/")
+
+  /** [[normPath]] with the URL escapes of `_metadata.file_path`
+    * decoded: the path form `_seqm` and the SQL row-level writers
+    * record. The two differ once a name holds a space, a '%' or an
+    * escaped hive value. A literal '+' survives the form decoding.
+    */
+  private def decodedPath(c: Column): Column =
+    url_decode(regexp_replace(normPath(c), "\\+", "%2B"))
 
   private def fs(s: SparkSession, p: String) =
     new org.apache.hadoop.fs.Path(p).getFileSystem(GraftIO.hadoopConf(s))
@@ -786,7 +793,7 @@ object GraftMor {
       .withColumn("dv_file", normPath(col("_metadata.file_path")))
       .withColumn("dv_pos", col("_metadata.row_index"))
     if (seqOpt.nonEmpty) data = data
-      .withColumn("__fn", normPath(col("_metadata.file_path")))
+      .withColumn("__fn", decodedPath(col("_metadata.file_path")))
     val afterDv = dvOpt match {
       case None => data
       case Some(dv) =>
@@ -887,7 +894,10 @@ object GraftMor {
     * (`spark.graft.columnar.enabled=false`) take [[compactByJoins]],
     * the anti-join plan —
     * compaction is the remedy for the serving cap, so it never refuses
-    * at it.
+    * at it. Both plans match a position key to its data file in either
+    * path form, decoded or URL-encoded as `_metadata.file_path` carries
+    * it; a key naming a file that exists but matches neither refuses the
+    * fold before anything changes.
     *
     * Survivors are written to a batch-private `_staging/` dir BEFORE
     * anything live is touched (the A52 staging rule), so a failed
@@ -920,7 +930,7 @@ object GraftMor {
     // a reserved number whose write never landed stays burned
     val nextDv = math.max(nextEpoch(s, tablePath), reservedFloor(f, dvPath(tablePath)))
     val nextEq = math.max(nextEpoch(s, tablePath, eqPath), reservedFloor(f, eqPath(tablePath)))
-    val (affected, survivors) = foldInReader(s, tablePath, sc, partitionCols, maskCap)
+    val (affected, survivors) = foldInReader(s, f, tablePath, sc, partitionCols, maskCap)
       .getOrElse(compactByJoins(s, tablePath, sc))
     // nothing live is touched before the survivors are staged; a task
     // with no survivors writes no file
@@ -940,12 +950,13 @@ object GraftMor {
     * and their survivors, or None when the fold must take
     * [[compactByJoins]] (a refused mask load, an equality key in a
     * partition directory, a partition layout other than
-    * `partitionCols`, columnar reads switched off). Partition values are read back as their
-    * directory strings, so survivors re-land under the same directory
-    * names whatever the values look like.
+    * `partitionCols`, columnar reads switched off). Partition values
+    * are read back as their directory strings, so survivors re-land
+    * under the same directory names whatever the values look like.
     */
-  private def foldInReader(s: SparkSession, tablePath: String, sc: Sidecars,
-      partitionCols: Seq[String], maskCap: Long): Option[(Seq[String], DataFrame)] = {
+  private def foldInReader(s: SparkSession, f: org.apache.hadoop.fs.FileSystem,
+      tablePath: String, sc: Sidecars, partitionCols: Seq[String],
+      maskCap: Long): Option[(Seq[String], DataFrame)] = {
     import graft.sources.v2.{GraftMorMask, GraftTable, GraftV2}
     val conf = GraftIO.hadoopConf(s)
     val (dvFiles, eqFiles) = (sc.dv.map(_._1), sc.eq.map(_._1))
@@ -966,13 +977,13 @@ object GraftMor {
       columnar && !eqKeys.exists(partitionCols.contains) &&
         partSchema.fieldNames.toSeq == partitionCols
     }.map { case (dv, (_, eq), seqm) =>
-      val named = data.map { case (p, _) => GraftMorMask.norm(p) -> p }
-      val dvAffected = named.collect { case (n, p) if dv.contains(n) => p }
+      refuseStrays(f, dv.keys, data.flatMap(d => GraftMorMask.fileKeys(d._1)).toSet)
+      val (dvAffected, rest) =
+        data.map(_._1).partition(p => GraftMorMask.positions(dv, p).nonEmpty)
       // a file can lose rows to the equality mask only when some
       // tombstone outranks its sequence (base files are sequence 0)
       val maxSeq = eq.values.maxOption.getOrElse(Long.MinValue)
-      val candidates = named.collect { case (n, p)
-        if !dv.contains(n) && seqm.getOrElse(n, 0L) < maxSeq => p }
+      val candidates = rest.filter(p => seqm.getOrElse(GraftMorMask.norm(p), 0L) < maxSeq)
       val dataSchema = sc.schemaDdl.map(StructType.fromDDL)
         .orElse(data.headOption.flatMap(d => GraftIO.parquetSchema(s, d._1)))
         .map(d => StructType(d.filterNot(c => partitionCols.contains(c.name))))
@@ -990,7 +1001,11 @@ object GraftMor {
               GraftTable(tablePath, tableSchema, pinnedFiles = affected,
                 partSchema = partSchema, morDv = dvFiles, morEq = eqFiles,
                 morSeqm = seqmFiles), None, None))
-          .coalesce(packedTasks(s, data.filter(d => affectedSet(d._1)).map(_._2)))
+          // as many write tasks as Spark's own file scan packs the
+          // input into: no more files than a v1 scan of it wrote, while
+          // a large file still splits over several tasks
+          .coalesce(math.max(1, org.apache.spark.sql.graft.Bridge.filePartitionCount(
+            s, data.filter(d => affectedSet(d._1)))))
           .select((dataSchema.fieldNames ++ partitionCols).map(col).toIndexedSeq: _*)
       (affected, survivors)
     }
@@ -1027,28 +1042,18 @@ object GraftMor {
     }
   }
 
-  /** Write tasks for survivors of files of `sizes` bytes: the number of
-    * partitions Spark's own file scan packs them into
-    * (`FilePartition.maxSplitBytes`, then next-fit by size), so a
-    * compaction writes no more files than a v1 scan of its input did,
-    * while a large file still splits over several tasks.
+  /** Refuse a fold before it changes anything when a position key
+    * names a file that exists but matches no listed data file in either
+    * path form: its tombstones would not apply. A key naming no file at
+    * all names one a retention sweep dropped, and folds away.
     */
-  private def packedTasks(s: SparkSession, sizes: Seq[Long]): Int = {
-    val c = s.sessionState.conf
-    val open = c.filesOpenCostInBytes
-    val minParts = c.filesMinPartitionNum.getOrElse(s.sparkContext.defaultParallelism)
-    val maxSplit = math.min(c.filesMaxPartitionBytes,
-      math.max(open, (sizes.sum + sizes.size * open) / math.max(1, minParts)))
-    val pieces = sizes.flatMap(n =>
-      Seq.fill((n / maxSplit).toInt)(maxSplit) ++ Option(n % maxSplit).filter(_ > 0))
-    var bins = 0
-    var current = 0L
-    pieces.sorted(Ordering[Long].reverse).foreach { n =>
-      if (bins == 0 || current + n > maxSplit) { bins += 1; current = 0L }
-      current += n + open
-    }
-    math.max(1, bins)
-  }
+  private def refuseStrays(f: org.apache.hadoop.fs.FileSystem, keys: Iterable[String],
+      listed: String => Boolean): Unit =
+    keys.find(k => !listed(k) && (f.exists(new org.apache.hadoop.fs.Path(k)) ||
+        scala.util.Try(new org.apache.hadoop.fs.Path(new java.net.URI(k))).toOption.exists(f.exists)))
+      .foreach(k => throw new IllegalStateException(
+        s"[GRAFT] morCompact: position tombstones name $k, which exists but is " +
+          "no listed data file of the table; nothing was changed"))
 
   /** [[morCompact]]'s anti-join plan, for what the serving masks
     * refuse: the affected files and their survivors through v1 scans
@@ -1088,25 +1093,33 @@ object GraftMor {
       _.select("dv_file").distinct().collect().map(_.getString(0)))
     val eqFiles = eqOpt.toSeq.flatMap { tomb =>
       val seqd = withFileSeq(readTable(s, tablePath, sc)
-        .withColumn("dv_file", normPath(col("_metadata.file_path")))
-        .withColumn("__fn", normPath(col("_metadata.file_path"))))
+        .withColumn("__fn", decodedPath(col("_metadata.file_path"))))
       seqd.join(gate(tomb, sc.eqBytes, MaxBroadcastSidecarBytes),
           maskCond(seqd, tomb), "left_semi")
-        .select("dv_file").distinct().collect().map(_.getString(0))
+        .select("__fn").distinct().collect().map(_.getString(0))
     }
-    val affected = (dvFiles ++ eqFiles).distinct
+    // a position key names its file in either path form (see
+    // GraftMorMask.fileKeys): read and delete the file by its listed
+    // path. A key naming no listed file names one a retention sweep
+    // dropped, which leaves nothing to fold.
+    val listed = listDataFiles(s, tablePath)
+      .flatMap(p => graft.sources.v2.GraftMorMask.fileKeys(p).map(_ -> p)).toMap
+    refuseStrays(fs(s, tablePath), dvFiles, listed.contains)
+    val affected = (dvFiles ++ eqFiles).flatMap(listed.get).distinct
     if (affected.isEmpty) return (Nil, s.emptyDataFrame)
     // basePath keeps hive partition columns attached when the affected
     // FILES are addressed directly
     val scanned = readFilesWithBase(s, tablePath, affected, sc.schemaDdl)
       .withColumn("dv_file", normPath(col("_metadata.file_path")))
       .withColumn("dv_pos", col("_metadata.row_index"))
-      .withColumn("__fn", normPath(col("_metadata.file_path")))
+      .withColumn("__fn", decodedPath(col("_metadata.file_path")))
     val afterDv = dvOpt match {
       case None     => scanned
-      case Some(dv) => scanned.join(
-        gate(dv, sc.dvBytes, MaxBroadcastSidecarBytes),
-        Seq("dv_file", "dv_pos"), "left_anti")
+      case Some(dv) =>
+        // one anti-join per path form a key can carry
+        val side = gate(dv, sc.dvBytes, MaxBroadcastSidecarBytes)
+        scanned.join(side, Seq("dv_file", "dv_pos"), "left_anti")
+          .join(side.withColumnRenamed("dv_file", "__fn"), Seq("__fn", "dv_pos"), "left_anti")
     }
     val masked = eqOpt match {
       case None       => afterDv

@@ -455,8 +455,7 @@ case class GraftScan(path: String, required: StructType, filters: Array[Filter],
   private def maskCoords(file: String, rgs: IndexedSeq[GraftPlanStats.Rg],
       dvMask: Map[String, Array[Long]]): (Array[Long], Array[Long]) =
     (rgs.scanLeft(0L)(_ + _.rowCount).toArray,
-      dvMask.getOrElse(
-        GraftMorMask.norm(new Path(file).toUri.getPath), Array.empty[Long]))
+      GraftMorMask.positions(dvMask, file))
 
   private def footerBlocks(file: String): Array[BlockMetaData] = {
     val hit = footerMemo.get(file)

@@ -24,11 +24,11 @@ import scala.collection.mutable
   * the cap the right answer is a compaction, so the load refuses BY
   * NAME instead of growing an unbounded driver artifact. Loads are
   * CACHED per sidecar FILE (sidecar parquet is immutable and
-  * part-file names are unique, so the path is a content address) and
-  * merged per load: a second scan of the same pin — or the same table
-  * re-queried in a session — re-opens ZERO sidecar files, and a
-  * mutation's new epoch opens only its own files. The cache is an LRU
-  * bounded in files (the loaded artifacts are driver-capped already).
+  * part-file names are unique, so the path is a content address), and
+  * the merged mask per file list: a second scan of the same pin — or
+  * the same table re-queried in a session — re-opens ZERO sidecar files
+  * and merges nothing, and a mutation's new epoch opens only its own
+  * files. The cache is an LRU bounded in entries and in tombstone rows.
   *
   * Reference anchor: the reference's record reader applies per-split
   * constants/skips during iteration
@@ -42,20 +42,40 @@ object GraftMorMask {
     */
   def norm(p: String): String = p.replaceFirst("^[a-zA-Z0-9.+-]+:/+", "/")
 
+  /** The position-mask keys a data file can appear under: its decoded
+    * path, which graft's own writers record, and its URL-encoded path,
+    * which `_metadata.file_path` carries. The two differ once a name
+    * holds a space, a '%' or an escaped hive value such as a timestamp.
+    */
+  def fileKeys(file: String): Seq[String] = {
+    val u = new org.apache.hadoop.fs.Path(file).toUri
+    Seq(norm(u.getPath), norm(u.getRawPath)).distinct
+  }
+
+  /** `file`'s sorted masked row indexes in `mask`, under either key. */
+  def positions(mask: Map[String, Array[Long]], file: String): Array[Long] =
+    if (mask.isEmpty) Array.emptyLongArray
+    else fileKeys(file).flatMap(mask.get) match {
+      case Seq() => Array.emptyLongArray
+      case Seq(one) => one
+      case both => both.flatten.distinct.sorted.toArray
+    }
+
   // ── load cache ──────────────────────────────────────────────────
 
-  /** Bound on cached sidecar FILES. A table holds about one file per
-    * live epoch and flavour, and a `mor_churn` run (nine tables, reads
+  /** Bounds on the cache. An entry is one sidecar file's parsed part
+    * or one load's merged mask over several files; its rows are the
+    * tombstones it holds. A `mor_churn` run (nine tables, reads
     * following its writes, a compaction every few rounds) held at most
-    * 17 loaded sidecar files at once; 64 keeps all of those with room
-    * for a compaction's own loads and a second session's tables.
+    * 17 loaded sidecar files at once, and adds at most one merged mask
+    * per table and flavour: 64 entries keep all of those. The row bound
+    * holds the cache's driver memory to eight loads at the serving cap.
     */
   private val MaxCacheEntries = 64
+  private val MaxCacheRows = 8L * graft.sources.GraftMor.MaxBroadcastTombstones
 
-  /** One sidecar file's parsed artifact and the tombstone rows it
-    * holds (the cap applies to the merged sum).
-    */
-  private final case class Part[T](value: T, rows: Long)
+  /** One cached artifact and the tombstone rows it holds. */
+  private final case class Part[+T](value: T, rows: Long)
 
   /** One entry's lazily-computed artifact: the `lazy val` gives each
     * KEY its own initialization lock, so the global map lock is held
@@ -64,36 +84,50 @@ object GraftMorMask {
     * driver IO behind one monitor (r13 VERDICT wart). Scala retries a
     * lazy initializer whose first run threw, which is exactly right
     * for the cap/key-type refusals — but the failed cell is also
-    * evicted below so it cannot squat in the LRU.
+    * evicted below so it cannot squat in the LRU. `rows` counts
+    * towards the row bound once the part is loaded.
     */
-  private final class Cell(compute: () => AnyRef) {
-    lazy val value: AnyRef = compute()
+  private final class Cell(compute: () => Part[AnyRef]) {
+    lazy val part: Part[AnyRef] = compute()
+    var rows = -1L // guarded by `cache`; -1 until counted
   }
 
   private val cache =
-    new java.util.LinkedHashMap[(String, String), Cell](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), Cell]): Boolean =
-        size() > MaxCacheEntries
-    }
+    new java.util.LinkedHashMap[(String, Seq[String]), Cell](16, 0.75f, true)
+  private var cachedRows = 0L // guarded by `cache`
 
-  /** One sidecar FILE's artifact, cached by (kind, path): sidecar
-    * parquet is immutable and part-file names are unique, so the path
-    * is a content address, and a new epoch is new files — a read after
-    * a mutation opens only the new epoch's files.
+  /** Drop least-recently-used entries, `keep` aside, until both bounds
+    * hold. The caller holds the `cache` lock.
     */
-  private def cached[T <: AnyRef](kind: String, file: String)(compute: => T): T = {
-    val key = (kind, file)
+  private def evict(keep: Cell): Unit = {
+    val it = cache.values().iterator()
+    while ((cache.size > MaxCacheEntries || cachedRows > MaxCacheRows) && it.hasNext) {
+      val c = it.next()
+      if (c ne keep) {
+        it.remove()
+        if (c.rows >= 0) cachedRows -= c.rows
+      }
+    }
+  }
+
+  /** The artifact cached under (`kind`, `files`), refused past `cap`.
+    * Sidecar parquet is immutable and part-file names are unique, so
+    * the file list is a content address: a new epoch is new files.
+    */
+  private def cached[T <: AnyRef](kind: String, files: Seq[String], cap: Long)(
+      compute: => Part[T]): Part[T] = {
+    val key = (kind, files)
     val cell = cache.synchronized {
       cache.get(key) match {
         case hit: Cell => hit
         case _ =>
-          val c = new Cell(() => { opens.incrementAndGet(); compute })
+          val c = new Cell(() => compute)
           cache.put(key, c)
+          evict(c)
           c
       }
     }
-    try cell.value.asInstanceOf[T]
+    val part = try cell.part
     catch {
       case e: Throwable =>
         // a refused load must not occupy an LRU slot (and a racing
@@ -101,6 +135,37 @@ object GraftMorMask {
         cache.synchronized { if (cache.get(key) eq cell) cache.remove(key) }
         throw e
     }
+    cache.synchronized {
+      if (cell.rows < 0 && (cache.get(key) eq cell)) {
+        cell.rows = part.rows
+        cachedRows += part.rows
+        evict(cell)
+      }
+    }
+    // an entry loaded under a higher cap still refuses a lower one
+    if (part.rows > cap) throw overCap(kind, cap)
+    part.asInstanceOf[Part[T]]
+  }
+
+  /** `files`' artifact: each file's part is cached on its own, so a new
+    * epoch opens only its own files, and the merged artifact is cached
+    * per file list, so a rescan of the same pin merges nothing.
+    */
+  private def merged[T <: AnyRef](kind: String, files: Seq[String], cap: Long)(
+      one: String => Part[T])(merge: Seq[T] => T): T = {
+    def file(f: String) = cached(kind, Seq(f), cap) { opens.incrementAndGet(); one(f) }
+    if (files.isEmpty) merge(Nil)
+    else if (files.sizeIs == 1) file(files.head).value
+    else cached(kind, files, cap) {
+      var n = 0L
+      val values = files.map { f =>
+        val p = file(f)
+        n += p.rows
+        if (n > cap) throw overCap(kind, cap)
+        p.value
+      }
+      Part(merge(values), n)
+    }.value
   }
 
   /** Drop the cached artifacts of `files` — sidecar files a compaction
@@ -108,7 +173,14 @@ object GraftMorMask {
     */
   def forget(files: Seq[String]): Unit = cache.synchronized {
     val gone = files.toSet
-    cache.keySet().removeIf(k => gone.contains(k._2))
+    val it = cache.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      if (e.getKey._2.exists(gone)) {
+        it.remove()
+        if (e.getValue.rows >= 0) cachedRows -= e.getValue.rows
+      }
+    }
   }
 
   private val opens = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -151,18 +223,6 @@ object GraftMorMask {
     s"[GRAFT] more than $cap unmerged $kind tombstones: past " +
       "the SQL serving cap - fold them with GraftMor.morCompact " +
       "(then REFRESH TABLE), or read via GraftMor.morRead")
-
-  /** The per-file parts of `files`, refused once their rows pass `cap`. */
-  private def parts[T](kind: String, files: Seq[String], cap: Long)(
-      one: String => Part[T]): Seq[T] = {
-    var n = 0L
-    files.map { f =>
-      val p = one(f)
-      n += p.rows
-      if (n > cap) throw overCap(kind, cap)
-      p.value
-    }
-  }
 
   // ── canonical key values ────────────────────────────────────────
 
@@ -244,16 +304,14 @@ object GraftMorMask {
   /** Load the listed sidecar parquet files into
     * `normalized data-file path -> sorted row indexes`. Throws
     * [[Refused]] past `cap` total tombstones. Each file is cached on
-    * its own and the files merge per call.
+    * its own, and the merged mask per file list.
     */
   def load(sidecarFiles: Seq[String], conf: Configuration,
       cap: Long = graft.sources.GraftMor.MaxBroadcastTombstones)
       : Map[String, Array[Long]] = {
-    val ps = parts("position", sidecarFiles, cap)(f =>
-      cached("dv", f)(loadDv(f, conf, cap)))
-    if (ps.sizeIs == 1) ps.head
-    else ps.flatten.groupMap(_._1)(_._2).map { case (k, vs) =>
-      k -> (if (vs.sizeIs == 1) vs.head else vs.flatten.toArray.sorted) }
+    merged("position", sidecarFiles, cap)(loadDv(_, conf, cap))(
+      _.flatten.groupMap(_._1)(_._2).map { case (k, vs) =>
+        k -> (if (vs.sizeIs == 1) vs.head else vs.flatten.toArray.sorted) })
   }
 
   private def loadDv(f: String, conf: Configuration,
@@ -283,10 +341,7 @@ object GraftMorMask {
       cap: Long = graft.sources.GraftMor.MaxBroadcastTombstones)
       : (Seq[String], Map[Seq[Any], Long]) = {
     require(sidecarFiles.nonEmpty, "[GRAFT] loadEq with no sidecar files")
-    val ps = parts("equality", sidecarFiles, cap)(f =>
-      cached("eq", f)(loadEqFile(f, conf, cap)))
-    if (ps.sizeIs == 1) ps.head
-    else {
+    merged("equality", sidecarFiles, cap)(loadEqFile(_, conf, cap)) { ps =>
       val acc = mutable.HashMap.empty[Seq[Any], Long]
       ps.foreach(_._2.foreach { case (k, seq) =>
         if (seq > acc.getOrElse(k, Long.MinValue)) acc.put(k, seq) })
@@ -325,11 +380,11 @@ object GraftMorMask {
     */
   def loadSeqm(sidecarFiles: Seq[String],
       conf: Configuration): Map[String, Long] =
-    parts("sequence", sidecarFiles, Long.MaxValue)(f => cached("seqm", f) {
+    merged("sequence", sidecarFiles, Long.MaxValue) { f =>
       val acc = mutable.HashMap.empty[String, Long]
       eachRow(f, conf, Seq("file_norm", "file_seq")) { _ => g =>
         acc.put(norm(g.getBinary(0, 0).toStringUsingUTF8), g.getLong(1, 0))
       }
-      Part(acc.toMap, 0L)
-    }).foldLeft(Map.empty[String, Long])(_ ++ _)
+      Part(acc.toMap, acc.size.toLong)
+    }(_.foldLeft(Map.empty[String, Long])(_ ++ _))
 }

@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{PartitionedFileUtil, SQLExecution}
+import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWithMetadata, PartitionDirectory}
 
 /** Column ↔ catalyst Expression bridge for Spark 4 (where Column wraps
   * a ColumnNode, not an Expression). Lives under org.apache.spark.sql
@@ -32,6 +33,23 @@ object Bridge {
     val qe = df.queryExecution
     described(df.sparkSession.sparkContext, name)(
       SQLExecution.withNewExecutionId(qe, Some(name))(body(qe.toRdd)))
+  }
+
+  /** The number of partitions Spark's file scan packs `files` (path,
+    * bytes) into: `FilePartition.maxSplitBytes`, each file split at it,
+    * then next-fit by size, largest first.
+    */
+  def filePartitionCount(spark: SparkSession, files: Seq[(String, Long)]): Int = {
+    val statuses = files.map { case (p, n) =>
+      FileStatusWithMetadata(new org.apache.hadoop.fs.FileStatus(
+        n, false, 1, n, 0L, new org.apache.hadoop.fs.Path(p)))
+    }
+    val maxSplit = FilePartition.maxSplitBytes(spark,
+      Seq(PartitionDirectory(InternalRow.empty, statuses)))
+    val splits = statuses.flatMap(st => PartitionedFileUtil.splitFiles(
+        st, st.getPath, isSplitable = true, maxSplit, InternalRow.empty))
+      .sortBy(_.length)(Ordering[Long].reverse)
+    FilePartition.getFilePartitions(spark, splits, maxSplit).size
   }
 
   /** Run `body` with `name` as its jobs' description unless the caller

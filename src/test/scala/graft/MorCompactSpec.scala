@@ -97,18 +97,24 @@ class MorCompactSpec extends SparkSpecBase {
 
   test("property: a compaction serves what morRead served, rewrites only the files that lost rows, and keeps the epoch counters monotone") {
     import spark.implicits._
-    val layouts = Seq("flat", "hive", "evolved")
-    for (layout <- layouts; seed <- 1 to 2) {
+    // "spaced" is a flat table under a directory whose name URL
+    // encoding changes; the hive layout's string and timestamp values
+    // are escaped in their directory names. Seed 3 compacts through
+    // the anti-join plan.
+    val layouts = Seq("flat", "hive", "evolved", "spaced")
+    for (layout <- layouts; seed <- 1 to 3) {
       val rnd = new Random(seed * 7919 + layouts.indexOf(layout))
-      val path = fresh(s"prop_${layout}_$seed")
-      val partCols = if (layout == "hive") Seq("pi", "ps", "pd") else Nil
+      val path = fresh(if (layout == "spaced") s"prop spaced 100%_$seed" else s"prop_${layout}_$seed")
+      val partCols = if (layout == "hive") Seq("pi", "ps", "pd", "pt") else Nil
       val rows = spark.range(0, 60).select(col("id").as("k"), (col("id") * 10).as("v"),
         col("id").as("rid"), concat(lit("s"), col("id")).as("s"),
         (col("id") % 3).cast("int").as("pi"),
-        when(col("id") % 2 === 0, lit("1.50")).otherwise(lit("2.0")).as("ps"),
-        date_add(lit("2024-01-01").cast("date"), (col("id") % 2).cast("int")).as("pd"))
+        when(col("id") % 2 === 0, lit("1.50")).otherwise(lit("2.0 a:b")).as("ps"),
+        date_add(lit("2024-01-01").cast("date"), (col("id") % 2).cast("int")).as("pd"),
+        when(col("id") % 4 < 2, lit("2024-01-01 00:00:00")).otherwise(lit("2024-06-30 12:30:00"))
+          .cast("timestamp").as("pt"))
       if (layout == "hive") rows.repartition(2).write.partitionBy(partCols: _*).parquet(path)
-      else rows.drop("pi", "ps", "pd").repartition(3).write.parquet(path)
+      else rows.drop("pi", "ps", "pd", "pt").repartition(3).write.parquet(path)
       var nextRid = 1000L
       def batch(keys: Seq[Long], extra: Boolean): DataFrame = {
         val b = keys.map { k => nextRid += 1; (k, rnd.nextInt(1000).toLong, nextRid, s"u$nextRid") }
@@ -131,10 +137,14 @@ class MorCompactSpec extends SparkSpecBase {
             GraftMor.morUpsertEq(spark, path, batch(keys(4), layout == "evolved"), Seq("k"))
         }
       }
+      val what = s"$layout seed $seed"
       val served = GraftMor.morRead(spark, path)
       val cols = served.columns.toSeq
       val before = rowsOf(served, cols)
       val liveRids = served.select("rid").as[Long].collect().toSet
+      // the SQL serving path applies the same masks
+      assert(spark.read.format("graft").load(path).select("rid").as[Long].collect().sorted.toSeq ===
+        liveRids.toSeq.sorted, s"$what: the v2 scan and morRead disagree")
       val filesBefore = dataFiles(path)
       // a file is affected when some row it holds is no longer served
       val affected = filesBefore.keySet.filter { f =>
@@ -147,11 +157,11 @@ class MorCompactSpec extends SparkSpecBase {
           .collect { case n if n.startsWith("epoch=") => n.drop(6).toInt }.foldLeft(-1)(math.max)
       }
       val (dvMax, eqMax) = (maxEpoch(GraftMor.DvDir), maxEpoch(GraftMor.EqDir))
-      GraftMor.morCompact(spark, path, partCols)
+      if (seed == 3) GraftMor.compact(spark, path, partCols, maskCap = 0L)
+      else GraftMor.morCompact(spark, path, partCols)
       val ddl = GraftMor.sidecars(spark, path).schemaDdl
       val plain = ddl.fold(spark.read.parquet(path))(d =>
         spark.read.schema(StructType.fromDDL(d)).parquet(path))
-      val what = s"$layout seed $seed"
       assert(rowsOf(plain, cols) === before, what)
       val filesAfter = dataFiles(path)
       for ((f, digest) <- filesBefore) {
@@ -191,6 +201,37 @@ class MorCompactSpec extends SparkSpecBase {
     assert(rowsOf(spark.read.parquet(float), Seq("k", "f")) === expectF)
   }
 
+  test("tombstones of a dropped file fold away, and a key naming an unlisted live file refuses the fold") {
+    for (cap <- Seq(GraftMor.MaxBroadcastTombstones, 0L)) {
+      val path = fresh(s"dangling_$cap")
+      base(path, 2)
+      GraftMor.morDelete(spark, path, col("k") % 4 === 0)
+      // a retention sweep drops whole files and leaves their tombstones
+      val gone = dataFiles(path).keys.toSeq.sorted.head
+      val kept = spark.read.parquet(dataFiles(path).keys.toSeq.sorted.last)
+        .where(col("k") % 4 =!= 0).count()
+      hfs(path).delete(new Path(gone), false)
+      GraftMor.compact(spark, path, Nil, cap)
+      assert(spark.read.parquet(path).count() === kept, s"cap $cap")
+      assert(!GraftMor.sidecars(spark, path).any, s"cap $cap")
+    }
+    import spark.implicits._
+    val path = fresh("stray")
+    base(path, 2)
+    GraftMor.morDelete(spark, path, col("k") === 1L)
+    // a key in a path form that matches no listed file: the file exists
+    val live = dataFiles(path).keys.toSeq.sorted.head
+    val stray = live.replaceFirst("/t.parquet/", "/t.parquet//")
+    Seq((stray, 0L)).toDF("dv_file", "dv_pos").write.parquet(s"$path/${GraftMor.DvDir}/epoch=9")
+    val filesBefore = dataFiles(path)
+    for (cap <- Seq(GraftMor.MaxBroadcastTombstones, 0L)) {
+      val e = intercept[IllegalStateException](GraftMor.compact(spark, path, Nil, cap))
+      assert(e.getMessage.contains("no listed data file"), e.getMessage)
+      assert(dataFiles(path) === filesBefore)
+      assert(GraftMor.sidecars(spark, path).dv.nonEmpty)
+    }
+  }
+
   test("k affected single-row-group files compact into at most k files") {
     val path = fresh("filecount")
     base(path, 6)
@@ -219,6 +260,11 @@ class MorCompactSpec extends SparkSpecBase {
     val warm = GraftMorMask.sidecarOpens
     readAll()
     assert(GraftMorMask.sidecarOpens === warm, "a re-read opens no sidecar file")
+    // the merged mask of a multi-file pin is cached too: a rescan merges nothing
+    val conf = spark.sessionState.newHadoopConf()
+    val pin = GraftMor.sidecars(spark, served.head).dv.map(_._1)
+    assert(pin.size >= 2)
+    assert(GraftMorMask.load(pin, conf) eq GraftMorMask.load(pin, conf))
     GraftMor.morDelete(spark, served.head, col("k") === 58L)
     val epochDir = hfs(served.head).listStatus(new Path(s"${served.head}/${GraftMor.DvDir}"))
       .map(_.getPath).maxBy(_.getName.drop(6).toInt)
