@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
 import org.apache.spark.sql.types.{DataType, StructType}
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
@@ -53,6 +53,13 @@ import scala.util.control.NonFatal
   *     [[writeParquet]] ships Spark's parquet writer factory, the few
   *     keys that configure it and the session conf broadcast, and
   *     returns the files its tasks wrote, for the caller to move in.
+  *
+  * This object owns graft's staged table writes: GraftMor, SQL INSERT,
+  * the SQL delta DML writer (through [[ParquetTaskWriter.open]]), the
+  * ALTER rewrite and rebucket all write a stage with [[writeStage]]
+  * and land exactly the returned files with [[land]] / [[moveIn]]
+  * (or, for the COW swaps, a journal of them), so every table file
+  * comes from one writer with one file naming.
   */
 object GraftIO {
 
@@ -298,7 +305,9 @@ object GraftIO {
     * are not returned, so a caller that moves in exactly the returned
     * files never lands them; dropping `stage` discards them.
     * `partitionCols` lays the files out in hive `col=value` directories
-    * and leaves those columns out of the files, as `partitionBy` does.
+    * and leaves those columns out of the files, as `partitionBy` does;
+    * each task sorts its rows by them, stably, so an order `df` already
+    * carries (a declared layout's key sort) survives inside every file.
     * `keepEmpty` writes one row-less file when no task wrote any, for
     * a result that must stay readable with its schema.
     */
@@ -309,18 +318,79 @@ object GraftIO {
     val s = df.sparkSession
     val dataSchema = StructType(df.schema.filterNot(f => partitionCols.contains(f.name)))
     // partition values travel as their hive strings, grouped per task
-    // so each task holds one open file at a time (Spark's own rule)
+    // so each task holds one open file at a time (Spark's own rule).
+    // The row's position breaks ties, and being nondeterministic it
+    // also keeps the optimizer from dropping a sort below this one.
     val input =
       if (partitionCols.isEmpty) df
-      else df.select(dataSchema.fieldNames.map(col) ++
+      else df.withColumn(RowSeqCol, monotonically_increasing_id())
+        .sortWithinPartitions(partitionCols.map(col) :+ col(RowSeqCol): _*)
+        .select(dataSchema.fieldNames.map(col) ++
           partitionCols.map(c => col(c).cast("string").as(c)): _*)
-        .sortWithinPartitions(partitionCols.map(col): _*)
     val writer = taskWriter(s, dataSchema, stage, partitionCols)
     val written = org.apache.spark.sql.graft.Bridge.withExecution(input, s"graft $op") { rdd =>
       runWrite(s.sparkContext, rdd, writer)
     }
     if (written.nonEmpty || !keepEmpty) written
     else Seq(writeRows(s, dataSchema, Nil, stage).getName)
+  }
+
+  private val RowSeqCol = "__graft_row_seq"
+
+  /** A batch-private staging dir `<root>/_staging/<batch>_<uuid>`: the
+    * `_` prefix hides it from every read path and data-file listing.
+    */
+  def stageDir(root: String, batch: String): Path =
+    new Path(s"$root/_staging/${batch}_${java.util.UUID.randomUUID()}")
+
+  /** [[writeParquet]] into a fresh [[stageDir]] under `root`: returns
+    * the stage with the files written, relative to it. A write that
+    * throws drops its stage, so `root` is left as it was.
+    */
+  def writeStage(df: DataFrame, root: String, batch: String, op: String,
+      partitionCols: Seq[String] = Nil, keepEmpty: Boolean = false): (Path, Seq[String]) = {
+    val stage = stageDir(root, batch)
+    try (stage, writeParquet(df, stage, op, partitionCols, keepEmpty))
+    catch { case NonFatal(e) =>
+      dropStage(stage.getFileSystem(hadoopConf(df.sparkSession)), stage); throw e }
+  }
+
+  /** Delete `stage`, then its `_staging` shell when nothing else is in
+    * it. Best-effort: it runs once the batch has landed or failed, and
+    * must not fail that call; a stage left behind holds no landed file,
+    * and its `_` prefix hides it from every read.
+    */
+  def dropStage(f: FileSystem, stage: Path): Unit = {
+    try f.delete(stage, true)
+    catch { case NonFatal(e) =>
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(s"[GRAFT] left stage $stage behind", e)
+    }
+    dropIfEmpty(f, stage.getParent)
+  }
+
+  /** [[land]] the stage's files in `dest`, then drop the stage. */
+  def moveIn(f: FileSystem, dest: String, stage: Path, files: Seq[String],
+      op: String): Seq[String] =
+    try land(f, dest, stage, files, op) finally dropStage(f, stage)
+
+  /** Rename exactly `files` (relative to `stage`, as the writer
+    * returned them) into `dest`, keeping their path below the stage
+    * (hive partition dirs). The batch's file set is known exactly: a
+    * before/after listing diff could capture (and mis-sequence) a
+    * concurrent writer's appends, and a failed task attempt's files
+    * are discarded with the stage. `dest` is created even when `files`
+    * is empty. Returns the landed files' scheme-less paths.
+    */
+  def land(f: FileSystem, dest: String, stage: Path, files: Seq[String],
+      op: String): Seq[String] = {
+    val moves = files.map(rel => (new Path(stage, rel), new Path(dest, rel)))
+    (new Path(dest) +: moves.map(_._2.getParent)).distinct.foreach(f.mkdirs)
+    moves.map { case (src, dst) =>
+      if (!f.rename(src, dst))
+        throw new IllegalStateException(
+          s"[GRAFT] $op move-in failed: rename($src -> $dst) returned false")
+      graft.sources.v2.GraftMorMask.norm(dst.toUri.getPath)
+    }
   }
 
   /** Run `writer` over every partition of `rdd` and return the files
@@ -403,20 +473,32 @@ object GraftIO {
   }
 }
 
-/** The task half of [[GraftIO.writeParquet]]: everything a write task
-  * receives. It holds no Hadoop `Configuration`: each task copies the
-  * session conf from its broadcast and sets `keys` on the copy.
+/** The task half of [[GraftIO.writeParquet]] and of the SQL delta
+  * writer: everything a write task receives. It holds no Hadoop
+  * `Configuration`: each task copies the session conf from its
+  * broadcast and sets `keys` on the copy. Input rows carry the data
+  * columns, then the partition columns as their hive strings.
   */
 private[graft] final class ParquetTaskWriter(factory: OutputWriterFactory,
     keys: Map[String, String], sessionConf: graft.sources.v2.GraftV2.SessionConf,
     stage: String, dataSchema: StructType, partitionCols: Seq[String],
     writeId: String, maxRecordsPerFile: Long) extends Serializable {
 
-  /** Write one partition's rows (data columns, then the partition
-    * columns as strings, grouped by them) and return the files written,
-    * relative to the stage.
+  /** Write one partition's rows, grouped by their partition columns,
+    * and return the files written, relative to the stage.
     */
   def write(tc: TaskContext, rows: Iterator[InternalRow]): Seq[String] = {
+    val t = open(tc, grouped = true)
+    try { rows.foreach(t.write); t.commit() }
+    catch { case e: Throwable => t.abort(); throw e }
+  }
+
+  /** A push-style writer for one task attempt. With `grouped` rows
+    * arrive grouped by partition directory, so a new directory closes
+    * the open file; otherwise (delta inserts, in any order) each
+    * directory keeps one file open until [[ParquetTaskWriter.Task.commit]].
+    */
+  def open(tc: TaskContext, grouped: Boolean): ParquetTaskWriter.Task = {
     val conf = new Configuration(sessionConf.value)
     keys.foreach { case (k, v) => conf.set(k, v) }
     val ctx = ParquetTaskWriter.attemptContext(conf, tc.partitionId, tc.attemptNumber)
@@ -430,40 +512,78 @@ private[graft] final class ParquetTaskWriter(factory: OutputWriterFactory,
       val v = if (r.isNullAt(nData + i)) null else r.getUTF8String(nData + i).toString
       ExternalCatalogUtils.getPartitionPathString(partitionCols(i), v)
     }.mkString("/")
-    val files = Seq.newBuilder[String]
-    var out: OutputWriter = null
-    var dir: String = null
-    var inFile = 0L
-    var counter = 0
-    try {
-      rows.foreach { r =>
-        val d = if (project == null) "" else dirOf(r)
-        if (out == null || d != dir || (maxRecordsPerFile > 0 && inFile >= maxRecordsPerFile)) {
-          if (out != null) out.close()
-          out = null
-          counter = if (d == dir) counter + 1 else 0
-          val name = ParquetTaskWriter.fileName(tc.partitionId, writeId,
-            tc.taskAttemptId, counter, ext)
-          val rel = if (d.isEmpty) name else s"$d/$name"
-          files += rel
-          out = factory.newInstance(s"$stage/$rel", dataSchema, ctx)
-          dir = d
-          inFile = 0L
-        }
-        out.write(if (project == null) r else project(r))
-        inFile += 1
-      }
-      if (out != null) out.close()
-    } catch { case t: Throwable =>
-      // the attempt fails; its files stay unreturned in the stage
-      if (out != null) try out.close() catch { case NonFatal(e) => t.addSuppressed(e) }
-      throw t
+    var counter = -1
+    def newFile(dir: String): (String, OutputWriter) = {
+      counter += 1
+      val name = ParquetTaskWriter.fileName(tc.partitionId, writeId, tc.taskAttemptId,
+        counter, ext)
+      val rel = if (dir.isEmpty) name else s"$dir/$name"
+      (rel, factory.newInstance(s"$stage/$rel", dataSchema, ctx))
     }
-    files.result()
+    new ParquetTaskWriter.Task(r => if (project == null) "" else dirOf(r),
+      r => if (project == null) r else project(r), newFile, grouped, maxRecordsPerFile)
   }
 }
 
 private[graft] object ParquetTaskWriter {
+
+  /** One task attempt's open files, one per partition directory. The
+    * attempt's files are returned only by [[commit]]; an aborted
+    * attempt leaves its files unreturned in the stage.
+    */
+  final class Task private[ParquetTaskWriter] (dirOf: InternalRow => String,
+      dataOf: InternalRow => InternalRow, newFile: String => (String, OutputWriter),
+      grouped: Boolean, maxRecordsPerFile: Long) {
+    private final class Open(val out: OutputWriter) { var rows = 0L }
+    private val open = scala.collection.mutable.HashMap.empty[String, Open]
+    private val files = Seq.newBuilder[String]
+    private var lastDir: String = null
+    private var last: Open = null
+
+    def write(row: InternalRow): Unit = {
+      val d = dirOf(row)
+      if (last == null || d != lastDir) {
+        last = open.getOrElse(d, null)
+        lastDir = d
+      }
+      if (last == null || (maxRecordsPerFile > 0 && last.rows >= maxRecordsPerFile)) {
+        if (last != null) { open.remove(d); last.out.close() }
+        if (grouped) closeAll()
+        val (rel, out) = newFile(d)
+        files += rel
+        last = new Open(out)
+        open(d) = last
+      }
+      last.out.write(dataOf(row))
+      last.rows += 1
+    }
+
+    private def closeAll(): Unit = {
+      val xs = open.values.toList
+      open.clear()
+      xs.foreach(_.out.close())
+    }
+
+    /** Close every open file and return the files written, relative to
+      * the stage.
+      */
+    def commit(): Seq[String] = {
+      closeAll()
+      last = null
+      files.result()
+    }
+
+    /** Close every open file without returning any; close failures are
+      * dropped, as the attempt has already failed.
+      */
+    def abort(): Unit = {
+      val xs = open.values.toList
+      open.clear()
+      last = null
+      xs.foreach(o => try o.out.close() catch { case NonFatal(_) => })
+    }
+  }
+
   def fileName(partition: Int, writeId: String, attempt: Long, counter: Int,
       ext: String): String =
     f"part-$partition%05d-$writeId-$attempt-c$counter%03d$ext"

@@ -544,8 +544,8 @@ object GraftMor {
     */
   private def writeEpoch(s: SparkSession, tablePath: String,
       tombstones: DataFrame, op: String): Unit = {
-    val (stage, files) = writeStage(tombstones, tablePath, "dv", op)
-    moveIn(fs(s, tablePath), allocateDvEpochDir(s, tablePath), stage, files, op)
+    val (stage, files) = GraftIO.writeStage(tombstones, tablePath, "dv", op)
+    GraftIO.moveIn(fs(s, tablePath), allocateDvEpochDir(s, tablePath), stage, files, op)
   }
 
   /** Allocate (and name) the next position-tombstone epoch dir — the
@@ -597,9 +597,9 @@ object GraftMor {
   def morErase(s: SparkSession, tablePath: String,
       eraseKeys: DataFrame, keyCols: Seq[String]): Unit = GraftIO.withCallConf(s) {
     checkEqKeys(s, tablePath, sidecars(s, tablePath), keyCols, "morErase")
-    val (stage, files) = writeStage(eraseKeys.select(keyCols.map(col): _*).distinct()
+    val (stage, files) = GraftIO.writeStage(eraseKeys.select(keyCols.map(col): _*).distinct()
       .withColumn("seq", lit(EraseSeq)), tablePath, "eq", "morErase")
-    moveIn(fs(s, tablePath), s"${eqPath(tablePath)}/epoch=${allocateEpoch(s, tablePath, eqPath)}",
+    GraftIO.moveIn(fs(s, tablePath), s"${eqPath(tablePath)}/epoch=${allocateEpoch(s, tablePath, eqPath)}",
       stage, files, "morErase")
   }
 
@@ -633,22 +633,22 @@ object GraftMor {
     val epoch = allocateEpoch(s, tablePath, eqPath)
     val seq = epoch.toLong + 1L
     // the new versions and the tombstones both stage before anything
-    // lands (the A52 staging rule, see `moveIn`), and a widened schema
+    // lands (the A52 staging rule, see `GraftIO.moveIn`), and a widened schema
     // is recorded only then, so a failed write changes nothing. The
     // versions LAND AND SEQUENCE BEFORE the tombstone epoch, so a crash
     // mid-commit serves transient duplicates (old + new versions),
     // never a pure delete with the new versions stranded.
     val f = fs(s, tablePath)
-    val (rowStage, rowFiles) = writeStage(updates.select(targetCols.map(col): _*),
+    val (rowStage, rowFiles) = GraftIO.writeStage(updates.select(targetCols.map(col): _*),
       tablePath, "eqbatch", "morUpsertEq")
-    val (eqStage, eqFiles) = try writeStage(updates.select(keyCols.map(col): _*)
+    val (eqStage, eqFiles) = try GraftIO.writeStage(updates.select(keyCols.map(col): _*)
       .distinct().withColumn("seq", lit(seq)), tablePath, "eq", "morUpsertEq")
-    catch { case NonFatal(e) => dropStage(f, rowStage); throw e }
+    catch { case NonFatal(e) => GraftIO.dropStage(f, rowStage); throw e }
     try {
       widened.foreach(writeSchemaDdl(f, tablePath, _, overwrite = true))
-      appendSeqm(s, tablePath, land(f, tablePath, rowStage, rowFiles, "morUpsertEq"), seq)
-      land(f, s"${eqPath(tablePath)}/epoch=$epoch", eqStage, eqFiles, "morUpsertEq")
-    } finally { dropStage(f, rowStage); dropStage(f, eqStage) }
+      appendSeqm(s, tablePath, GraftIO.land(f, tablePath, rowStage, rowFiles, "morUpsertEq"), seq)
+      GraftIO.land(f, s"${eqPath(tablePath)}/epoch=$epoch", eqStage, eqFiles, "morUpsertEq")
+    } finally { GraftIO.dropStage(f, rowStage); GraftIO.dropStage(f, eqStage) }
   }
 
   /** A43: merge-on-read UPSERT — tombstone the matched keys' current
@@ -677,85 +677,20 @@ object GraftMor {
     // refused by name.
     val (targetCols, widened) = evolveForBatch(s, tablePath, sc, updates, "morUpsert")
     val f = fs(s, tablePath)
-    val (rowStage, rowFiles) = writeStage(updates.select(targetCols.map(col): _*),
+    val (rowStage, rowFiles) = GraftIO.writeStage(updates.select(targetCols.map(col): _*),
       tablePath, "upsert", "morUpsert")
-    val (dvStage, dvFiles) = try writeStage(currentMatches(s, tablePath, sc,
+    val (dvStage, dvFiles) = try GraftIO.writeStage(currentMatches(s, tablePath, sc,
         _.join(broadcast(keys), keyCols, "left_semi")), tablePath, "dv", "morUpsert")
-    catch { case NonFatal(e) => dropStage(f, rowStage); throw e }
+    catch { case NonFatal(e) => GraftIO.dropStage(f, rowStage); throw e }
     try {
       widened.foreach(writeSchemaDdl(f, tablePath, _, overwrite = true))
       // the batch's exact file set is known: with a live equality
       // sidecar it is sequenced above every existing finite tombstone
       // (erases still outrank it), or an older morUpsertEq of the same
       // key would mask the new version
-      sequenceAppendedFiles(s, tablePath, land(f, tablePath, rowStage, rowFiles, "morUpsert"))
-      land(f, allocateDvEpochDir(s, tablePath), dvStage, dvFiles, "morUpsert")
-    } finally { dropStage(f, rowStage); dropStage(f, dvStage) }
-  }
-
-  /** A batch-private staging dir `<root>/_staging/<batch>` — the `_`
-    * prefix hides it from every read path and data-file listing.
-    */
-  private def stageDir(root: String, batch: String) =
-    new org.apache.hadoop.fs.Path(
-      s"$root/_staging/${batch}_${java.util.UUID.randomUUID()}")
-
-  /** Write `df` through the graft task writer into a fresh stage under
-    * `root` (the A52 staging rule) and return the stage with the files
-    * written, relative to it. A write that throws drops its stage, so
-    * `root` is left as it was.
-    */
-  private def writeStage(df: DataFrame, root: String, batch: String, op: String,
-      partitionCols: Seq[String] = Nil,
-      keepEmpty: Boolean = false): (org.apache.hadoop.fs.Path, Seq[String]) = {
-    val stage = stageDir(root, batch)
-    try (stage, GraftIO.writeParquet(df, stage, op, partitionCols, keepEmpty))
-    catch { case NonFatal(e) => dropStage(fs(df.sparkSession, root), stage); throw e }
-  }
-
-  /** Delete `stage`, then its `_staging` shell when nothing else is in
-    * it. Best-effort: it runs once the batch has landed or failed, and
-    * must not fail that call — a stage left behind holds no landed
-    * file, and its `_` prefix hides it from every read.
-    */
-  private def dropStage(f: org.apache.hadoop.fs.FileSystem,
-      stage: org.apache.hadoop.fs.Path): Unit = {
-    try f.delete(stage, true)
-    catch { case NonFatal(e) =>
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(s"[GRAFT] left stage $stage behind", e)
-    }
-    GraftIO.dropIfEmpty(f, stage.getParent)
-  }
-
-  /** The A52 staging rule's move-in: [[land]] the stage's files in
-    * `dest`, then drop the stage. Returns the landed files' scheme-less
-    * paths.
-    */
-  private def moveIn(f: org.apache.hadoop.fs.FileSystem, dest: String,
-      stage: org.apache.hadoop.fs.Path, files: Seq[String], op: String): Seq[String] =
-    try land(f, dest, stage, files, op) finally dropStage(f, stage)
-
-  /** Rename exactly `files` (relative to `stage`, as the writer
-    * returned them) into `dest`, keeping their path below the stage
-    * (hive partition dirs). The batch's file set is known EXACTLY — a
-    * before/after listing diff could capture (and mis-sequence) a
-    * concurrent writer's simultaneous appends — and a failed task
-    * attempt's files are discarded with the stage. `dest` is created
-    * even when `files` is empty. Returns the landed files' scheme-less
-    * paths.
-    */
-  private def land(f: org.apache.hadoop.fs.FileSystem, dest: String,
-      stage: org.apache.hadoop.fs.Path, files: Seq[String], op: String): Seq[String] = {
-    val moves = files.map(rel =>
-      (new org.apache.hadoop.fs.Path(stage, rel), new org.apache.hadoop.fs.Path(dest, rel)))
-    (new org.apache.hadoop.fs.Path(dest) +: moves.map(_._2.getParent)).distinct
-      .foreach(f.mkdirs)
-    moves.map { case (src, dst) =>
-      if (!f.rename(src, dst))
-        throw new IllegalStateException(
-          s"[GRAFT] $op move-in failed: rename($src -> $dst) returned false")
-      graft.sources.v2.GraftMorMask.norm(dst.toUri.getPath)
-    }
+      sequenceAppendedFiles(s, tablePath, GraftIO.land(f, tablePath, rowStage, rowFiles, "morUpsert"))
+      GraftIO.land(f, allocateDvEpochDir(s, tablePath), dvStage, dvFiles, "morUpsert")
+    } finally { GraftIO.dropStage(f, rowStage); GraftIO.dropStage(f, dvStage) }
   }
 
   /** The merge-on-read SCAN: data files anti-joined against the
@@ -792,14 +727,19 @@ object GraftMor {
     if (dvOpt.nonEmpty) data = data
       .withColumn("dv_file", normPath(col("_metadata.file_path")))
       .withColumn("dv_pos", col("_metadata.row_index"))
-    if (seqOpt.nonEmpty) data = data
+    if (dvOpt.nonEmpty || seqOpt.nonEmpty) data = data
       .withColumn("__fn", decodedPath(col("_metadata.file_path")))
     val afterDv = dvOpt match {
       case None => data
       case Some(dv) =>
-        data.join(gate(dv, sc.dvBytes, maxBroadcastBytes),
-            Seq("dv_file", "dv_pos"), "left_anti")
+        // one anti-join per path form a key can carry: GraftMor's
+        // writers record the URL-encoded form, the SQL row-level
+        // writers the decoded one
+        val side = gate(dv, sc.dvBytes, maxBroadcastBytes)
+        val masked = data.join(side, Seq("dv_file", "dv_pos"), "left_anti")
+          .join(side.withColumnRenamed("dv_file", "__fn"), Seq("__fn", "dv_pos"), "left_anti")
           .drop("dv_file", "dv_pos")
+        if (seqOpt.nonEmpty) masked else masked.drop("__fn")
     }
     // A44/A45 equality masks apply AFTER (independently of) the
     // position vector: a key anti-join — same broadcast/shuffle gate,
@@ -935,7 +875,7 @@ object GraftMor {
     // nothing live is touched before the survivors are staged; a task
     // with no survivors writes no file
     val staged = Option.when(affected.nonEmpty)(
-      writeStage(survivors, tablePath, "compact", "morCompact", partitionCols))
+      GraftIO.writeStage(survivors, tablePath, "compact", "morCompact", partitionCols))
     affected.foreach { file =>
       if (!f.delete(new org.apache.hadoop.fs.Path(file), false))
         throw new IllegalStateException(
@@ -943,7 +883,7 @@ object GraftMor {
     }
     clearSidecars(f, tablePath, hasDv, hasEq, hasSeqm, nextDv, nextEq)
     graft.sources.v2.GraftMorMask.forget((sc.dv ++ sc.eq ++ sc.seqm).map(_._1))
-    staged.foreach { case (stage, files) => moveIn(f, tablePath, stage, files, "morCompact") }
+    staged.foreach { case (stage, files) => GraftIO.moveIn(f, tablePath, stage, files, "morCompact") }
   }
 
   /** [[morCompact]]'s plan over the serving masks: the affected files
@@ -1352,10 +1292,10 @@ object GraftMor {
     try {
       // a replayed publish replaces the crashed one's segment
       val segment = s"$feedRoot/segments/seq=$nextSeq"
-      val (stage, files) = writeStage(body, feedRoot, "segment", "publishMorFeed",
+      val (stage, files) = GraftIO.writeStage(body, feedRoot, "segment", "publishMorFeed",
         keepEmpty = true)
       f.delete(hp(segment), true)
-      moveIn(f, segment, stage, files, "publishMorFeed")
+      GraftIO.moveIn(f, segment, stage, files, "publishMorFeed")
     } finally dHeld.foreach(graft.GraftSession.releaseCheckpoint)
     // state advances AFTER the segment is durable
     f.delete(hp(stagePath), true)
@@ -1491,8 +1431,8 @@ object GraftMor {
   private def landMerged(merged: DataFrame, dir: String, op: String): Unit = {
     val f = fs(merged.sparkSession, dir)
     f.delete(new org.apache.hadoop.fs.Path(dir), true)
-    val (stage, files) = writeStage(merged, dir, "merged", op, keepEmpty = true)
-    moveIn(f, dir, stage, files, op)
+    val (stage, files) = GraftIO.writeStage(merged, dir, "merged", op, keepEmpty = true)
+    GraftIO.moveIn(f, dir, stage, files, op)
   }
 
   /** Pending tombstone rows across both sidecar flavors — the

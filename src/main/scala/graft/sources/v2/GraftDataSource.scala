@@ -1473,8 +1473,8 @@ object GraftV2 {
     * no footer opened).
     */
   /** The same data-file walk as [[dataFileSizes]], as paths RELATIVE
-    * to `dir` (sorted) — the one skip-rule implementation every staged
-    * swap (SQL insert, ALTER rewrite, rebucket) lists through.
+    * to `dir` (sorted): the table's current files a staged swap
+    * retires or an INSERT OVERWRITE replaces.
     */
   def dataFilesRelative(fs: org.apache.hadoop.fs.FileSystem,
       dir: Path): Seq[String] = {
@@ -1487,9 +1487,10 @@ object GraftV2 {
   }
 
   /** The staged-swap tail every COW rewrite shares: retire the current
-    * data files, move the staged ones in (checked renames, relative
-    * structure preserved), drop the staging dir and its `_staging`
-    * shell when empty. Callers order their METADATA writes around this
+    * data files, move exactly the `staged` files (relative to
+    * `stageDir`, as `GraftIO.writeStage` returned them) in (checked
+    * renames, relative structure preserved), drop the staging dir and
+    * its `_staging` shell when empty. Callers order their METADATA writes around this
     * (marker-first for ALTER, marker-unchanged for rebucket).
     *
     * Crash safety: the FULL swap intent (every retire + every move-in)
@@ -1501,8 +1502,7 @@ object GraftV2 {
     * swap instead of losing the rewrite under `_staging`.
     */
   def swapStagedFiles(fs: org.apache.hadoop.fs.FileSystem,
-      tableRoot: Path, stageDir: Path, op: String): Unit = {
-    val staged = dataFilesRelative(fs, stageDir)
+      tableRoot: Path, stageDir: Path, staged: Seq[String], op: String): Unit = {
     val old = dataFilesRelative(fs, tableRoot)
     val journal = new Path(stageDir, SwapJournal)
     val body = (old.map("retire\t" + _) ++ staged.map("movein\t" + _))

@@ -268,13 +268,9 @@ object GraftLayout {
     val reader = spark.read
     served.foreach(reader.schema)
     val df = reader.parquet(files: _*)
-    val stage = new org.apache.hadoop.fs.Path(
-      s"$tablePath/_staging/rebucket_${java.util.UUID.randomUUID()}")
-    shape(df, layout).write
-      .partitionBy(BucketDirCol)
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(stage.toString)
-    GraftV2.swapStagedFiles(fs, root, stage, "rebucket")
+    val (stage, staged) = graft.sources.GraftIO.writeStage(shape(df, layout), tablePath,
+      "rebucket", "rebucket", Seq(BucketDirCol))
+    GraftV2.swapStagedFiles(fs, root, stage, staged, "rebucket")
   }
 
   /** Shape one insert batch to the declared layout: range-partition +

@@ -1,7 +1,8 @@
 package graft.sources.v2
 
-import graft.sources.GraftCatalog
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import graft.sources.{GraftCatalog, GraftIO}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.write.{SupportsOverwrite, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.functions.{concat_ws, lit, when}
 import org.apache.spark.sql.sources.{Filter, InsertableRelation}
@@ -19,22 +20,24 @@ import scala.collection.concurrent.TrieMap
   * Spark resolves/casts the INSERT by position against the table
   * schema, hands this builder the query's DataFrame, and the insert:
   *
-  *   1. STAGES the batch into its own `_staging/batch_<n>/` dir —
-  *      hidden from every data listing, so the batch's file set is
-  *      known EXACTLY (no before/after listing diff: a concurrent
-  *      INSERT or eq-upsert append can never be captured into — and
-  *      wrongly quarantined/sequenced by — this batch);
+  *   1. STAGES the batch through `GraftIO.writeStage` (the graft task
+  *      writer, the one every table write shares) into its own
+  *      `_staging/batch_<uuid>/` dir — hidden from every data listing;
+  *      the batch's file set is EXACTLY the files the tasks returned
+  *      (no listing: a concurrent INSERT or eq-upsert append can never
+  *      be captured into — and wrongly quarantined/sequenced by — this
+  *      batch, and a failed task attempt's file never lands);
   *   2. AUDITS exactly the staged files against the table's
   *      registered [[GraftCatalog.AuditRule]]s; a DIRTY batch is
-  *      quarantine-DIVERTED — the whole staging dir is renamed (ONE
-  *      checked rename, hive partition structure preserved, so
-  *      identically-named part files in different partitions can
-  *      never collide) under `_quarantine/batch_<n>/` with a
-  *      `reasons` manifest, the INSERT fails BY NAME, and the served
-  *      table is byte-identical to before;
-  *   3. MOVES the clean batch's files into the table (checked
-  *      renames, relative paths preserved) and PUBLISHES through
-  *      `publishAudited` (the A38 staged-scope rule: an OLDER
+  *      quarantine-DIVERTED — its files land under
+  *      `_quarantine/batch_<uuid>/` (hive partition structure
+  *      preserved, so identically-named part files in different
+  *      partitions can never collide) with a `_reasons` manifest, the
+  *      INSERT fails BY NAME, and the served table is byte-identical
+  *      to before;
+  *   3. LANDS the clean batch's files in the table (`GraftIO.land`:
+  *      checked renames, relative paths preserved) and PUBLISHES
+  *      through `publishAudited` (the A38 staged-scope rule: an OLDER
   *      unpublished dirty batch still blocks — a violation can never
   *      ride in on a later clean batch's publish).
   *
@@ -89,137 +92,129 @@ object GraftSqlWrite {
       }
     }
 
-  /** Recursive data-file listing under `dir` (dotfile/_SUCCESS
-    * bookkeeping skipped) as paths relative to `dir` — the shared
-    * GraftV2 walk, so every staged swap applies one skip rule.
-    */
-  private def listRelative(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Seq[String] =
-    GraftV2.dataFilesRelative(fs, dir)
-
   private[v2] def insertAudited(data: DataFrame, tablePath: String,
-      partCols: Seq[String], overwrite: Boolean): Unit = {
-    val s = data.sparkSession
-    val tableRoot = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = tableRoot.getFileSystem(s.sessionState.newHadoopConf())
-    if (overwrite) {
-      require(partCols.nonEmpty,
-        s"[GRAFT] INSERT OVERWRITE on $tablePath refused: the table is " +
-          "unpartitioned, so overwrite means a full truncate-and-replace - " +
-          "use the COW/MOR mutation APIs for whole-table rewrites " +
-          "(dynamic-partition overwrite is the supported SQL form)")
-      // a partition replace destroys files: live MOR sidecars would be
-      // invalidated (tombstoned rows resurrected, coordinates dangled)
-      graft.sources.GraftMor.failIfMutationSidecars(s, tablePath,
-        "INSERT OVERWRITE")
+      partCols: Seq[String], overwrite: Boolean): Unit =
+    GraftIO.withCallConf(data.sparkSession) {
+      val s = data.sparkSession
+      val fs = new Path(tablePath).getFileSystem(GraftIO.hadoopConf(s))
+      if (overwrite) {
+        require(partCols.nonEmpty,
+          s"[GRAFT] INSERT OVERWRITE on $tablePath refused: the table is " +
+            "unpartitioned, so overwrite means a full truncate-and-replace - " +
+            "use the COW/MOR mutation APIs for whole-table rewrites " +
+            "(dynamic-partition overwrite is the supported SQL form)")
+        // a partition replace destroys files: live MOR sidecars would be
+        // invalidated (tombstoned rows resurrected, coordinates dangled)
+        graft.sources.GraftMor.failIfMutationSidecars(s, tablePath,
+          "INSERT OVERWRITE")
+      }
+      // declared CHAR/VARCHAR lengths enforce FIRST (error past n, CHAR
+      // right-pads) — before shaping/staging, so a violating batch fails
+      // with the table untouched, like every A38 refusal
+      val checked = GraftCharVarchar.enforce(data, fs, tablePath)
+      // A62/A65: a declared layout shapes the batch FIRST (range-
+      // partition + sort on the declared key / Morton interleave, or
+      // hash-bucket into `bucket=N/` dirs), so every staged file — and
+      // hence every table file, forever — carries the declared physical
+      // contract.
+      val layout = GraftLayout.readMarker(fs, tablePath)
+      val shaped = layout.map(GraftLayout.shape(checked, _)).getOrElse(checked)
+      val writeCols = partCols ++ layout.map(GraftLayout.writeDirCols)
+        .getOrElse(Seq.empty)
+      // 1. STAGE into this batch's own hidden dir: the file set is
+      // exactly what the tasks returned
+      val (stage, staged) = GraftIO.writeStage(shaped, tablePath, "batch", "INSERT",
+        writeCols)
+      val landed =
+        try {
+          // an empty OVERWRITE is not a no-op in standard Spark semantics
+          // (a static PARTITION spec means "truncate that partition"); the
+          // engine's dynamic form has no partition left to learn from the
+          // batch, so a silent return would drop the user's intent on the
+          // floor — refuse BY NAME with the remedy
+          if (staged.isEmpty && overwrite) throw new IllegalStateException(
+            s"[GRAFT] INSERT OVERWRITE on $tablePath refused: the source query " +
+              "produced no rows, so the dynamic-partition form cannot tell " +
+              "which partition(s) to replace - to empty a partition, insert " +
+              "a sentinel-free batch for it or use the COW mutation APIs")
+          if (staged.isEmpty) None // empty plain INSERT: a true no-op
+          else {
+            audit(s, fs, tablePath, stage, staged)
+            if (overwrite) replacePartitions(s, fs, tablePath, staged)
+            // 3a. MOVE the clean batch in (checked renames, relative
+            // paths preserved — a partitioned batch's files land in
+            // their dirs)
+            Some(GraftIO.land(fs, tablePath, stage, staged, "INSERT"))
+          }
+        } finally GraftIO.dropStage(fs, stage)
+      landed.foreach(publish(s, tablePath, _, overwrite))
     }
-    // 1. STAGE into this batch's own hidden dir: the file set is known
-    // exactly, concurrent writers never intermix with this batch.
-    // A62/A65: a declared layout shapes the batch FIRST (range-
-    // partition + sort on the declared key / Morton interleave, or
-    // hash-bucket into `bucket=N/` dirs), so every staged file — and
-    // hence every table file, forever — carries the declared physical
-    // contract.
-    // declared CHAR/VARCHAR lengths enforce FIRST (error past n, CHAR
-    // right-pads) — before shaping/staging, so a violating batch fails
-    // with the table untouched, like every A38 refusal
-    val checked = GraftCharVarchar.enforce(data, fs, tablePath)
-    val layout = GraftLayout.readMarker(fs, tablePath)
-    val shaped = layout.map(GraftLayout.shape(checked, _)).getOrElse(checked)
-    val writeCols = partCols ++ layout.map(GraftLayout.writeDirCols)
-      .getOrElse(Seq.empty)
-    val batchId = s"batch_${System.nanoTime()}"
-    val stageDir = new org.apache.hadoop.fs.Path(s"$tablePath/_staging/$batchId")
-    val w = shaped.write.mode(SaveMode.Overwrite)
-    (if (writeCols.nonEmpty) w.partitionBy(writeCols: _*) else w)
-      .parquet(stageDir.toString)
-    val staged = listRelative(fs, stageDir)
-    if (staged.isEmpty) {
-      fs.delete(stageDir, true)
-      // an empty OVERWRITE is not a no-op in standard Spark semantics
-      // (a static PARTITION spec means "truncate that partition"); the
-      // engine's dynamic form has no partition left to learn from the
-      // batch, so a silent return would drop the user's intent on the
-      // floor — refuse BY NAME with the remedy
-      if (overwrite) throw new IllegalStateException(
-        s"[GRAFT] INSERT OVERWRITE on $tablePath refused: the source query " +
-          "produced no rows, so the dynamic-partition form cannot tell " +
-          "which partition(s) to replace - to empty a partition, insert " +
-          "a sentinel-free batch for it or use the COW mutation APIs")
-      return // empty plain INSERT: a true no-op
-    }
-    // 2. AUDIT exactly this batch's rows (partition columns re-attach
-    // via basePath against the staging dir's hive layout)
+
+  /** 2. AUDIT exactly this batch's rows (partition columns re-attach
+    * via basePath against the stage's hive layout). A DIRTY batch is
+    * diverted: its files land under `_quarantine/<stage>` with a
+    * `_reasons` manifest, and the INSERT fails by name.
+    */
+  private def audit(s: SparkSession, fs: FileSystem, tablePath: String,
+      stage: Path, staged: Seq[String]): Unit = {
     val tableRules = rules.getOrElse(norm(tablePath), Seq.empty)
-    if (tableRules.nonEmpty) {
-      val batch = graft.sources.GraftMor.readFilesWithBase(
-        s, stageDir.toString, staged.map(r => s"$stageDir/$r"))
-      val fired = tableRules.map(r => when(r.violation, lit(r.name)))
-      val quarantine = batch
-        .withColumn("reasons", concat_ws(",", fired: _*))
-        .where(fired.map(f => when(f.isNotNull, 1L).otherwise(0L))
-          .reduce(_ + _) > 0L)
-        .localCheckpoint(true) // the divert below unlinks what this reads
-      try {
-        val nBad = quarantine.count()
-        if (nBad > 0L) {
-          // DIVERT: one rename moves the whole staging dir (relative
-          // structure intact — partitioned batches cannot collide),
-          // so the served table is byte-identical to before
-          val qDir = new org.apache.hadoop.fs.Path(
-            s"$tablePath/_quarantine/$batchId")
-          fs.mkdirs(qDir.getParent)
-          if (!fs.rename(stageDir, qDir))
-            throw new IllegalStateException(
-              s"[GRAFT] INSERT quarantine divert failed: " +
-                s"rename($stageDir -> $qDir) returned false")
-          quarantine.write.mode(SaveMode.Overwrite)
-            .parquet(s"$qDir/_reasons")
+    if (tableRules.isEmpty) return
+    val batch = graft.sources.GraftMor.readFilesWithBase(
+      s, stage.toString, staged.map(r => s"$stage/$r"))
+    val fired = tableRules.map(r => when(r.violation, lit(r.name)))
+    val quarantine = batch
+      .withColumn("reasons", concat_ws(",", fired: _*))
+      .where(fired.map(f => when(f.isNotNull, 1L).otherwise(0L))
+        .reduce(_ + _) > 0L)
+      .localCheckpoint(true) // the divert below unlinks what this reads
+    try {
+      val nBad = quarantine.count()
+      if (nBad > 0L) {
+        // DIVERT the batch's files (relative structure intact —
+        // partitioned batches cannot collide), so the served table is
+        // byte-identical to before
+        val qDir = s"$tablePath/_quarantine/${stage.getName}"
+        GraftIO.land(fs, qDir, stage, staged, "INSERT quarantine divert")
+        val (rStage, rFiles) = GraftIO.writeStage(quarantine, tablePath, "reasons",
+          "INSERT quarantine")
+        GraftIO.moveIn(fs, s"$qDir/_reasons", rStage, rFiles, "INSERT quarantine")
+        throw new IllegalStateException(
+          s"[GRAFT] INSERT INTO $tablePath refused: $nBad row(s) violate " +
+            s"audit rule(s) [${tableRules.map(_.name).mkString(",")}] - " +
+            s"batch diverted to $qDir (reasons manifest inside); the " +
+            "served table is unchanged")
+      }
+    } finally graft.GraftSession.releaseCheckpoint(quarantine)
+  }
+
+  /** 2b. OVERWRITE: remove the current files of exactly the partitions
+    * this batch carries — the audit already passed. Takes the lease gate
+    * (pinned readers of the replaced partitions fail fast at acquire,
+    * not silently mid-read), like every COW path.
+    */
+  private def replacePartitions(s: SparkSession, fs: FileSystem, tablePath: String,
+      staged: Seq[String]): Unit = {
+    graft.sources.GraftLease.failIfLeased(s, tablePath, "INSERT OVERWRITE")
+    val replacedDirs = staged.map { rel =>
+      val i = rel.lastIndexOf('/')
+      require(i > 0, s"[GRAFT] INSERT OVERWRITE staged a file outside " +
+        s"a partition dir: $rel")
+      rel.substring(0, i)
+    }.distinct
+    replacedDirs.foreach { rel =>
+      val pdir = new Path(s"$tablePath/$rel")
+      GraftV2.dataFilesRelative(fs, pdir).foreach { f =>
+        if (!fs.delete(new Path(pdir, f), false))
           throw new IllegalStateException(
-            s"[GRAFT] INSERT INTO $tablePath refused: $nBad row(s) violate " +
-              s"audit rule(s) [${tableRules.map(_.name).mkString(",")}] - " +
-              s"batch diverted to $qDir (reasons manifest inside); the " +
-              "served table is unchanged")
-        }
-      } finally graft.GraftSession.releaseCheckpoint(quarantine)
-    }
-    // 2b. OVERWRITE: replace exactly the partitions this batch carries
-    // — audit already passed, so existing files may now be destroyed.
-    // Takes the lease gate (pinned readers of the replaced partitions
-    // fail fast at acquire, not silently mid-read), like every COW path.
-    if (overwrite) {
-      graft.sources.GraftLease.failIfLeased(s, tablePath, "INSERT OVERWRITE")
-      val replacedDirs = staged.map { rel =>
-        val i = rel.lastIndexOf('/')
-        require(i > 0, s"[GRAFT] INSERT OVERWRITE staged a file outside " +
-          s"a partition dir: $rel")
-        rel.substring(0, i)
-      }.distinct
-      replacedDirs.foreach { rel =>
-        val pdir = new org.apache.hadoop.fs.Path(s"$tablePath/$rel")
-        listRelative(fs, pdir).foreach { f =>
-          if (!fs.delete(new org.apache.hadoop.fs.Path(pdir, f), false))
-            throw new IllegalStateException(
-              s"[GRAFT] INSERT OVERWRITE failed to remove $pdir/$f")
-        }
+            s"[GRAFT] INSERT OVERWRITE failed to remove $pdir/$f")
       }
     }
-    // 3a. MOVE the clean batch in (checked renames, relative paths
-    // preserved — a partitioned batch's files land in their dirs)
-    val landed = staged.map { rel =>
-      val src = new org.apache.hadoop.fs.Path(stageDir, rel)
-      val dst = new org.apache.hadoop.fs.Path(tableRoot, rel)
-      fs.mkdirs(dst.getParent)
-      if (!fs.rename(src, dst))
-        throw new IllegalStateException(
-          s"[GRAFT] INSERT move-in failed: rename($src -> $dst) returned " +
-            "false (a colliding file already exists?)")
-      dst.toString
-    }
-    fs.delete(stageDir, true) // empty shell (+ _SUCCESS bookkeeping)
-    // drop the _staging parent when this was its last batch
-    graft.sources.GraftIO.dropIfEmpty(fs, stageDir.getParent)
-    // 3b. SEQUENCE the batch (only when the table carries an equality
+  }
+
+  /** 3b-c. SEQUENCE and PUBLISH the landed batch. */
+  private def publish(s: SparkSession, tablePath: String, landed: Seq[String],
+      overwrite: Boolean): Unit = {
+    // SEQUENCE the batch (only when the table carries an equality
     // sidecar): the inserted files record at the CURRENT epoch
     // sequence, so they outrank every existing finite eq tombstone —
     // a fresh insert serves even for a previously upserted key —
@@ -227,12 +222,14 @@ object GraftSqlWrite {
     // resurrect a GDPR-erased key.
     if (!overwrite)
       graft.sources.GraftMor.sequenceAppendedFiles(s, tablePath, landed)
-    // 3c. PUBLISH through the A38 gate (staged scope: everything
+    // PUBLISH through the A38 gate (staged scope: everything
     // unpublished — an older dirty batch still blocks, by design).
     // For an overwrite the tip manifest now names destroyed files
     // (exactly the COW stale-epoch contract), so the gate's
     // tip-schema read is skipped — Spark already resolved the batch
     // against the live table schema upstream.
+    val tableRoot = new Path(tablePath)
+    val tableRules = rules.getOrElse(norm(tablePath), Seq.empty)
     val nsDir = tableRoot.getParent.toString
     val name = tableRoot.getName.stripSuffix(".parquet")
     val gateRules =

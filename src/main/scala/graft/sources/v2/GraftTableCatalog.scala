@@ -603,8 +603,6 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
           .map(n => org.apache.spark.sql.functions.col(f.name).as(n))
           .getOrElse(org.apache.spark.sql.functions.col(f.name))
       }: _*)
-    val stageDir = new org.apache.hadoop.fs.Path(
-      s"$tablePath/_staging/alter_${java.util.UUID.randomUUID()}")
     // A62/A65: the rewrite RE-SHAPES to the declared layout (under the
     // post-rename column names) — an ALTER of a non-layout column must
     // not silently flatten bucket co-location or sort/zorder
@@ -615,9 +613,10 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
       .getOrElse(projected)
     val writeCols = partCols ++
       effLayout.map(GraftLayout.writeDirCols).getOrElse(Seq.empty)
-    val w = shapedProj.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-    (if (writeCols.nonEmpty) w.partitionBy(writeCols: _*) else w)
-      .parquet(stageDir.toString)
+    // an empty unpartitioned table keeps one row-less file, as
+    // `DataFrameWriter` left it
+    val (stage, staged) = graft.sources.GraftIO.writeStage(shapedProj, tablePath,
+      "alter", "ALTER rewrite", writeCols, keepEmpty = writeCols.isEmpty)
     // marker first (see scaladoc), then the shared retire + move-in
     graft.sources.GraftMor.writeSchemaDdl(hadoopFs, tablePath,
       org.apache.spark.sql.types.StructType(
@@ -625,7 +624,7 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
           newFields.filter(f => partNames(f.name))).toDDL,
       overwrite = true)
     GraftV2.swapStagedFiles(hadoopFs,
-      new org.apache.hadoop.fs.Path(tablePath), stageDir, "ALTER rewrite")
+      new org.apache.hadoop.fs.Path(tablePath), stage, staged, "ALTER rewrite")
     // a renamed layout column keeps its clustering contract under the
     // new name (drops were refused above)
     layout.filter(_.cols.exists(renamed.contains)).foreach { l =>

@@ -229,6 +229,77 @@ class MorWritePathSpec extends SparkSpecBase {
         Seq(2L, 20L), name)
     }
   }
+
+  test("an INSERT or a row-level DML that throws leaves the table, its sidecars and _staging as they were") {
+    val wh = fresh("sqlthrows")
+    val path = s"$wh/db/t.parquet"
+    spark.range(20).select(col("id").as("k"), lit(1L).as("v")).repartition(2).write.parquet(path)
+    graft.sources.v2.GraftTableCatalog.register(spark, wh, "graftsqlthrows")
+    val t = "graftsqlthrows.db.t"
+    spark.sql(s"DELETE FROM $t WHERE k % 10 = 3")
+    spark.udf.register("graft_boom", (x: Long) =>
+      if (x == 7L) throw new IllegalStateException("boom") else x)
+    val files = parquetFiles(path)
+    val side = GraftMor.sidecars(spark, path)
+    val served = rowsOf(GraftMor.morRead(spark, path))
+    for ((op, stmt) <- Seq(
+        "INSERT" -> s"INSERT INTO $t SELECT graft_boom(id), 9L FROM range(5, 10)",
+        "UPDATE" -> s"UPDATE $t SET v = graft_boom(k) WHERE k % 2 = 1",
+        "MERGE" -> (s"MERGE INTO $t d USING (SELECT graft_boom(id) AS k FROM range(5, 10)) s " +
+          "ON d.k = s.k WHEN MATCHED THEN UPDATE SET v = 9L " +
+          "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, 9L)"))) {
+      val e = intercept[Exception](spark.sql(stmt))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(x => String.valueOf(x.getMessage).contains("boom")), s"$op: $e")
+      assert(parquetFiles(path) === files, op)
+      assert(GraftMor.sidecars(spark, path) === side, op)
+      assert(!hfs(path).exists(new Path(s"$path/_staging")), op)
+      assert(rowsOf(GraftMor.morRead(spark, path)) === served, op)
+    }
+  }
+
+  test("an INSERT or UPDATE task attempt that fails after writing leaves its files out") {
+    val wh = fresh("sqlattempts")
+    val jvm = s"${sys.props("java.home")}/bin/java"
+    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filter(_.startsWith("--add-opens"))
+    val cmd = Seq(jvm, "-Xmx1g", "-Dspark.ui.enabled=false", "-cp", sys.props("java.class.path")) ++
+      opens ++ Seq("graft.SqlTaskAttemptProbe", wh)
+    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(p.getInputStream).getLines().toList
+    assert(p.waitFor() === 0, out.takeRight(30).mkString("\n"))
+    assert(out.contains("probe: a task retried"), out.takeRight(30).mkString("\n"))
+    assert(out.contains("probe: INSERT serves 100 distinct keys in 100 rows"),
+      out.takeRight(30).mkString("\n"))
+    assert(out.contains("probe: UPDATE serves 100 distinct keys in 100 rows, 70 updated"),
+      out.takeRight(30).mkString("\n"))
+  }
+
+  test("another writer's stage appearing in _staging while an INSERT or a row-level DML drops its own does not fail the commit") {
+    import spark.implicits._
+    val wh = fresh("sqlforeign")
+    val path = s"$wh/db/t.parquet"
+    spark.range(10).select(col("id").as("k"), lit(1L).as("v")).coalesce(1).write.parquet(path)
+    graft.sources.v2.GraftTableCatalog.register(spark, wh, "graftsqlforeign")
+    val t = "graftsqlforeign.db.t"
+    val foreign = new Path(s"$path/_staging/${ForeignStageFs.Name}")
+    for ((op, stmt) <- Seq(
+        "INSERT" -> s"INSERT INTO $t VALUES (20L, 5L)",
+        "UPDATE" -> s"UPDATE $t SET v = 5L WHERE k % 5 = 2",
+        "MERGE" -> (s"MERGE INTO $t d USING (SELECT 30L AS k) s ON d.k = s.k " +
+          "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, 5L)"))) {
+      hfs(path).delete(foreign.getParent, true)
+      ForeignStageFs.armed.set(true)
+      CountingLocalFs.serving(spark, classOf[ForeignStageFs])(spark.sql(stmt))
+      assert(!ForeignStageFs.armed.get, s"$op: the foreign stage appeared")
+      assert(hfs(path).exists(foreign), s"$op: another writer's stage is left alone")
+    }
+    spark.sql(s"REFRESH TABLE $t")
+    val served = spark.table(t)
+    assert(served.count() === 12L)
+    assert(served.where(col("v") === 5L).select("k").as[Long].collect().sorted.toSeq ===
+      Seq(2L, 7L, 20L, 30L))
+  }
 }
 
 /** A test-scope local FileSystem that counts opens. */
@@ -312,6 +383,45 @@ object TaskAttemptProbe {
     GraftMor.morUpsert(s, path, s.range(30, 60, 1, 2).select(flaky(col("id")).as("k")), Seq("k"))
     val served = GraftMor.morRead(s, path)
     println(s"probe: table serves ${served.distinct().count()} distinct rows of ${served.count()}")
+    s.stop()
+  }
+}
+
+/** Child-JVM half of MorWritePathSpec's SQL attempt check: a session
+  * whose tasks may retry once (`local[2,2]`), where the first attempt
+  * of the task holding key 57 fails after writing rows, once in an
+  * INSERT and once in an UPDATE.
+  */
+object SqlTaskAttemptProbe {
+  def main(args: Array[String]): Unit = {
+    val wh = args(0)
+    val s = GraftSession.tune(SparkSession.builder().master("local[2,2]")).getOrCreate()
+    s.sparkContext.setLogLevel("ERROR")
+    val retried = s.sparkContext.longAccumulator("retried")
+    s.udf.register("flaky", (x: Long) => {
+      val tc = org.apache.spark.TaskContext.get()
+      if (x == 57L && tc != null && tc.stageAttemptNumber == 0) {
+        if (tc.attemptNumber == 0) throw new IllegalStateException("flaky first attempt")
+        retried.add(1L)
+      }
+      x
+    })
+    s.range(0, 40, 1, 1).select(col("id").as("k"), col("id").as("v"))
+      .write.parquet(s"$wh/db/t.parquet")
+    graft.sources.v2.GraftTableCatalog.register(s, wh, "graftattempt")
+    val t = "graftattempt.db.t"
+    def report(op: String, extra: String): Unit = {
+      s.sql(s"REFRESH TABLE $t")
+      val keys = s.sql(s"SELECT count(DISTINCT k), count(*) FROM $t").head()
+      println(s"probe: $op serves ${keys.getLong(0)} distinct keys in ${keys.getLong(1)} rows$extra")
+    }
+    s.sql(s"INSERT INTO $t SELECT flaky(id), id FROM range(40, 100, 1, 2)")
+    report("INSERT", "")
+    s.sql(s"UPDATE $t SET v = flaky(v) + 1000 WHERE k >= 30")
+    s.sql(s"REFRESH TABLE $t")
+    val updated = s.sql(s"SELECT count(*) FROM $t WHERE v >= 1000").head().getLong(0)
+    report("UPDATE", s", $updated updated")
+    if (retried.value >= 2L) println("probe: a task retried")
     s.stop()
   }
 }
